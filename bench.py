@@ -10,17 +10,6 @@ $SPARK_GRAFT_BENCH_REPS runs (default 3): the host VM's cores are bursty
 recovers the plan's actual cost from the noise floor; rep 1 additionally
 pays one-time plan compilation. "value" is the sum of the per-query
 bests.
-
-Outlier re-measure (round 10, additions-only): the host's throttle
-bursts last long enough to poison ALL reps of one query (measured 4-5×
-on untouched plans round-over-round), so a row whose best-of-N exceeds
-its previous-round reference by >2× gets $SPARK_GRAFT_BENCH_EXTRA_REPS
-(default 2) extra reps after the main sweep, keeping the overall best.
-The reference is read from $SPARK_GRAFT_BENCH_REF or, by default, the
-highest-round BENCH_r*.json next to this script; no reference, no extra
-reps. Methodology is otherwise unchanged: same queries, same action,
-same best-of semantics — the extra reps can only remove noise, never
-manufacture a speedup a single clean rep wouldn't show.
 """
 
 from __future__ import annotations
@@ -187,45 +176,6 @@ HEADLINE = [
 ]
 
 
-def _reference_timings() -> dict[str, float]:
-    """Previous-round per-query times for outlier detection.
-
-    $SPARK_GRAFT_BENCH_REF names an explicit file; otherwise the
-    highest-round BENCH_r*.json sitting next to this script is used.
-    Accepts either this script's own one-line output format or the
-    driver's capture wrapper ({"parsed": {"queries": ...}})."""
-    import glob
-    import re
-
-    path = os.environ.get("SPARK_GRAFT_BENCH_REF")
-    if not path:
-        here = os.path.dirname(os.path.abspath(__file__))
-        cands = glob.glob(os.path.join(here, "BENCH_r*.json"))
-        if not cands:
-            return {}
-        def rnd(p: str) -> int:
-            m = re.search(r"BENCH_r(\d+)", os.path.basename(p))
-            return int(m.group(1)) if m else -1
-        path = max(cands, key=rnd)
-    try:
-        with open(path) as f:
-            doc = json.load(f)
-    except Exception:
-        return {}
-    body = doc.get("parsed") if "parsed" in doc else doc
-    q = (body or {}).get("queries")
-    if not isinstance(q, dict):
-        return {}
-    # a reference taken at a different scale factor carries no signal
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        if float((body or {}).get("sf")) != float(sf):
-            return {}
-    except (TypeError, ValueError):
-        return {}
-    return {k: float(v) for k, v in q.items() if isinstance(v, (int, float))}
-
-
 def main() -> None:
     from data_integration_project_spark import plans
     from data_integration_project_spark.session import get_spark
@@ -239,35 +189,17 @@ def main() -> None:
     names = [n for n in HEADLINE if n in plans.REGISTRY]
     timings: dict[str, float] = {}
 
-    def run_reps(name: str, n_reps: int) -> float:
+    for name in names:
         best = None
-        for _ in range(n_reps):
+        for _ in range(reps):
             t0 = time.perf_counter()
             df = plans.REGISTRY[name].fn(spark, SF_DIR)
             n = df.count()
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
             spark.catalog.clearCache()  # operator-internal persists must not leak
-        print(f"# {name}: {n} rows, best of {n_reps}: {round(best, 4)}s", file=sys.stderr)
-        return best
-
-    for name in names:
-        timings[name] = round(run_reps(name, reps), 4)
-
-    # Outlier re-measure: a throttle burst poisons all adjacent reps of
-    # one query; rows >2x their previous-round reference get extra reps
-    # AFTER the sweep (a different time window), keeping the best.
-    ref = _reference_timings()
-    extra = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_EXTRA_REPS", "2")))
-    if ref and extra:
-        for name in names:
-            prev = ref.get(name)
-            if prev and prev > 0 and timings[name] > 2.0 * prev:
-                print(
-                    f"# {name}: {timings[name]}s vs prev {prev}s (>2x) — re-measuring",
-                    file=sys.stderr,
-                )
-                timings[name] = round(min(timings[name], run_reps(name, extra)), 4)
+        print(f"# {name}: {n} rows, best of {reps}: {round(best, 4)}s", file=sys.stderr)
+        timings[name] = round(best, 4)
     total = round(sum(timings.values()), 4)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
@@ -280,9 +212,13 @@ def main() -> None:
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "", 1).isdigit() else sf,
             }
-        )
+        ),
+        flush=True,
     )
-    spark.stop()
+    try:
+        spark.stop()
+    except Exception as exc:  # noqa: BLE001 — the JSON line is already out
+        print(f"# spark.stop() failed: {type(exc).__name__}: {exc}", file=sys.stderr)
 
 
 if __name__ == "__main__":

@@ -85,12 +85,6 @@ def nullify_blank(col: Column) -> Column:
     return F.when(trimmed == "", F.lit(None)).otherwise(trimmed)
 
 
-def parse_iso_timestamp(col: Column) -> Column:
-    """ISO-8601 parse tolerating a trailing ``Z``, NULL on failure
-    (ref data_transformer.py:74-81 ``fromisoformat(s.replace('Z',...))``)."""
-    return F.try_to_timestamp(F.regexp_replace(col, "Z$", "+00:00"))
-
-
 # ---------------------------------------------------------------------------
 # Entity transform pipelines (P1-P5): DataFrame -> DataFrame in the
 # canonical entity layout of schemas.ENTITIES. Each expects raw columns

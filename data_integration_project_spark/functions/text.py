@@ -49,28 +49,6 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.size(bpe_ish_tokens(col))
 
 
-def word_shingles(col: Column, k: int) -> Column:
-    """k-word shingles (the MinHash unit): sliding windows over the
-    token array, joined with single spaces. Pure array ops —
-    ``transform`` over an index ``sequence``; docs shorter than k words
-    yield an empty array (guarded: Spark's ``sequence(1, 0)`` would
-    DESCEND, not return empty).
-
-    DuckDB twin (same left-to-right construction)::
-
-        [array_to_string(toks[i:i+K-1], ' ')
-         for i in generate_series(1, greatest(len(toks) - K + 1, 0))]
-    """
-    toks = tokens(col)
-    n_windows = F.size(toks) - F.lit(k - 1)
-    return F.when(n_windows < 1, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n_windows, F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Portable hashing (bit-equal in Spark and the DuckDB oracle)
 # ---------------------------------------------------------------------------
@@ -169,14 +147,6 @@ def punct_ratio(col: Column) -> Column:
     return F.length(stripped) / F.nullif(F.length(lowered), F.lit(0))
 
 
-def mean_token_length(col: Column) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(
-        toks, F.lit(0), lambda acc, x: acc + F.length(x)
-    )
-    return total / F.nullif(F.size(toks), F.lit(0))
-
-
 # ---------------------------------------------------------------------------
 # Fingerprinting
 # ---------------------------------------------------------------------------
@@ -190,9 +160,3 @@ def normalized_text(col: Column) -> Column:
 def fingerprint_md5(col: Column) -> Column:
     """Portable content fingerprint (DuckDB: ``md5(...)``)."""
     return F.md5(normalized_text(col))
-
-
-def fingerprint_xx64(col: Column) -> Column:
-    """Fast Spark-side fingerprint for internal shuffles (NOT portable
-    to the oracle — use only where the hash never leaves the engine)."""
-    return F.xxhash64(normalized_text(col))

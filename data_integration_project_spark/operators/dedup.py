@@ -37,7 +37,7 @@ from pyspark.sql import Window
 
 from ..functions.text import HASH_P as P
 from ..functions.text import char_fold_hash, fingerprint_md5, tokens
-from ..session import iterative_loop, spread_width
+from ..session import iterative_loop, python_stage
 
 #: Multiplier folding token hashes into a window (shingle) hash.
 #: acc < P ≈ 2^31 and M ≈ 2^20, so acc·M + h < 2^52 — safe in int64.
@@ -197,15 +197,6 @@ def shingle_sets_with_signatures(
         .groupBy(id_col)
         .agg(F.collect_set("_shash").alias("_shs"), *_min_hash_aggs(n_hashes))
     )
-
-
-def minhash_signatures(sets: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
-    """Wide signatures (id, _mh0.._mhN) from per-doc shingle sets.
-    Standalone variant for callers that already hold set arrays; the
-    fused ``shingle_sets_with_signatures`` is the hot path (codegen
-    ``min`` aggregates instead of interpreted array folds)."""
-    exploded = sets.select(F.col(id_col), F.explode("_shs").alias("_shash"))
-    return exploded.groupBy(id_col).agg(*_min_hash_aggs(n_hashes))
 
 
 def lsh_bucket_rows(
@@ -437,8 +428,6 @@ def simhash_signature(
     Scale shape: linear scan, no shuffle of token rows at all; per-task
     memory is one token-hash dict (vocabulary-of-partition) plus one
     (tokens × 31) bit matrix per document."""
-    from ..session import default_parallelism
-
     id_type = df.schema[id_col].dataType.simpleString()
     n1 = min(bits, 31)
     n2 = bits - n1
@@ -486,9 +475,13 @@ def simhash_signature(
                 names=[id_col, "simhash"],
             )
 
-    narrow = df.select(id_col, text_col)
-    narrow = narrow.repartition(spread_width(narrow), id_col)
-    return narrow.mapInArrow(fold, f"{id_col} {id_type}, simhash long")
+    return python_stage(
+        df.select(id_col, text_col),
+        fold,
+        f"{id_col} {id_type}, simhash long",
+        key=id_col,
+        arrow=True,
+    )
 
 
 def simhash_pairs(

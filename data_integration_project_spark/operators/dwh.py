@@ -69,13 +69,6 @@ def with_holiday_calendar(
     ).drop("_hmonth", "_hday")
 
 
-def with_surrogate_key(df: DataFrame, natural_key: str, key_name: str) -> DataFrame:
-    """IDENTITY-column replacement (create_dwh_tables.sql surrogate
-    keys): deterministic dense ids 1..n ordered by the natural key."""
-    w = Window.orderBy(natural_key)
-    return df.withColumn(key_name, F.row_number().over(w))
-
-
 def scd2_init(
     snapshot: DataFrame, valid_from: str, *, from_col="valid_from", to_col="valid_to", cur_col="is_current"
 ) -> DataFrame:
@@ -264,12 +257,6 @@ def read_dim_bucketed(
 ) -> DataFrame:
     """Scan the bucketed dimension without the bucket column."""
     return spark.read.parquet(path).drop(bucket_col)
-
-
-def current_dim(dim: DataFrame, cur_col: str = "is_current") -> DataFrame:
-    """SCD2 lookup side: J3 requires ``is_current = 1`` filtering
-    (create_dwh_tables.sql:160-165 FK + is_current index)."""
-    return dim.filter(F.col(cur_col))
 
 
 def build_fact(

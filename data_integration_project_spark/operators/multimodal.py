@@ -22,7 +22,7 @@ never a full-partition materialization), and the partitioning story
 from __future__ import annotations
 
 from collections.abc import Iterator
-from functools import lru_cache
+from functools import lru_cache, partial
 
 import pandas as pd
 
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import spread_width
+from ..session import python_stage
 
 #: Canonical multimodal record schema: payload + typed metadata.
 MEDIA_SCHEMA = T.StructType(
@@ -58,33 +58,53 @@ FEATURE_SCHEMA = (
 )
 
 
-def _mark_spread(media: DataFrame) -> DataFrame:
-    """Tag a media frame whose rows were already hash-spread across the
-    session parallelism (every ``documents_as_*_media`` encode adapter
-    repartitions on the id BEFORE its CPU-fat Arrow stage)."""
-    media._payload_spread = True  # plain attribute: survives only direct
-    return media                  # composition, which is the adapter→decode shape
+#: Schema of every encoder's output: the id and the encoded payload.
+PAYLOAD_SCHEMA = "media_id long, payload binary"
 
 
-def _spread(media: DataFrame, *cols: str) -> DataFrame:
-    """Hash-spread payload rows on the id so the CPU-fat Arrow stage
-    that follows runs wide even from a single-file source. Frames an
-    encode adapter already spread pass through untouched: re-shuffling
-    them would move the fat binary payloads a second time with zero
-    redistribution (same key, same partition count) — the decode stage
-    instead pipelines into the encode stage's tasks with no exchange.
-    Any intermediate transform drops the tag, so the fallback is the
-    safe direction (a redundant shuffle, never a serial stage).
+def _id_and_payload(df: DataFrame) -> DataFrame:
+    """Cut a media frame to (media_id, payload) so that no other column
+    rides the exchange. A two-column frame (an encoder's output, or an
+    encoder's own input) is returned as is and keeps its spread mark."""
+    return df if len(df.columns) == 2 else df.select("media_id", "payload")
 
-    ``cols`` optionally projects to the columns the Arrow stage needs:
-    applied BEFORE an actual shuffle (fewer bytes on the exchange),
-    after a pass-through (a free narrow op)."""
-    if getattr(media, "_payload_spread", False):
-        return media.select(*cols) if cols else media
-    if cols:
-        media = media.select(*cols)
-    n_parts = spread_width(media, per_byte_cost=4)
-    return media.repartition(n_parts, F.col("media_id"))
+
+def per_payload_stage(
+    df: DataFrame, codec, schema: str, per_byte_cost: float
+) -> DataFrame:
+    """One :func:`python_stage` that applies ``codec`` to each payload.
+
+    ``df`` holds an id and a payload: ``(doc_id, text)`` for an encoder,
+    whose text is UTF-8 encoded before ``codec`` sees it, or a media
+    frame for a decoder, cut to ``(media_id, payload)`` before the
+    exchange. ``codec`` returns one output row as its non-id fields (the
+    payload bytes, a tuple, or a dict holding at least the schema's
+    field names), a list of dicts for several rows, or None for no row.
+    The id leads every output row."""
+    df = _id_and_payload(df)
+    names = [f.split()[0] for f in schema.split(",")]
+
+    def row(mid, r):
+        if isinstance(r, dict):
+            r = tuple(r[f] for f in names[1:])
+        elif not isinstance(r, tuple):
+            r = (r,)
+        return (mid, *r)
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for mid, v in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1]):
+                out = codec(v.encode("utf-8") if isinstance(v, str) else bytes(v))
+                if isinstance(out, list):
+                    rows.extend(row(mid, r) for r in out)
+                elif out is not None:
+                    rows.append(row(mid, out))
+            yield pd.DataFrame(rows, columns=names)
+
+    return python_stage(
+        df, op, schema, key=df.columns[0], per_byte_cost=per_byte_cost
+    )
 
 
 def documents_as_media(docs: DataFrame) -> DataFrame:
@@ -340,21 +360,8 @@ def documents_as_wav_media(docs: DataFrame) -> DataFrame:
     """Adapter producing REAL audio payloads: each document's text bytes
     rendered into a valid mono PCM WAV via an Arrow-batched encode step;
     decode_wav reads them back without any faking."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].values,
-                    "payload": [encode_wav(t.encode("utf-8")) for t in pdf["text"]],
-                }
-            )
-
-    n_parts = spread_width(docs.select("doc_id", "text"), per_byte_cost=4)
-    return _mark_spread(
-        docs.select("doc_id", "text")
-        .repartition(n_parts, F.col("doc_id"))
-        .mapInPandas(op, schema="media_id long, payload binary")
+    return per_payload_stage(
+        docs.select("doc_id", "text"), encode_wav, PAYLOAD_SCHEMA, 4
     )
 
 
@@ -368,17 +375,7 @@ def decode_audio_features(media: DataFrame) -> DataFrame:
     """Real audio feature extraction: ``decode_audio`` (WAV or AIFF,
     dispatched on container magic) over every payload inside
     ``mapInPandas`` — no fake path."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_audio(bytes(p)) for p in pdf["payload"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "media_id", pdf["media_id"].values)
-            yield out
-
-    return _spread(media).mapInPandas(
-        op, schema=AUDIO_FEATURE_SCHEMA
-    )
+    return per_payload_stage(media, decode_audio, AUDIO_FEATURE_SCHEMA, 4)
 
 
 def _extended80_pack(rate: int) -> bytes:
@@ -476,21 +473,8 @@ def decode_audio(payload: bytes) -> dict:
 def documents_as_aiff_media(docs: DataFrame) -> DataFrame:
     """Adapter producing REAL big-endian audio payloads (see
     documents_as_wav_media for the little-endian twin)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].values,
-                    "payload": [encode_aiff(t.encode("utf-8")) for t in pdf["text"]],
-                }
-            )
-
-    n_parts = spread_width(docs.select("doc_id", "text"), per_byte_cost=4)
-    return _mark_spread(
-        docs.select("doc_id", "text")
-        .repartition(n_parts, F.col("doc_id"))
-        .mapInPandas(op, schema="media_id long, payload binary")
+    return per_payload_stage(
+        docs.select("doc_id", "text"), encode_aiff, PAYLOAD_SCHEMA, 4
     )
 
 
@@ -514,23 +498,8 @@ def documents_as_ppm_media(docs: DataFrame) -> DataFrame:
     rendered into a valid P6 PPM via an Arrow-batched encode step (the
     ingest half of the image pipeline; decode_image reads them back
     without any faking)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].values,
-                    "payload": [
-                        encode_ppm(t.encode("utf-8")) for t in pdf["text"]
-                    ],
-                }
-            )
-
-    n_parts = spread_width(docs.select("doc_id", "text"), per_byte_cost=4)
-    return _mark_spread(
-        docs.select("doc_id", "text")
-        .repartition(n_parts, F.col("doc_id"))
-        .mapInPandas(op, schema="media_id long, payload binary")
+    return per_payload_stage(
+        docs.select("doc_id", "text"), encode_ppm, PAYLOAD_SCHEMA, 4
     )
 
 
@@ -881,46 +850,16 @@ def decode_gif(payload: bytes) -> dict:
 
 def documents_as_gif_media(docs: DataFrame) -> DataFrame:
     """Adapter producing REAL LZW-compressed image payloads."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].values,
-                    "payload": [
-                        encode_gif(t.encode("utf-8")) for t in pdf["text"]
-                    ],
-                }
-            )
-
-    n_parts = spread_width(docs.select("doc_id", "text"), per_byte_cost=64)
-    return _mark_spread(
-        docs.select("doc_id", "text")
-        .repartition(n_parts, F.col("doc_id"))
-        .mapInPandas(op, schema="media_id long, payload binary")
+    return per_payload_stage(
+        docs.select("doc_id", "text"), encode_gif, PAYLOAD_SCHEMA, 64
     )
 
 
 def documents_as_png_media(docs: DataFrame) -> DataFrame:
     """Adapter producing REAL compressed image payloads: each document's
     text bytes rendered into a valid filtered+DEFLATEd PNG."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].values,
-                    "payload": [
-                        encode_png(t.encode("utf-8")) for t in pdf["text"]
-                    ],
-                }
-            )
-
-    n_parts = spread_width(docs.select("doc_id", "text"), per_byte_cost=64)
-    return _mark_spread(
-        docs.select("doc_id", "text")
-        .repartition(n_parts, F.col("doc_id"))
-        .mapInPandas(op, schema="media_id long, payload binary")
+    return per_payload_stage(
+        docs.select("doc_id", "text"), encode_png, PAYLOAD_SCHEMA, 64
     )
 
 
@@ -942,23 +881,8 @@ def encode_tga(raw: bytes, width: int = PPM_WIDTH, max_height: int = PPM_MAX_HEI
 def documents_as_tga_media(docs: DataFrame) -> DataFrame:
     """Adapter producing REAL TGA payloads (bottom-up BGR — exercises
     the decoder's row normalization and channel order)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].values,
-                    "payload": [
-                        encode_tga(t.encode("utf-8")) for t in pdf["text"]
-                    ],
-                }
-            )
-
-    n_parts = spread_width(docs.select("doc_id", "text"), per_byte_cost=4)
-    return _mark_spread(
-        docs.select("doc_id", "text")
-        .repartition(n_parts, F.col("doc_id"))
-        .mapInPandas(op, schema="media_id long, payload binary")
+    return per_payload_stage(
+        docs.select("doc_id", "text"), encode_tga, PAYLOAD_SCHEMA, 4
     )
 
 
@@ -972,17 +896,7 @@ def decode_image_features(media: DataFrame) -> DataFrame:
     """Real image feature extraction: ``decode_image`` over every
     payload inside ``mapInPandas`` — no fake path. Arrow-batched,
     payloads hash-partitioned on the id."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_image(bytes(p)) for p in pdf["payload"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "media_id", pdf["media_id"].values)
-            yield out
-
-    return _spread(media).mapInPandas(
-        op, schema=IMAGE_FEATURE_SCHEMA
-    )
+    return per_payload_stage(media, decode_image, IMAGE_FEATURE_SCHEMA, 4)
 
 
 # ---------------------------------------------------------------------------
@@ -1032,26 +946,19 @@ def dhash_chunks(width: int, height: int, raster: bytes) -> tuple[int, int, int,
     return tuple(int((flat[j * 16 : (j + 1) * 16] * w).sum()) for j in range(4))
 
 
+def ppm_dhash(payload: bytes) -> tuple[int, int, int, int]:
+    """:func:`dhash_chunks` of one PPM payload (a short raster is
+    zero-padded to whole rows)."""
+    w, h, raster = _ppm_raster(payload)
+    return dhash_chunks(w, h, raster.ljust(w * h * 3, b"\x00"))
+
+
 def decode_dhash_features(media: DataFrame) -> DataFrame:
     """Perceptual-hash extraction inside ``mapInPandas``: parse each PPM
     payload and emit its dHash as four 16-bit chunk columns. Payloads
     hash-partition on the id (single-file source still decodes on every
     core); state per task is one Arrow batch."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for mid, p in zip(pdf["media_id"].values, pdf["payload"]):
-                w, h, raster = _ppm_raster(bytes(p))
-                raster = raster.ljust(w * h * 3, b"\x00")  # short-raster pad
-                recs.append((int(mid), *dhash_chunks(w, h, raster)))
-            yield pd.DataFrame(
-                recs, columns=["media_id", "c0", "c1", "c2", "c3"]
-            )
-
-    return _spread(media).mapInPandas(
-        op, schema=DHASH_SCHEMA
-    )
+    return per_payload_stage(media, ppm_dhash, DHASH_SCHEMA, 4)
 
 
 AUDIO_FP_SCHEMA = "media_id long, c0 int, c1 int, c2 int, c3 int"
@@ -1092,21 +999,7 @@ def audio_fingerprint_chunks(
 def decode_audio_fingerprints(media: DataFrame) -> DataFrame:
     """Audio fingerprint extraction inside ``mapInPandas``; clips under
     the minimum-duration gate are dropped (not fingerprinted)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for mid, p in zip(pdf["media_id"].values, pdf["payload"]):
-                ch = audio_fingerprint_chunks(bytes(p))
-                if ch is not None:
-                    recs.append((int(mid), *ch))
-            yield pd.DataFrame(
-                recs, columns=["media_id", "c0", "c1", "c2", "c3"]
-            )
-
-    return _spread(media).mapInPandas(
-        op, schema=AUDIO_FP_SCHEMA
-    )
+    return per_payload_stage(media, audio_fingerprint_chunks, AUDIO_FP_SCHEMA, 4)
 
 
 def extract_features(media: DataFrame, *, batch_hint: int | None = None) -> DataFrame:
@@ -1114,17 +1007,9 @@ def extract_features(media: DataFrame, *, batch_hint: int | None = None) -> Data
     Arrow-batched, streaming per partition (the iterator yields one
     output frame per input batch — peak memory is one batch of payloads,
     not one partition)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_image_stub(bytes(p), fake=True) for p in pdf["payload"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "media_id", pdf["media_id"].values)
-            yield out
-
-    # payloads hash-partition on the id so decode work spreads across
-    # executors even from a single-file source
-    return _spread(media, "media_id", "payload").mapInPandas(op, schema=FEATURE_SCHEMA)
+    return per_payload_stage(
+        media, partial(decode_image_stub, fake=True), FEATURE_SCHEMA, 4
+    )
 
 
 def frame_sample(media: DataFrame, n_frames: int = 4) -> DataFrame:
@@ -1165,42 +1050,36 @@ def resize_image_nn(media: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFra
     memory is one batch of payloads. The resize is the downsample step
     of an image-training pipeline — at 100 TB the same op runs per
     payload with no shuffle beyond the initial repartition."""
+    return per_payload_stage(
+        media, partial(resize_ppm_nn, out_w=out_w, out_h=out_h), RESIZE_SCHEMA, 4
+    )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"].values, pdf["payload"]):
-                w, h, raster = _ppm_raster(bytes(p))
-                arr = (
-                    np.frombuffer(raster.ljust(w * h * 3, b"\x00"), dtype=np.uint8)
-                    .reshape(h, w, 3)
-                    .astype(np.int64)
-                )
-                ys = (np.arange(out_h) * h) // out_h
-                xs = (np.arange(out_w) * w) // out_w
-                small = arr[ys][:, xs, :]
-                pos_w = np.arange(1, out_h * out_w + 1).reshape(out_h, out_w)
-                chan_w = np.array([1, 2, 3], dtype=np.int64)
-                checksum = int(
-                    (small * pos_w[:, :, None] * chan_w[None, None, :]).sum()
-                )
-                n = out_h * out_w
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "out_w": out_w,
-                        "out_h": out_h,
-                        "mean_r": small[:, :, 0].sum() / n,
-                        "mean_g": small[:, :, 1].sum() / n,
-                        "mean_b": small[:, :, 2].sum() / n,
-                        "resize_checksum": checksum,
-                    }
-                )
-            yield pd.DataFrame(rows)
+def resize_ppm_nn(payload: bytes, out_w: int, out_h: int) -> dict:
+    """Nearest-neighbor resize of one PPM payload (see resize_image_nn)."""
+    import numpy as np
 
-    return _spread(media).mapInPandas(op, schema=RESIZE_SCHEMA)
+    w, h, raster = _ppm_raster(payload)
+    arr = (
+        np.frombuffer(raster.ljust(w * h * 3, b"\x00"), dtype=np.uint8)
+        .reshape(h, w, 3)
+        .astype(np.int64)
+    )
+    ys = (np.arange(out_h) * h) // out_h
+    xs = (np.arange(out_w) * w) // out_w
+    small = arr[ys][:, xs, :]
+    pos_w = np.arange(1, out_h * out_w + 1).reshape(out_h, out_w)
+    chan_w = np.array([1, 2, 3], dtype=np.int64)
+    checksum = int((small * pos_w[:, :, None] * chan_w[None, None, :]).sum())
+    n = out_h * out_w
+    return {
+        "out_w": out_w,
+        "out_h": out_h,
+        "mean_r": small[:, :, 0].sum() / n,
+        "mean_g": small[:, :, 1].sum() / n,
+        "mean_b": small[:, :, 2].sum() / n,
+        "resize_checksum": checksum,
+    }
 
 
 AUDIO_FRAME_SCHEMA = (
@@ -1221,34 +1100,30 @@ def audio_frame_features(media: DataFrame, frame_len: int = 256) -> DataFrame:
     Scale shape: Arrow-batched mapInPandas, hash-partitioned on
     media_id; the fanout is |samples|/frame_len rows per payload with
     no shuffle after the repartition."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"].values, pdf["payload"]):
-                _rate, _ch, data = _wav_pcm(bytes(p))
-                s = np.frombuffer(
-                    data[: (len(data) // 2) * 2], dtype="<i2"
-                ).astype(np.int64)
-                for fi in range(max(1, -(-len(s) // frame_len))):
-                    seg = s[fi * frame_len : (fi + 1) * frame_len]
-                    neg = seg < 0
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": fi,
-                            "n_samples": int(len(seg)),
-                            "sum_abs": int(np.abs(seg).sum()),
-                            "zero_crossings": int((neg[1:] != neg[:-1]).sum()),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return _spread(media).mapInPandas(
-        op, schema=AUDIO_FRAME_SCHEMA
+    return per_payload_stage(
+        media, partial(audio_frames, frame_len=frame_len), AUDIO_FRAME_SCHEMA, 4
     )
+
+
+def audio_frames(payload: bytes, frame_len: int) -> list[dict]:
+    """Per-frame rows of one WAV payload (see audio_frame_features)."""
+    import numpy as np
+
+    _rate, _ch, data = _wav_pcm(payload)
+    s = np.frombuffer(data[: (len(data) // 2) * 2], dtype="<i2").astype(np.int64)
+    rows = []
+    for fi in range(max(1, -(-len(s) // frame_len))):
+        seg = s[fi * frame_len : (fi + 1) * frame_len]
+        neg = seg < 0
+        rows.append(
+            {
+                "frame_idx": fi,
+                "n_samples": int(len(seg)),
+                "sum_abs": int(np.abs(seg).sum()),
+                "zero_crossings": int((neg[1:] != neg[:-1]).sum()),
+            }
+        )
+    return rows
 
 
 def extract_features_arrow(media: DataFrame) -> DataFrame:
@@ -1288,10 +1163,13 @@ def extract_features_arrow(media: DataFrame) -> DataFrame:
                 names=["media_id", "byte_len", "sum_bytes", "mean_byte", "head_hex"],
             )
 
-    # project to the two needed columns BEFORE the spread so the meta
-    # struct never rides the exchange (guide §2.2 — shuffle fewer bytes)
-    return _spread(media, "media_id", "payload").mapInArrow(
-        op, schema=FEATURE_SCHEMA
+    return python_stage(
+        _id_and_payload(media),
+        op,
+        FEATURE_SCHEMA,
+        key="media_id",
+        per_byte_cost=4,
+        arrow=True,
     )
 
 
@@ -1855,21 +1733,8 @@ def decode_flac(payload: bytes) -> dict:
 def documents_as_flac_media(docs: DataFrame) -> DataFrame:
     """Adapter producing REAL compressed audio payloads: each document's
     text bytes rendered into a valid Rice-coded FLAC stream."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].values,
-                    "payload": [encode_flac(t.encode("utf-8")) for t in pdf["text"]],
-                }
-            )
-
-    n_parts = spread_width(docs.select("doc_id", "text"), per_byte_cost=64)
-    return _mark_spread(
-        docs.select("doc_id", "text")
-        .repartition(n_parts, F.col("doc_id"))
-        .mapInPandas(op, schema="media_id long, payload binary")
+    return per_payload_stage(
+        docs.select("doc_id", "text"), encode_flac, PAYLOAD_SCHEMA, 64
     )
 
 
@@ -1883,30 +1748,7 @@ def decode_flac_features(media: DataFrame) -> DataFrame:
     """FLAC decode + integrity certification inside ``mapInPandas``:
     surfaces the predictor order the decoder actually walked and the
     CRC/MD5 verdicts alongside exact sample statistics."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid_, p in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_flac(bytes(p))
-                rows.append(
-                    {
-                        "media_id": int(mid_),
-                        "format": d["format"],
-                        "sample_rate": d["sample_rate"],
-                        "n_frames": d["n_frames"],
-                        "sum_abs": d["sum_abs"],
-                        "peak_abs": d["peak_abs"],
-                        "fixed_order": d["fixed_order"],
-                        "crc_ok": d["crc_ok"],
-                        "md5_ok": d["md5_ok"],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return _spread(media).mapInPandas(
-        op, schema=FLAC_FEATURE_SCHEMA
-    )
+    return per_payload_stage(media, decode_flac, FLAC_FEATURE_SCHEMA, 4)
 
 
 # ---------------------------------------------------------------------------
@@ -1970,12 +1812,6 @@ def _jpeg_huff_encoder(bits: list[int], vals: list[int]) -> dict[int, tuple[int,
             k += 1
         code <<= 1
     return out
-
-
-def _jpeg_huff_decoder(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol for the bit-at-a-time decoder."""
-    enc = _jpeg_huff_encoder(bits, vals)
-    return {(ln, code): sym for sym, (code, ln) in enc.items()}
 
 
 @lru_cache(maxsize=64)
@@ -2534,21 +2370,8 @@ def documents_as_jpeg_media(docs: DataFrame) -> DataFrame:
     per-doc entropy coding is the expensive stage — without the
     up-front shuffle it runs on a single core (measured 10s -> ~3s at
     sf0.1)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].values,
-                    "payload": [encode_jpeg(t.encode("utf-8")) for t in pdf["text"]],
-                }
-            )
-
-    n = spread_width(docs.select("doc_id", "text"), per_byte_cost=64)
-    return _mark_spread(
-        docs.select("doc_id", "text")
-        .repartition(n, F.col("doc_id"))
-        .mapInPandas(op, schema="media_id long, payload binary")
+    return per_payload_stage(
+        docs.select("doc_id", "text"), encode_jpeg, PAYLOAD_SCHEMA, 64
     )
 
 
@@ -2561,32 +2384,7 @@ JPEG_FEATURE_SCHEMA = (
 def decode_jpeg_features(media: DataFrame) -> DataFrame:
     """JPEG decode inside ``mapInPandas``: full marker walk, Huffman
     entropy decode, dequant + IDCT, exact integer statistics."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid_, p in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_jpeg(bytes(p))
-                rows.append(
-                    {
-                        "media_id": int(mid_),
-                        "format": d["format"],
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_blocks": d["n_blocks"],
-                        "sum_pixels": d["sum_pixels"],
-                        "dc_checksum": d["dc_checksum"],
-                        "n_restarts": d["n_restarts"],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    # explicit partition count (inside _spread): an AQE-coalesced column
-    # repartition collapses this tiny-but-CPU-heavy shuffle to one task
-    # (the payloads are small; the DECODE is the cost)
-    return _spread(media).mapInPandas(
-        op, schema=JPEG_FEATURE_SCHEMA
-    )
+    return per_payload_stage(media, decode_jpeg, JPEG_FEATURE_SCHEMA, 4)
 
 
 # ---------------------------------------------------------------------------
@@ -2777,21 +2575,8 @@ def decode_avi_samples(payload: bytes, n_samples: int = 4) -> list[dict]:
 
 def documents_as_avi_media(docs: DataFrame) -> DataFrame:
     """Adapter producing REAL video containers from document bytes."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].values,
-                    "payload": [encode_avi(t.encode("utf-8")) for t in pdf["text"]],
-                }
-            )
-
-    n_parts = spread_width(docs.select("doc_id", "text"), per_byte_cost=64)
-    return _mark_spread(
-        docs.select("doc_id", "text")
-        .repartition(n_parts, F.col("doc_id"))
-        .mapInPandas(op, schema="media_id long, payload binary")
+    return per_payload_stage(
+        docs.select("doc_id", "text"), encode_avi, PAYLOAD_SCHEMA, 64
     )
 
 
@@ -2846,34 +2631,11 @@ def avi_signature_chunks(
 def decode_avi_signatures(media: DataFrame) -> DataFrame:
     """Video fingerprint extraction inside ``mapInPandas``; clips under
     the minimum-duration gate are dropped (not fingerprinted)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for mid, p in zip(pdf["media_id"].values, pdf["payload"]):
-                ch = avi_signature_chunks(bytes(p))
-                if ch is not None:
-                    recs.append((int(mid), *ch))
-            yield pd.DataFrame(
-                recs, columns=["media_id", "c0", "c1", "c2", "c3"]
-            )
-
-    return _spread(media).mapInPandas(
-        op, schema=VIDEO_FP_SCHEMA
-    )
+    return per_payload_stage(media, avi_signature_chunks, VIDEO_FP_SCHEMA, 4)
 
 
 def sample_avi_keyframes(media: DataFrame, n_samples: int = 4) -> DataFrame:
     """Index-seeking keyframe sampling inside ``mapInPandas``."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid_, p in zip(pdf["media_id"], pdf["payload"]):
-                for d in decode_avi_samples(bytes(p), n_samples):
-                    rows.append({"media_id": int(mid_), **d})
-            yield pd.DataFrame(rows)
-
-    return _spread(media).mapInPandas(
-        op, schema=AVI_SAMPLE_SCHEMA
+    return per_payload_stage(
+        media, partial(decode_avi_samples, n_samples=n_samples), AVI_SAMPLE_SCHEMA, 4
     )

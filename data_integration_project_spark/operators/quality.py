@@ -196,15 +196,6 @@ def valid_email(col: str) -> Column:
     return matches(col, r"^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$")
 
 
-def no_digits(col: str) -> Column:
-    """Names must not embed digits (fixture ``Trần Hạnh2424``)."""
-    return F.col(col).isNotNull() & ~F.col(col).rlike("[0-9]")
-
-
-def min_length(col: str, n: int) -> Column:
-    return F.length(F.col(col)) >= n
-
-
 def positive(col: str) -> Column:
     return F.col(col).isNotNull() & (F.col(col) > 0)
 

@@ -19,7 +19,7 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import spread_width
+from ..session import python_stage
 from pyspark.sql import Window
 
 from ..functions.vectors import cosine
@@ -360,13 +360,11 @@ def brute_force_topk_pandas(
     # |Q|x|batch| matrix sized by the whole corpus (the AQE-coalesce /
     # media-decode lesson; measured 5x on the bitext-mining shape)
     c_cols = [id_col, vec_col] + ([exclude_label_col] if exclude_label_col else [])
-    n_parts = spread_width(corpus.select(*c_cols))
-    partial = (
-        corpus.select(*c_cols)
-        .repartition(n_parts, F.col(id_col))
-        .mapInPandas(
-            op, schema="query_id long, neighbor_id long, cos_sim double"
-        )
+    partial = python_stage(
+        corpus.select(*c_cols),
+        op,
+        "query_id long, neighbor_id long, cos_sim double",
+        key=id_col,
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
@@ -475,14 +473,11 @@ def mutual_topk_pandas(
                     }
                 )
 
-    n_parts = spread_width(corpus.select(id_col, vec_col))
-    partial = (
-        corpus.select(id_col, vec_col, side_col.alias("_side"))
-        .repartition(n_parts, F.col(id_col))
-        .mapInPandas(
-            op,
-            schema="dir int, query_id long, neighbor_id long, cos_sim double",
-        )
+    partial = python_stage(
+        corpus.select(id_col, vec_col, side_col.alias("_side")),
+        op,
+        "dir int, query_id long, neighbor_id long, cos_sim double",
+        key=id_col,
     )
     w = Window.partitionBy("dir", "query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")

@@ -97,11 +97,6 @@ def failed_data_view(error_df: DataFrame, entity: str) -> DataFrame:
     )
 
 
-def truncate_overwrite(df: DataFrame, path: str) -> None:
-    """K6 TRUNCATE + reload ≡ overwrite write."""
-    df.write.mode("overwrite").parquet(path)
-
-
 def compact_zone(
     spark: SparkSession,
     zone_root: str,

@@ -20,9 +20,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..session import spread_width
+from ..session import python_stage
+from .multimodal import PAYLOAD_SCHEMA, per_payload_stage
 
 _CRLF = b"\r\n"
 
@@ -89,26 +89,25 @@ def parse_warc(buf: bytes) -> list[dict]:
     return out
 
 
+def _warc_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        ids = pdf["doc_id"].tolist()
+        payloads = [
+            encode_warc_pair(i, t.encode("utf-8")) for i, t in zip(ids, pdf["text"])
+        ]
+        yield pd.DataFrame({"media_id": ids, "payload": payloads})
+
+
 def documents_as_warc(docs: DataFrame) -> DataFrame:
-    """Adapter: (doc_id, text) → (media_id, payload) WARC pairs."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].values,
-                    "payload": [
-                        encode_warc_pair(int(i), t.encode("utf-8"))
-                        for i, t in zip(pdf["doc_id"].values, pdf["text"])
-                    ],
-                }
-            )
-
-    n_parts = spread_width(docs.select("doc_id", "text"), per_byte_cost=4)
-    return (
-        docs.select("doc_id", "text")
-        .repartition(n_parts, F.col("doc_id"))
-        .mapInPandas(op, schema="media_id long, payload binary")
+    """Adapter: (doc_id, text) → (media_id, payload) WARC pairs. The
+    record framing needs the row id, so this encoder runs its own batch
+    function instead of a per-payload codec."""
+    return python_stage(
+        docs.select("doc_id", "text"),
+        _warc_pairs,
+        PAYLOAD_SCHEMA,
+        key="doc_id",
+        per_byte_cost=4,
     )
 
 
@@ -118,42 +117,19 @@ WARC_SCHEMA = (
 )
 
 
+def warc_features(payload: bytes) -> tuple:
+    """(n_records, uri, req_len, resp_len, resp_byte_sum) of one WARC
+    request/response pair."""
+    recs = parse_warc(payload)
+    if [r["type"] for r in recs] != ["request", "response"]:
+        raise ValueError("warc: expected request+response pair")
+    req, resp = recs
+    body = resp["body"]
+    return len(recs), resp["uri"], len(req["body"]), len(body), int(sum(body))
+
+
 def parse_warc_features(media: DataFrame) -> DataFrame:
     """Parse each WARC pair and summarize: record count, response URI,
     request body length (varies with the id width — pins the framing
     walk), response length, and the exact response byte sum."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:  # one output frame per input batch
-            rows = []
-            for mid, p in zip(pdf["media_id"].values, pdf["payload"]):
-                recs = parse_warc(bytes(p))
-                if [r["type"] for r in recs] != ["request", "response"]:
-                    raise ValueError("warc: expected request+response pair")
-                resp = recs[1]
-                rows.append(
-                    (
-                        int(mid),
-                        len(recs),
-                        resp["uri"],
-                        len(recs[0]["body"]),
-                        len(resp["body"]),
-                        int(sum(resp["body"])),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "n_records",
-                    "uri",
-                    "req_len",
-                    "resp_len",
-                    "resp_byte_sum",
-                ],
-            )
-
-    n_parts = spread_width(media, per_byte_cost=4)
-    return media.repartition(n_parts, F.col("media_id")).mapInPandas(
-        op, schema=WARC_SCHEMA
-    )
+    return per_payload_stage(media, warc_features, WARC_SCHEMA, 4)

@@ -2410,13 +2410,10 @@ def _pca_cov_panel(spark: SparkSession, e: DataFrame):
                 {"i": ii.ravel(), "j": jj.ravel(), "p": cc.ravel()}
             )
 
-    from ..session import spread_width
+    from ..session import python_stage
 
-    n_parts = spread_width(e.select("embedding"))
     cov_rows = (
-        e.select("embedding")
-        .repartition(n_parts)
-        .mapInPandas(cov_op, schema="i int, j int, p long")
+        python_stage(e.select("embedding"), cov_op, "i int, j int, p long")
         .groupBy("i", "j")
         .agg(F.expr("sum(p) div 1000000").alias("s"))
         .collect()  # d² rows — the bounded panel the iterations ride

@@ -10,9 +10,14 @@ a pinned UTC session timezone so results are reproducible across engines
 
 from __future__ import annotations
 
+import functools
+import logging
 import os
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 #: Runtime confs that are safe (and desirable) to apply to an existing
 #: session — e.g. the driver-owned session passed into ``queries()``.
@@ -25,23 +30,12 @@ RUNTIME_CONFS: dict[str, str] = {
     ),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # Round-10 (guide §2.2 — fewer, larger reduce partitions): with
-    # parallelismFirst at its default (true) AQE coalesces only down to
-    # the session parallelism, so at small inputs every post-shuffle
-    # stage still launches <cores> near-empty tasks — measured ~16 s of
-    # pure task overhead across the 86-query suite at 32 cores / sf0.1
-    # (the 8-core suite beat the 32-core one). false makes AQE honor
-    # advisoryPartitionSizeInBytes instead: partition count tracks
-    # DATA SIZE at every scale (sf0.1 collapses to 1-2 real tasks,
-    # 100 TB still gets hundreds of thousands) — the scale-adaptive
-    # setting, not a local[32] tune. Env-tunable for clusters that
-    # prefer idle-core backfill over per-task efficiency.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": os.environ.get(
-        "SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"
-    ),
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
-        "SPARK_GRAFT_ADVISORY_PARTITION_BYTES", str(32 * 1024 * 1024)
-    ),
+    # false: AQE coalesces toward advisoryPartitionSizeInBytes instead of
+    # stopping at the session parallelism, so the post-shuffle task count
+    # tracks data size (a small input runs 1-2 real tasks, not one
+    # near-empty task per core)
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(32 * 1024 * 1024),
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # let custom Python DataSources (sources/pygen.py) absorb filters
@@ -50,12 +44,8 @@ RUNTIME_CONFS: dict[str, str] = {
     # convert on load (sources.registry.NANOS_CANDIDATES)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # parquet scans: split files small enough that a scan parallelizes
-    # even on modest local inputs (a single 30 MB file would otherwise
-    # be ONE task). At cluster scale raise this back toward 128m+ via
-    # the env knob — fewer, fatter partitions amortize task overhead.
-    "spark.sql.files.maxPartitionBytes": os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", str(8 * 1024 * 1024)
-    ),
+    # even on modest inputs (one 30 MB file would otherwise be ONE task)
+    "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
 }
 
 
@@ -81,53 +71,73 @@ def get_spark(app_name: str = "data_integration_project_spark") -> SparkSession:
     return spark
 
 
-#: Target INPUT bytes per task for CPU-fat Python/Arrow stages (encode/
-#: decode adapters, signature folds). Round-10 (guide §2.6/§6): these
-#: stages used to fan out to a flat ``defaultParallelism`` — at 32
-#: local cores that is 32 Python task launches + Arrow stream setups
-#: for kilobytes of input, measured ~0.3-0.6 s of pure overhead per
-#: query at sf0.1 (width 8 or 4 recovers the 8-core times exactly).
-#: ~512 KB of source bytes per task keeps per-task overhead (~30 ms)
-#: under ~20% of the stage's real work while still saturating every
-#: core once the input is a few MB per core — at 100 TB any of these
-#: stages clamps to the full session parallelism. Env-tunable: raise
-#: it on clusters with fatter cores or cheaper schedulers.
-SPREAD_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_TARGET_BYTES", str(512 * 1024))
-)
+#: Input bytes per task for a CPU-fat Python/Arrow stage: ~512 KB keeps
+#: the ~30 ms per-task launch and Arrow setup under ~20% of the stage's
+#: work, and an input of a few MB per core still fills every core.
+SPREAD_TARGET_BYTES = 512 * 1024
+
+#: Attribute set on a python_stage output: its rows are already spread.
+_SPREAD_ATTR = "_python_stage_spread"
 
 
-def spread_width(df, per_byte_cost: float = 1.0) -> int:
-    """Partition width for a CPU-fat Python stage over ``df``: enough
-    tasks to cover Catalyst's size estimate at ~SPREAD_TARGET_BYTES
-    input bytes per task, clamped to [2, defaultParallelism]. Falls
-    back to the full parallelism whenever the estimate is missing or
-    huge — mis-estimation can only cost a too-wide (current behavior)
-    spread, never a serial stage.
-
-    ``per_byte_cost`` scales the target down for stages whose work per
-    input byte is far above a hash/tokenize pass (media codecs: ~4) —
-    measured at sf0.1, the LZW/deflate image decodes want ~4x more
-    tasks per byte than the token-hash folds before task overhead wins
-    again."""
-    cores = default_parallelism()
+def _size_estimate(df: DataFrame) -> int | None:
+    """Catalyst's size estimate for ``df`` in bytes (a private JVM API),
+    or None when it is unavailable."""
     try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return cores
-    target = max(1, int(SPREAD_TARGET_BYTES / max(per_byte_cost, 1e-9)))
-    if est <= 0 or est >= cores * target:
-        return cores
-    return min(cores, max(2, -(-est // target)))
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except (AttributeError, TypeError, Py4JError) as exc:
+        _log_probe_fallback(type(exc).__name__)
+        return None
+
+
+@functools.lru_cache(maxsize=None)
+def _log_probe_fallback(exc_name: str) -> None:
+    _log.warning("python_stage: size probe failed (%s); using full width", exc_name)
+
+
+def python_stage(
+    df: DataFrame,
+    fn,
+    schema,
+    *,
+    key: str | None = None,
+    per_byte_cost: float = 1.0,
+    arrow: bool = False,
+) -> DataFrame:
+    """Run the CPU-fat Python stage ``fn`` over ``df``: ``mapInPandas``,
+    or ``mapInArrow`` when ``arrow``.
+
+    The rows are first repartitioned on ``key`` (round-robin when None)
+    so that a single-file source still runs on every core. The width
+    covers Catalyst's size estimate at ``SPREAD_TARGET_BYTES /
+    per_byte_cost`` input bytes per task, clamped to [2,
+    default_parallelism()]; a missing or huge estimate gives the full
+    parallelism, so mis-estimation costs a too-wide stage, never a
+    serial one. ``per_byte_cost`` is the stage's work per input byte
+    relative to a hash/tokenize pass (media codecs: 4-64).
+
+    The output is marked as spread. A python_stage composed directly on
+    it (a decoder on its encoder's payloads) skips the repartition and
+    pipelines into the same tasks instead of shuffling the payloads a
+    second time. Any transform in between drops the mark, and the next
+    stage spreads itself again."""
+    if not getattr(df, _SPREAD_ATTR, False):
+        cores = default_parallelism()
+        target = max(1, int(SPREAD_TARGET_BYTES / per_byte_cost))
+        est = _size_estimate(df) or 0
+        width = cores
+        if 0 < est < cores * target:
+            width = min(cores, max(2, -(-est // target)))
+        df = df.repartition(width, *([key] if key else []))
+    out = df.mapInArrow(fn, schema) if arrow else df.mapInPandas(fn, schema)
+    setattr(out, _SPREAD_ATTR, True)
+    return out
 
 
 #: Target shuffle-partition size for iterative loops, in ROWS of the
 #: loop's working frame (edges, labels, coefficients). 2M rows of two
-#: int64s ≈ 32 MB per partition — inside the guide's 100 MB-1 GB band
-#: once real-world row widths are counted. Env-tunable for clusters.
-LOOP_ROWS_PER_PARTITION = int(
-    os.environ.get("SPARK_GRAFT_LOOP_ROWS_PER_PARTITION", str(2_000_000))
-)
+#: int64s ≈ 32 MB per partition.
+LOOP_ROWS_PER_PARTITION = 2_000_000
 
 
 class iterative_loop:
@@ -135,24 +145,17 @@ class iterative_loop:
     iterative loop (connected components, label propagation, PageRank,
     gradient descent, BPE merge rounds).
 
-    Why (optimization guide §1.2/§2): each loop round is a handful of
-    exchanges over a working frame whose size the OPERATOR knows
-    exactly (it counts the frame every round for its convergence
-    check). AQE re-plans every exchange of every round as its own job
-    — measured 101 Spark jobs for a 12-round / 5k-edge star loop,
-    ~8 jobs per round of pure scheduler+py4j overhead. Inside the
-    loop we size ``spark.sql.shuffle.partitions`` directly from the
-    measured row count (``rows / LOOP_ROWS_PER_PARTITION``, clamped to
-    at least 1) and suspend AQE: coalescing is subsumed by the exact
-    sizing, and AQE's skew handling only rewrites joins — the loop
-    bodies here are windows and aggregates it would never touch.
-    Confs are restored on exit; ``tune_session`` re-applies engine
-    defaults at the next catalog call anyway.
-
-    Scale-adaptive by construction: at 5k edges this yields 1
-    partition (one task per stage instead of 32 empties); at 10^12
-    edges it yields 500k partitions of ~32 MB. Not a local[32] tune —
-    the same formula serves both ends, and the divisor is env-tunable.
+    Each loop round is a handful of exchanges over a working frame whose
+    size the operator knows exactly (it counts the frame every round for
+    its convergence check). Under AQE every exchange of every round is
+    re-planned as its own job (101 Spark jobs for a 12-round / 5k-edge
+    star loop). Inside the loop ``spark.sql.shuffle.partitions`` is set
+    from the measured row count (``rows / LOOP_ROWS_PER_PARTITION``, at
+    least 1) and AQE is suspended: the exact sizing subsumes coalescing,
+    and AQE's skew handling only rewrites joins, which these loop bodies
+    (windows and aggregates) do not have. Confs are restored on exit.
+    The same formula gives 1 partition at 5k edges and ~32 MB partitions
+    at any larger size.
     """
 
     def __init__(self, spark: SparkSession, rows: int):

@@ -60,6 +60,56 @@ def test_simhash_planted_copies_distance_zero(spark):
         assert got.get((r["doc_id"], r["doc_id"] + 100000)) == 0  # identical text → distance 0
 
 
+_SIMHASH_TEXTS = [
+    "",
+    "   ",
+    " \t\n ",
+    "\tlead and trail\t",
+    "  spaced   out  words  ",
+    "Café Ünïcode naïve résumé ñandú",
+    "emoji 😀 and 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 math 𐐀𐐨 text",
+    "MiXeD CaSe WoRdS and MORE words",
+    "ΟΔΥΣΣΕΥΣ Straße İstanbul ǅemal",
+    None,
+]
+
+
+@pytest.mark.parametrize("bits", [62, 31])
+def test_simhash_arrow_fold_matches_sql_builtins(spark, bits):
+    """simhash_signature's Arrow fold is bit-exact against the same
+    signature built from Spark SQL built-ins: ``trim`` (spaces only),
+    ``lower``, ``split`` on ``\\s+`` and a per-codepoint ``ascii`` fold,
+    on empty, whitespace-only, non-ASCII, supplementary-plane and
+    mixed-case rows. Null text produces no row in either."""
+    from functools import reduce
+
+    from data_integration_project_spark.functions.text import HASH_P, char_fold_hash, tokens
+
+    df = spark.createDataFrame(
+        list(enumerate(_SIMHASH_TEXTS)), "doc_id long, text string"
+    )
+    sigs = D.simhash_signature(df, "doc_id", "text", bits)
+    got = {r["doc_id"]: r["simhash"] for r in sigs.collect()}
+
+    h1 = F.transform(tokens(F.col("text")), char_fold_hash)
+    h2 = F.transform(h1, lambda h: (h * D.A2 + D.B2) % HASH_P)
+    n = F.size(h1)
+    terms = []
+    for j in range(bits):
+        hs, sh = (h1, j) if j < 31 else (h2, j - 31)
+        ones = F.aggregate(
+            hs, F.lit(0).cast("long"), lambda acc, h: acc + F.shiftright(h, sh).bitwiseAND(1)
+        )
+        terms.append(F.when(2 * ones - n > 0, F.lit(1 << j)).otherwise(0).cast("long"))
+    ref = df.filter(F.col("text").isNotNull()).select(
+        "doc_id", reduce(lambda a, b: a + b, terms).alias("simhash")
+    )
+    want = {r["doc_id"]: r["simhash"] for r in ref.collect()}
+
+    assert len(want) == len(_SIMHASH_TEXTS) - 1
+    assert got == want
+
+
 def test_srp_recall_vs_exact(spark):
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = e.filter("vec_id % 50 = 0")
@@ -134,31 +184,77 @@ def test_multimodal_stub_contract(spark):
         assert len(r["head_hex"]) == 16  # 8 bytes hex
 
 
-def test_spread_skips_redundant_payload_shuffle(spark):
-    """Round-9: an encode adapter already hash-spreads payload rows, so
-    a decode stage composed directly on it must NOT re-shuffle the fat
-    binary payloads (one Exchange end-to-end); any intermediate
-    transform drops the tag and the decode stage falls back to
-    spreading itself (safe direction — wide, never serial)."""
+_SPREAD_PAIRS = [
+    ("documents_as_wav_media", "decode_audio_features"),
+    ("documents_as_wav_media", "decode_audio_fingerprints"),
+    ("documents_as_wav_media", "audio_frame_features"),
+    ("documents_as_aiff_media", "decode_audio_features"),
+    ("documents_as_ppm_media", "decode_image_features"),
+    ("documents_as_ppm_media", "decode_dhash_features"),
+    ("documents_as_ppm_media", "resize_image_nn"),
+    ("documents_as_ppm_media", "extract_features"),
+    ("documents_as_ppm_media", "extract_features_arrow"),
+    ("documents_as_gif_media", "decode_image_features"),
+    ("documents_as_png_media", "decode_image_features"),
+    ("documents_as_tga_media", "decode_image_features"),
+    ("documents_as_flac_media", "decode_flac_features"),
+    ("documents_as_jpeg_media", "decode_jpeg_features"),
+    ("documents_as_avi_media", "decode_avi_signatures"),
+    ("documents_as_avi_media", "sample_avi_keyframes"),
+    ("documents_as_warc", "parse_warc_features"),
+]
+
+
+@pytest.mark.parametrize(
+    "encoder,decoder", _SPREAD_PAIRS, ids=[f"{e}-{d}" for e, d in _SPREAD_PAIRS]
+)
+def test_spread_skips_redundant_payload_shuffle(spark, encoder, decoder):
+    """An encoder already hash-spreads its payload rows, so a decoder
+    composed directly on it must NOT re-shuffle the binary payloads (one
+    Exchange end-to-end); any intermediate transform drops the mark and
+    the decoder falls back to spreading itself (wide, never serial)."""
+    from data_integration_project_spark.operators import warc as W
+
+    mod = W if encoder == "documents_as_warc" else M
+    encode, decode = getattr(mod, encoder), getattr(mod, decoder)
     docs = _docs(spark).limit(20)
 
-    direct = M.decode_audio_features(M.documents_as_wav_media(docs))
+    direct = decode(encode(docs))
     plan = direct._jdf.queryExecution().executedPlan().toString()
     # the limit contributes one SinglePartition exchange; the spread
     # shuffles are the hash-partitioned ones
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
     # .filter() is a narrow op but loses the marker -> fallback spread
-    filtered = M.decode_audio_features(
-        M.documents_as_wav_media(docs).filter("media_id >= 0")
-    )
+    filtered = decode(encode(docs).filter("media_id >= 0"))
     plan2 = filtered._jdf.queryExecution().executedPlan().toString()
     assert plan2.count("Exchange hashpartitioning") == 2, plan2
 
     # values identical either way
     a = sorted(map(tuple, direct.collect()))
     b = sorted(map(tuple, filtered.collect()))
-    assert a == b and len(a) == 20
+    assert a == b and a
+
+
+def test_size_probe_reads_catalyst_estimate(spark, caplog):
+    """python_stage sizes its width from Catalyst's estimate, read
+    through a private JVM path. If that path moves, the probe falls back
+    to full width; this test turns that silent fallback into a failure,
+    and checks that a fallback leaves a log record naming the error."""
+    import logging
+
+    from data_integration_project_spark import session
+
+    est = session._size_estimate(_docs(spark).limit(20))
+    assert est is not None and est > 0, (
+        "size probe failed: df._jdf.queryExecution().optimizedPlan().stats() "
+        "is no longer reachable on this Spark version"
+    )
+
+    session._log_probe_fallback.cache_clear()
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        assert session._size_estimate(object()) is None
+    assert "AttributeError" in caplog.text
 
 
 def test_decode_ppm_roundtrip_and_bmp():
