@@ -1,5 +1,6 @@
 """Full-pipeline orchestration — the reference's ``RUN_ALL_STEPS.py`` /
-``main.py`` drivers as one composable API.
+``main.py`` drivers as one composable API over the streaming inbox
+helpers (``streaming.pipeline``).
 
 Reference step → engine stage:
 
@@ -21,30 +22,34 @@ Reference step → engine stage:
    over the clean zone.
 
 A ``run_id`` scopes every output path (reference ``DB_{run_id}``).
-Each stage returns DataFrames/paths so callers can stop anywhere; the
-only materializations are the zone writes themselves.
+Each stage returns DataFrames/paths so callers can stop anywhere.
+Driver actions per stage: ingest runs one write per CSV, which also
+counts the good rows through an Observation; drain/validate runs one
+AvailableNow stream per entity, then counts its clean and error zones;
+the marts are lazy and run no action.
 """
 
 from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .functions.cleaning import transform_entity
 from .operators.entity_rules import ruleset_for
 from .operators.quality import reject_duplicates
-from .operators.reconcile import merged_view, source_counts
+from .operators.reconcile import source_counts
 from .sources.csv import (
     RAW_CSV_LAYOUTS,
     discover_csvs,
     read_entity_csv,
     with_line_numbers,
 )
-from .streaming.envelope import encode_envelope
-from .streaming.pipeline import ZonePaths, consume_inbox
+from .streaming.pipeline import ZonePaths, produce_to_inbox, run_inbox_pipeline
 
 #: natural key per entity for the ordered first-wins dedup (V2)
 DEDUP_KEYS: dict[str, list[str]] = {
@@ -66,27 +71,51 @@ def ingest_csv_dir(
     spark: SparkSession, data_dir: str, zones: ZonePaths, *, run_id: str, source: str = "csv"
 ) -> dict[str, int]:
     """STEP1: discover entity CSVs and publish envelope-wrapped rows to
-    the per-entity inbox. Corrupt CSV lines are forwarded raw — the
-    consumer dead-letters them (matching queue poison semantics)."""
+    the per-entity inbox. Malformed CSV lines are left out of the inbox
+    and of the returned counts."""
     counts: dict[str, int] = {}
     for item in discover_csvs(data_dir):
         entity = item["entity_type"]
         if entity is None:
             continue
-        # cache: Spark disallows predicates over ONLY the corrupt-record
-        # column of a raw CSV scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN)
-        raw = with_line_numbers(read_entity_csv(spark, item["file_path"], entity)).cache()
-        try:
-            ok = raw.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-            enveloped = encode_envelope(
-                ok, source=source, entity_type=entity, run_id=run_id, order_col="_line_no"
-            )
-            out = os.path.join(zones.inbox, entity)
-            enveloped.write.mode("append").text(out)
-            counts[entity] = counts.get(entity, 0) + ok.count()
-        finally:
-            raw.unpersist()  # both readers (write + count) are done
+        published = Observation()
+        ok = (
+            with_line_numbers(read_entity_csv(spark, item["file_path"], entity))
+            .filter(F.col("_corrupt_record").isNull())
+            .drop("_corrupt_record")
+            .observe(published, F.count(F.lit(1)).alias("rows"))
+        )
+        produce_to_inbox(
+            ok, zones, entity=entity, source=source, run_id=run_id, order_col="_line_no"
+        )
+        counts[entity] = counts.get(entity, 0) + published.get["rows"]
     return counts
+
+
+def _transform_validate_dedup(entity: str, df: DataFrame) -> DataFrame:
+    """Decoded raw CSV rows → canonical layout, validated by the entity
+    RuleSet, then ordered first-wins dedup where the entity is keyed.
+
+    Per-SOURCE validator routing (reference main.py:674-681): the inbox
+    carries the CSV feed, so mon rows get mon_csv_rules, which validate
+    the RAW layout (price string parseability, the category NAME) BEFORE
+    the transform; their _-prefixed verdict columns survive the
+    transform's metadata passthrough. Every other entity validates the
+    canonical post-transform layout."""
+    rules = ruleset_for(entity, source="csv")
+    if rules.entity == "mon_csv":
+        validated = transform_entity(entity, rules.validate(df))
+    else:
+        validated = rules.validate(transform_entity(entity, df))
+    keys = DEDUP_KEYS.get(entity)
+    if keys:
+        validated = reject_duplicates(
+            validated.drop("_is_valid"),
+            keys,
+            [F.col("_line_no").asc_nulls_last()],
+            f"duplicate {keys[0]}",
+        )
+    return validated
 
 
 def drain_and_validate(
@@ -95,86 +124,39 @@ def drain_and_validate(
     """STEP2+3+4 fused: per entity, drain the inbox exactly once
     (AvailableNow), transform to the canonical layout, validate with
     the entity RuleSet (+ ordered dedup where keyed), split into
-    clean/error parquet zones. Entities drain as independent streams —
-    on a cluster they run concurrently; here sequentially."""
-    results: dict[str, dict[str, int]] = {}
-    for entity in entities:
-        # per-SOURCE validator routing (reference main.py:674-681): the
-        # inbox carries the CSV feed, so mon rows get mon_csv_rules —
-        # which validate the RAW layout (price string parseability, the
-        # category NAME) BEFORE the transform; every other entity
-        # validates the canonical post-transform layout.
-        rules = ruleset_for(entity, source="csv")
-
-        # decode → transform happens inside the consumer's foreachBatch
-        # via a RuleSet whose validate() is applied around the transform;
-        # we wrap by subclassing-by-composition: consume_inbox validates
-        # the DECODED rows, so hand it a ruleset that sequences both.
-        class _TransformThenValidate:
-            def validate(self, df: DataFrame) -> DataFrame:
-                if rules.entity == "mon_csv":
-                    # validate raw, then transform; the verdict columns
-                    # are _-prefixed and survive the transform's
-                    # metadata passthrough
-                    validated = transform_entity(entity, rules.validate(df))
-                else:
-                    validated = rules.validate(transform_entity(entity, df))
-                keys = DEDUP_KEYS.get(entity)
-                if keys:
-                    validated = reject_duplicates(
-                        validated.drop("_is_valid"),
-                        keys,
-                        [F.col("_line_no").asc_nulls_last()],
-                        f"duplicate {keys[0]}",
-                    )
-                return validated
-
-        # the envelope payload is the RAW CSV layout (all strings);
-        # canonicalization happens in the transform inside the drain
-        from pyspark.sql import types as T
-
-        raw_payload = T.StructType(
-            [T.StructField(c, T.StringType()) for c in RAW_CSV_LAYOUTS[entity]]
-        )
-        q = consume_inbox(
+    clean/error parquet zones, and count both zones. Entities drain one
+    after another, each as its own checkpointed stream."""
+    return {
+        entity: run_inbox_pipeline(
             spark,
             zones,
             entity=entity,
-            data_schema=raw_payload,
-            ruleset=_TransformThenValidate(),  # duck-typed: only .validate used
+            # the envelope payload is the RAW CSV layout (all strings)
+            data_schema=T.StructType(
+                [T.StructField(c, T.StringType()) for c in RAW_CSV_LAYOUTS[entity]]
+            ),
+            validate=partial(_transform_validate_dedup, entity),
         )
-        q.awaitTermination()
-        counts = {}
-        for zone_name, path in (("clean", zones.clean), ("error", zones.error)):
-            try:
-                counts[zone_name] = spark.read.parquet(os.path.join(path, entity)).count()
-            except Exception:
-                counts[zone_name] = 0
-        results[entity] = counts
-    return results
+        for entity in entities
+    }
 
 
 def build_marts(
     spark: SparkSession, zones: ZonePaths, entities: list[str]
 ) -> dict[str, DataFrame]:
-    """Post-hoc layer: merged views (single-source runs union
-    trivially) + per-source count report over the clean zone — the
-    first marts the reference builds in SQL Server. DWH star builds
-    continue from these via operators.dwh."""
+    """Post-hoc layer: merged views (the clean zone's ``_source``
+    lineage becomes the merged view's ``source`` tag) + per-source count
+    report over the clean zone — the first marts the reference builds in
+    SQL Server. DWH star builds continue from these via operators.dwh."""
     marts: dict[str, DataFrame] = {}
     for entity in entities:
-        clean = spark.read.parquet(os.path.join(zones.clean, entity))
-        merged = merged_view({src: df for src, df in _by_source(clean)})
+        merged = spark.read.parquet(os.path.join(zones.clean, entity)).withColumnRenamed(
+            "_source", "source"
+        )
         merged.createOrReplaceTempView(f"{entity}_merged")
         marts[f"{entity}_merged"] = merged
         marts[f"{entity}_source_counts"] = source_counts(merged)
     return marts
-
-
-def _by_source(clean: DataFrame):
-    sources = [r["_source"] for r in clean.select("_source").distinct().collect()]
-    for s in sources:
-        yield s, clean.filter(F.col("_source") == s).drop("_source")
 
 
 def run_full_pipeline(

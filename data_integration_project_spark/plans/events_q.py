@@ -292,7 +292,7 @@ def streaming_inbox_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         zones,
         entity="customer",
         data_schema=schema,
-        ruleset=_stream_rules(),
+        validate=_stream_rules().validate,
     )
     return spark.createDataFrame(
         [(z, counts.get(z, 0)) for z in ("clean", "error")],

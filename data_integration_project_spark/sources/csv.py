@@ -76,7 +76,7 @@ def raw_schema(entity: str, corrupt_col: str = "_corrupt_record") -> T.StructTyp
 
 def read_entity_csv(spark: SparkSession, path: str, entity: str) -> DataFrame:
     """S1: permissive header CSV scan. Malformed lines land whole in
-    ``_corrupt_record`` (the caller routes them to the error zone —
+    ``_corrupt_record`` (the caller drops them before publishing —
     poison-row analogue) instead of failing the read. BOM is handled by
     the datasource (no utf-8-sig special-casing needed)."""
     return (

@@ -10,7 +10,6 @@ Mapping (SURVEY.md §2.10):
 - bounded drain of current queue depth (S9) → ``Trigger.AvailableNow``
 - manual ack / at-least-once              → checkpointed exactly-once
   (an upgrade the reference can't express)
-- prefetch backpressure                   → ``maxFilesPerTrigger``
 - poison message nack(requeue=False)      → corrupt rows routed to the
   error zone, stream keeps running
 - per-queue sequential dedup state (V2)   → explicit
@@ -23,13 +22,14 @@ validated micro-batch to its two zone sinks.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.quality import RuleSet
 from .envelope import decode_envelope, encode_envelope
 
 
@@ -80,32 +80,20 @@ def consume_inbox(
     *,
     entity: str,
     data_schema: T.StructType,
-    ruleset: RuleSet | None = None,
-    dedup_keys: list[str] | None = None,
-    max_files_per_trigger: int | None = None,
+    validate: Callable[[DataFrame], DataFrame] | None = None,
 ):
     """STEP2+3 consumer analogue (S9 + V1-V3 + K2/K3): stream the
     entity's inbox, decode envelopes, validate, split clean/error, and
     append both zones as parquet partitioned by run — one checkpointed
     query, ``Trigger.AvailableNow`` (drain what exists, then stop).
 
-    Returns the started StreamingQuery; callers ``awaitTermination()``.
-
-    ``dedup_keys`` first-wins dedup runs per micro-batch; splitting the
-    drain with ``max_files_per_trigger`` would let duplicate keys that
-    span batches through, silently diverging from the reference's
-    whole-drain seen_ids semantics — the combination is rejected (use
-    streaming.stateful.stateful_first_wins for cross-batch dedup).
+    ``validate`` maps the decoded rows to rows carrying ``_is_valid``
+    and an ``_errors`` array (a RuleSet's ``validate``, optionally
+    followed by first-wins dedup); without it every decoded row is
+    clean. Returns the started StreamingQuery; callers
+    ``awaitTermination()``.
     """
-    if dedup_keys and max_files_per_trigger:
-        raise ValueError(
-            "dedup_keys with max_files_per_trigger would dedup only within "
-            "each micro-batch; use stateful_first_wins for cross-batch dedup"
-        )
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(os.path.join(zones.inbox, entity))
+    raw = spark.readStream.format("text").load(os.path.join(zones.inbox, entity))
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         # the micro-batch feeds three sinks (clean/error/poison) —
@@ -118,17 +106,8 @@ def consume_inbox(
                 F.lit("unparseable envelope").alias("_errors"),
             )
             rows = decoded.filter(~F.col("_corrupt")).drop("value", "_corrupt")
-            if ruleset is not None:
-                validated = ruleset.validate(rows)
-                if dedup_keys:
-                    from ..operators.quality import reject_duplicates
-
-                    validated = reject_duplicates(
-                        validated.drop("_is_valid"),
-                        dedup_keys,
-                        [F.col("_line_no").asc_nulls_last()],
-                    )
-                validated = validated.persist()
+            if validate is not None:
+                validated = validate(rows).persist()
                 cached.append(validated)
                 clean = validated.filter("_is_valid").drop("_errors", "_is_valid")
                 error = (
@@ -163,26 +142,22 @@ def run_inbox_pipeline(
     *,
     entity: str,
     data_schema: T.StructType,
-    ruleset: RuleSet | None = None,
-    dedup_keys: list[str] | None = None,
+    validate: Callable[[DataFrame], DataFrame] | None = None,
 ) -> dict[str, int]:
     """Drain the inbox to completion and report zone row counts —
-    the bounded consume-exactly-queue-depth loop (main.py:643-730)."""
-    q = consume_inbox(
-        spark,
-        zones,
-        entity=entity,
-        data_schema=data_schema,
-        ruleset=ruleset,
-        dedup_keys=dedup_keys,
-    )
-    q.awaitTermination()
+    the bounded consume-exactly-queue-depth loop (main.py:643-730).
+    A zone that was never written counts 0; any other read failure
+    raises."""
+    consume_inbox(
+        spark, zones, entity=entity, data_schema=data_schema, validate=validate
+    ).awaitTermination()
     counts = {}
     for zone_name, path in (("clean", zones.clean), ("error", zones.error)):
-        full = os.path.join(path, entity)
         try:
-            counts[zone_name] = spark.read.parquet(full).count()
-        except Exception:
+            counts[zone_name] = spark.read.parquet(os.path.join(path, entity)).count()
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             counts[zone_name] = 0
     return counts
 

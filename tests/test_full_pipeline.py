@@ -22,6 +22,7 @@ _CSVS = {
         "2,Binh9 Tran,0987654321,Da Nang,binh@example.vn",  # digit in name
         "3,Chi Le,123,Hue,chi@example.vn",  # short phone
         "4,Dung Pham,0911222333,Hue,dung@",  # bad email
+        "9,Broken",  # too few columns → malformed, dropped at ingest
     ],
     "loaisanpham.csv": [
         "id,ten_loai,mo_ta",
@@ -50,11 +51,12 @@ _CSVS = {
 
 
 @pytest.fixture()
-def pipeline_dirs():
+def pipeline_dirs(request):
+    csvs = getattr(request, "param", _CSVS)
     root = tempfile.mkdtemp(prefix="full_pipe_")
     data = os.path.join(root, "data")
     os.makedirs(data)
-    for name, lines in _CSVS.items():
+    for name, lines in csvs.items():
         with open(os.path.join(data, name), "w", encoding="utf-8-sig") as f:
             f.write("\n".join(lines) + "\n")
     yield root, data
@@ -84,6 +86,15 @@ def test_run_full_pipeline(spark, pipeline_dirs):
     assert row["customer_id"] == "1" and row["_source"] == "csv"
     assert row["_run_id"] == "t1" and row["_line_no"] == 1
 
+    # the malformed CSV line reaches no zone (clean, error or poison)
+    for zone in (run.zones.clean, run.zones.error):
+        for entity in os.listdir(zone):
+            landed = spark.read.format(
+                "json" if entity.endswith("_poison") else "parquet"
+            ).load(os.path.join(zone, entity))
+            text = F.concat_ws("|", *[F.col(c).cast("string") for c in landed.columns])
+            assert landed.filter(text.contains("Broken")).count() == 0, entity
+
     # error zone carries the reject reasons
     err = spark.read.parquet(os.path.join(run.zones.error, "khach_hang"))
     msgs = " ;; ".join(r["_errors"] for r in err.collect())
@@ -106,3 +117,20 @@ def test_run_full_pipeline(spark, pipeline_dirs):
     }
     assert hist["khach_hang"] == (5, 1, 4)
     assert hist["dat_hang"] == (3, 1, 2)
+
+
+@pytest.mark.parametrize(
+    "pipeline_dirs",
+    [{"loaisanpham.csv": ["id,ten_loai,mo_ta", "1,,Blank", "2,,Also blank"]}],
+    indirect=True,
+)
+def test_run_full_pipeline_all_rows_rejected(spark, pipeline_dirs):
+    """Every row of the entity fails validation: the clean zone is
+    empty, and the marts still build an empty merged view."""
+    root, data = pipeline_dirs
+    run = run_full_pipeline(spark, data, os.path.join(root, "out"), run_id="t2")
+
+    assert run.ingested == {"loai_mon": 2}
+    assert run.zone_counts == {"loai_mon": {"clean": 0, "error": 2}}
+    merged = spark.table("loai_mon_merged")
+    assert "source" in merged.columns and merged.count() == 0

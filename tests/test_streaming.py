@@ -77,16 +77,35 @@ def test_inbox_pipeline_validates_and_is_exactly_once(spark, zones, sf_small):
     produce_to_inbox(cust, zones, entity="customer", source="csv", run_id="r1",
                      order_col="c_custkey")
     counts = run_inbox_pipeline(
-        spark, zones, entity="customer", data_schema=TESTDATA["customer"], ruleset=rules
+        spark, zones, entity="customer", data_schema=TESTDATA["customer"],
+        validate=rules.validate,
     )
     assert counts == {"clean": total - n_bad, "error": n_bad}
     # drain again with the SAME checkpoint: no new input → no duplicates
     counts2 = run_inbox_pipeline(
-        spark, zones, entity="customer", data_schema=TESTDATA["customer"], ruleset=rules
+        spark, zones, entity="customer", data_schema=TESTDATA["customer"],
+        validate=rules.validate,
     )
     assert counts2 == counts
     err = spark.read.parquet(os.path.join(zones.error, "customer"))
     assert err.filter(F.col("_errors") == "c_acctbal must be > 0").count() == n_bad
+
+
+def test_inbox_pipeline_raises_on_unreadable_zone(spark, zones, sf_small):
+    """Only a zone that was never written counts 0: an unreadable part
+    file in the clean zone fails the count instead of reading as empty."""
+    cust = spark.read.schema(TESTDATA["customer"]).parquet(
+        f"{sf_small}/customer.parquet"
+    ).limit(10)
+    produce_to_inbox(cust, zones, entity="customer", source="csv", run_id="r1")
+    clean = os.path.join(zones.clean, "customer")
+    os.makedirs(clean)
+    with open(os.path.join(clean, "part-00000-garbage.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        run_inbox_pipeline(
+            spark, zones, entity="customer", data_schema=TESTDATA["customer"]
+        )
 
 
 def test_streaming_window_counts_match_batch(spark, sf_small):
