@@ -27,17 +27,30 @@ Driver actions per stage: ingest runs one write per CSV, which also
 counts the good rows through an Observation; drain/validate runs one
 AvailableNow stream per entity, then counts its clean and error zones;
 the marts are lazy and run no action.
+
+Ingest and drain/validate run one task per entity, all entities at
+once: the batch is bound by driver latency (planning, py4j, stream
+start-up), not by executor work, so independent entities overlap it.
+Nothing is shared between entities — each has its own inbox, checkpoint
+and zone directories, and its dedup state lives inside its own stream.
+Within an entity, ingest writes its files one after another, because
+appends to one ``inbox/{entity}`` directory share the commit protocol's
+``_temporary/`` staging and collide when they run at once.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from .functions.cleaning import transform_entity
 from .operators.entity_rules import ruleset_for
@@ -67,29 +80,55 @@ class PipelineRun:
     zone_counts: dict[str, dict[str, int]] = field(default_factory=dict)
 
 
+_R = TypeVar("_R")
+
+
+def _per_entity(
+    spark: SparkSession, entities: list[str], task: Callable[[str], _R]
+) -> dict[str, _R]:
+    """Run ``task(entity)`` for every entity at once, one thread each,
+    and return the results in ``entities`` order. Every task carries the
+    caller's job group, local properties and tags. All tasks finish
+    before this returns; then the first failing entity's exception (in
+    ``entities`` order) is re-raised."""
+    if not entities:
+        return {}
+    with ThreadPoolExecutor(len(entities)) as pool:
+        # wrap per task: each wrapper holds its own copy of the local
+        # properties, which Spark mutates while a query runs
+        futures = {e: pool.submit(inheritable_thread_target(spark)(task), e) for e in entities}
+    return {e: f.result() for e, f in futures.items()}
+
+
 def ingest_csv_dir(
     spark: SparkSession, data_dir: str, zones: ZonePaths, *, run_id: str, source: str = "csv"
 ) -> dict[str, int]:
     """STEP1: discover entity CSVs and publish envelope-wrapped rows to
     the per-entity inbox. Malformed CSV lines are left out of the inbox
-    and of the returned counts."""
-    counts: dict[str, int] = {}
+    and of the returned counts. Entities publish concurrently; one
+    entity's files publish in discovery order, one after another."""
+    files: dict[str, list[str]] = {}
     for item in discover_csvs(data_dir):
-        entity = item["entity_type"]
-        if entity is None:
-            continue
-        published = Observation()
-        ok = (
-            with_line_numbers(read_entity_csv(spark, item["file_path"], entity))
-            .filter(F.col("_corrupt_record").isNull())
-            .drop("_corrupt_record")
-            .observe(published, F.count(F.lit(1)).alias("rows"))
-        )
-        produce_to_inbox(
-            ok, zones, entity=entity, source=source, run_id=run_id, order_col="_line_no"
-        )
-        counts[entity] = counts.get(entity, 0) + published.get["rows"]
-    return counts
+        if item["entity_type"] is not None:
+            files.setdefault(item["entity_type"], []).append(item["file_path"])
+
+    def publish(entity: str) -> int:
+        rows = 0
+        for path in files[entity]:
+            published = Observation()
+            ok = (
+                with_line_numbers(read_entity_csv(spark, path, entity))
+                .filter(F.col("_corrupt_record").isNull())
+                .drop("_corrupt_record")
+                .observe(published, F.count(F.lit(1)).alias("rows"))
+            )
+            produce_to_inbox(
+                ok, zones, entity=entity, source=source, run_id=run_id, order_col="_line_no"
+            )
+            rows += published.get["rows"]
+        return rows
+
+    return _per_entity(spark, list(files), publish)
 
 
 def _transform_validate_dedup(entity: str, df: DataFrame) -> DataFrame:
@@ -124,10 +163,17 @@ def drain_and_validate(
     """STEP2+3+4 fused: per entity, drain the inbox exactly once
     (AvailableNow), transform to the canonical layout, validate with
     the entity RuleSet (+ ordered dedup where keyed), split into
-    clean/error parquet zones, and count both zones. Entities drain one
-    after another, each as its own checkpointed stream."""
-    return {
-        entity: run_inbox_pipeline(
+    clean/error parquet zones, and count both zones.
+
+    Entities drain concurrently, each as its own checkpointed stream.
+    That is safe because an entity's inbox, checkpoint and zone paths
+    are its own, and its first-wins dedup state lives in its own
+    stream. If an entity fails, every other entity's stream still runs
+    to its end; then the first failing entity's exception is raised, so
+    no stream is left running."""
+
+    def drain(entity: str) -> dict[str, int]:
+        return run_inbox_pipeline(
             spark,
             zones,
             entity=entity,
@@ -137,8 +183,8 @@ def drain_and_validate(
             ),
             validate=partial(_transform_validate_dedup, entity),
         )
-        for entity in entities
-    }
+
+    return _per_entity(spark, entities, drain)
 
 
 def build_marts(

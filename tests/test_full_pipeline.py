@@ -8,11 +8,18 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
 
-from data_integration_project_spark.pipeline import run_full_pipeline
+from data_integration_project_spark import pipeline
+from data_integration_project_spark.pipeline import (
+    ZonePaths,
+    drain_and_validate,
+    ingest_csv_dir,
+    run_full_pipeline,
+)
 
 _CSVS = {
     "khachhang.csv": [
@@ -134,3 +141,75 @@ def test_run_full_pipeline_all_rows_rejected(spark, pipeline_dirs):
     assert run.zone_counts == {"loai_mon": {"clean": 0, "error": 2}}
     merged = spark.table("loai_mon_merged")
     assert "source" in merged.columns and merged.count() == 0
+
+
+def test_ingest_same_entity_files_append_in_order(spark):
+    """Files of one entity share the ``inbox/{entity}`` directory, whose
+    commit staging cannot take two appends at once: they publish one
+    after another inside the entity's task, with no lost rows."""
+    root = tempfile.mkdtemp(prefix="same_entity_")
+    try:
+        data = os.path.join(root, "data")
+        os.makedirs(data)
+        header = "id,ho_ten,sdt,thanh_pho,email"
+        for f, name in enumerate(("khachhang.csv", "customer.csv", "khach_hang2.csv")):
+            rows = [
+                f"{f * 200 + i},Khach Hang,0912345678,Ha Noi,kh{i}@example.vn"
+                for i in range(1, 201)
+            ]
+            with open(os.path.join(data, name), "w", encoding="utf-8") as fh:
+                fh.write("\n".join([header, *rows]) + "\n")
+        for trial in range(3):
+            zones = ZonePaths(os.path.join(root, f"run_{trial}"))
+            assert ingest_csv_dir(spark, data, zones, run_id=f"t{trial}") == {"khach_hang": 600}
+            inbox = spark.read.text(os.path.join(zones.inbox, "khach_hang"))
+            assert inbox.count() == 600, trial
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_drain_failure_waits_for_every_stream(spark, pipeline_dirs, monkeypatch):
+    """One entity's stream fails: its exception reaches the caller only
+    after every other entity has drained, and no stream keeps running."""
+    root, data = pipeline_dirs
+    zones = ZonePaths(os.path.join(root, "out", "run_fail"))
+    ingested = ingest_csv_dir(spark, data, zones, run_id="fail")
+
+    real = pipeline._transform_validate_dedup
+
+    def failing(entity, df):
+        if entity == "mon":
+            raise RuntimeError("planted failure in mon")
+        return real(entity, df)
+
+    monkeypatch.setattr(pipeline, "_transform_validate_dedup", failing)
+    with pytest.raises(Exception, match="planted failure in mon"):
+        drain_and_validate(spark, zones, sorted(ingested))
+
+    assert spark.streams.active == []
+    for zone, n in ((zones.clean, 1), (zones.error, 4)):
+        assert spark.read.parquet(os.path.join(zone, "khach_hang")).count() == n
+
+
+def test_ingest_tasks_inherit_job_group(spark, pipeline_dirs):
+    """Ingest's per-entity threads run their jobs under the caller's job
+    group, so ``cancelJobGroup`` reaches them."""
+    root, data = pipeline_dirs
+    sc = spark.sparkContext
+    sc.setJobGroup("g-ingest", "ingest under a job group")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            ingest_csv_dir(spark, data, ZonePaths(os.path.join(root, "out")), run_id="jg")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sc.statusTracker().getJobIdsForGroup("g-ingest")
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+
+
+@pytest.mark.parametrize("pipeline_dirs", [{"notes.csv": ["a,b", "1,2"]}], indirect=True)
+def test_run_full_pipeline_no_recognised_csv(spark, pipeline_dirs):
+    root, data = pipeline_dirs
+    run = run_full_pipeline(spark, data, os.path.join(root, "out"), run_id="t3")
+    assert run.ingested == {} and run.zone_counts == {}
