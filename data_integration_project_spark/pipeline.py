@@ -106,7 +106,9 @@ def ingest_csv_dir(
     """STEP1: discover entity CSVs and publish envelope-wrapped rows to
     the per-entity inbox. Malformed CSV lines are left out of the inbox
     and of the returned counts. Entities publish concurrently; one
-    entity's files publish in discovery order, one after another."""
+    entity's files publish in discovery order, one after another.
+    Beside them, the ICU case mappings the drain's rules need are
+    initialised (:func:`_load_case_mappings`)."""
     files: dict[str, list[str]] = {}
     for item in discover_csvs(data_dir):
         if item["entity_type"] is not None:
@@ -128,7 +130,22 @@ def ingest_csv_dir(
             rows += published.get["rows"]
         return rows
 
-    return _per_entity(spark, list(files), publish)
+    with ThreadPoolExecutor(1) as pool:
+        case_mappings = pool.submit(inheritable_thread_target(spark)(_load_case_mappings), spark)
+        counts = _per_entity(spark, list(files), publish)
+    case_mappings.result()
+    return counts
+
+
+def _load_case_mappings(spark: SparkSession) -> None:
+    """Initialise Spark's ICU case mapping. The first ``lower``,
+    ``upper`` or ``initcap`` in a JVM fills a table over every Unicode
+    code point in a class initializer (~2 s on an idle 4-core box, more
+    under load), and every task that evaluates one waits for it. The
+    entity rules use all three and ingest uses none, so ingest runs this
+    beside its entity tasks and a fresh process's drain does not wait.
+    It evaluates over a local relation on the driver: no job."""
+    spark.sql("SELECT lower(c) FROM VALUES ('A') AS t(c)").collect()
 
 
 def _transform_validate_dedup(entity: str, df: DataFrame) -> DataFrame:
@@ -219,26 +236,46 @@ def run_full_pipeline(
     return run
 
 
+_HISTORY_SCHEMA = T.StructType(
+    [
+        T.StructField("run_id", T.StringType()),
+        T.StructField("entity", T.StringType()),
+        T.StructField("ingested", T.LongType()),
+        T.StructField("clean", T.LongType()),
+        T.StructField("error", T.LongType()),
+    ]
+)
+
+
 def record_run_history(spark: SparkSession, out_root: str, run: PipelineRun) -> None:
     """A4 across runs: append one row per (run, entity) with ingest and
     zone counts to a queryable history table — the reference keeps this
     only in per-run log files (pipeline_run_*.log); here it is a
     partitioned parquet table any monitoring query can scan."""
     rows = [
-        (
-            run.run_id,
-            entity,
-            run.ingested.get(entity, 0),
-            counts.get("clean", 0),
-            counts.get("error", 0),
+        F.struct(
+            *map(
+                F.lit,
+                (
+                    run.run_id,
+                    entity,
+                    run.ingested.get(entity, 0),
+                    counts.get("clean", 0),
+                    counts.get("error", 0),
+                ),
+            )
         )
         for entity, counts in sorted(run.zone_counts.items())
     ]
     if not rows:
         return
-    df = spark.createDataFrame(
-        rows, "run_id string, entity string, ingested long, clean long, error long"
-    ).withColumn("recorded_at", F.current_timestamp())
+    # literal rows, not createDataFrame: a local Python list becomes a
+    # Python RDD, and writing it starts Python workers
+    df = (
+        spark.range(1, numPartitions=1)
+        .select(F.inline(F.array(*rows).cast(T.ArrayType(_HISTORY_SCHEMA))))
+        .withColumn("recorded_at", F.current_timestamp())
+    )
     df.write.mode("append").partitionBy("run_id").parquet(
         os.path.join(out_root, "run_history")
     )

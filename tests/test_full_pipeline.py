@@ -213,3 +213,54 @@ def test_run_full_pipeline_no_recognised_csv(spark, pipeline_dirs):
     root, data = pipeline_dirs
     run = run_full_pipeline(spark, data, os.path.join(root, "out"), run_id="t3")
     assert run.ingested == {} and run.zone_counts == {}
+
+
+def test_run_history_rows_and_nullable_schema(spark):
+    """History rows are built from literals on the JVM, not from a
+    Python list; the table keeps the nullable layout it had when it was
+    written from ``createDataFrame`` rows."""
+    import pyarrow.parquet as pq
+
+    root = tempfile.mkdtemp(prefix="run_history_")
+    try:
+        run = pipeline.PipelineRun(
+            run_id="h1",
+            zones=ZonePaths(root),
+            ingested={"khach_hang": 5, "mon": 3},
+            zone_counts={"mon": {"clean": 1, "error": 2}, "khach_hang": {"clean": 1, "error": 4}},
+        )
+        pipeline.record_run_history(spark, root, run)
+        hist = pipeline.run_history(spark, root)
+        assert sorted(
+            (r["run_id"], r["entity"], r["ingested"], r["clean"], r["error"])
+            for r in hist.collect()
+        ) == [("h1", "khach_hang", 5, 1, 4), ("h1", "mon", 3, 1, 2)]
+        assert hist.filter(F.col("recorded_at").isNull()).count() == 0
+        (part,) = [
+            os.path.join(base, f)
+            for base, _, files in os.walk(os.path.join(root, "run_history"))
+            for f in files
+            if f.endswith(".parquet")
+        ]
+        schema = pq.read_schema(part)
+        assert [(f.name, str(f.type), f.nullable) for f in schema if f.name != "recorded_at"] == [
+            ("entity", "string", True),
+            ("ingested", "int64", True),
+            ("clean", "int64", True),
+            ("error", "int64", True),
+        ]
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_case_mapping_preload_runs_no_job(spark):
+    """Ingest initialises the ICU case mappings beside its entity tasks;
+    that runs on the driver and adds no Spark job to the flow."""
+    sc = spark.sparkContext
+    sc.setJobGroup("g-case-mappings", "case mapping preload")
+    try:
+        pipeline._load_case_mappings(spark)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("g-case-mappings")) == []
