@@ -73,42 +73,15 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-def _ordered_names() -> list[str]:
-    """Catalog order = red-at-latest-sampling first, then
-    never-driver-sampled, then the green remainder.
-
-    The driver validates a ~50-query prefix of ``queries()`` per round;
-    leading with queries whose LATEST sampling was red puts every fix
-    in front of the very next round's sample (a fixed query would
-    otherwise wait out the whole never-sampled rotation before its
-    green row could land — VERDICT r7 items 1 and 5), and after those,
-    queries absent from every past CORRECTNESS_r{N}.json (both sets
-    frozen in :mod:`.driver_sampled`, regenerated per round by
-    ``tools/gen_driver_sampled.py``) rotate fresh evidence into the
-    sample. Within each group, registry (definition) order is kept —
-    deterministic for a given build.
-    """
-    from .driver_sampled import DRIVER_RED_LATEST, DRIVER_SAMPLED
-
-    red = [n for n in REGISTRY if n in DRIVER_RED_LATEST]
-    fresh = [n for n in REGISTRY if n not in DRIVER_SAMPLED]
-    rest = [
-        n
-        for n in REGISTRY
-        if n in DRIVER_SAMPLED and n not in DRIVER_RED_LATEST
-    ]
-    return red + fresh + rest
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name].fn for name in _ordered_names()}
+    return {name: spec.fn for name, spec in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        name: REGISTRY[name].oracle
-        for name in _ordered_names()
-        if REGISTRY[name].oracle is not None
+        name: spec.oracle
+        for name, spec in REGISTRY.items()
+        if spec.oracle is not None
     }
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import Window
 from ..operators.quality import RuleSet, not_blank, positive
 from ..streaming.pipeline import ZonePaths, produce_to_inbox, run_inbox_pipeline, streaming_window_counts
 from .catalog import SQL_DSUM, dsum, query, run_tmpdir, t
+from .customer_model import customer_features, features_sql, gd_step, gd_steps_sql
 
 # ---------------------------------------------------------------------------
 # Tumbling windows (same code path batch/streaming)
@@ -5437,44 +5438,15 @@ def events_sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _online_logreg_oracle_sql(n_batches: int) -> str:
     """Unrolled ONLINE gradient descent: batch i = customers with
     custkey % n == i, updated with the weights left by batch i-1."""
-    parts = [
-        f"""feats AS MATERIALIZED (
-      SELECT o_custkey % {n_batches} AS batch,
-             least(COUNT(*), 20) - 5 AS x1,
-             least(CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT), 50) - 30
-               AS x2,
-             CASE WHEN CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT)
-                       + COUNT(*) >= 35
-                  THEN 1 ELSE 0 END AS y
-      FROM orders GROUP BY o_custkey
-    ),
-    it0 AS (SELECT CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1,
-                   CAST(0 AS BIGINT) AS w2)"""
-    ]
-    s = (
-        "least(greatest(CAST(floor((w.w0 + w.w1 * f.x1 + w.w2 * f.x2)"
-        " / 4.0) AS BIGINT) + 500000, 0), 1000000)"
-    )
-    for r in range(1, n_batches + 1):
-        parts.append(
-            f"""it{r} AS MATERIALIZED (
-      SELECT
-        w.w0 - CAST(floor(SUM(({s}) - f.y * 1000000) / (8.0 * COUNT(*))) AS BIGINT) AS w0,
-        w.w1 - CAST(floor(SUM(f.x1 * (({s}) - f.y * 1000000)) / (8.0 * COUNT(*))) AS BIGINT) AS w1,
-        w.w2 - CAST(floor(SUM(f.x2 * (({s}) - f.y * 1000000)) / (8.0 * COUNT(*))) AS BIGINT) AS w2
-      FROM feats f CROSS JOIN it{r - 1} w
-      WHERE f.batch = {r - 1}
-      GROUP BY w.w0, w.w1, w.w2
-    )"""
-        )
     selects = [
         f"SELECT CAST({r - 1} AS BIGINT) AS batch_id, w0, w1, w2 FROM it{r}"
         for r in range(1, n_batches + 1)
     ]
+    steps = gd_steps_sql(
+        n_batches, divisor=8, step_filter=lambda i: f"f.batch = {i}"
+    )
     return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + "\n    "
+        f"WITH {features_sql(f'o_custkey % {n_batches} AS batch')},\n    {steps}\n    "
         + "\n    UNION ALL\n    ".join(selects)
     )
 
@@ -5496,33 +5468,10 @@ def orders_streaming_online_logreg(spark: SparkSession, sf_dir: str) -> DataFram
     Scale shape: each step is one aggregate over one micro-batch; the
     model is 3 integers of driver state (checkpointable alongside the
     stream for restart-safe training)."""
-    import math
     import os
-    import tempfile
-    import uuid
 
-    feats = (
-        t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            (F.least(F.count(F.lit(1)), F.lit(20)) - 5).alias("x1"),
-            (
-                F.least(
-                    F.floor(F.avg("o_totalprice") / 10000.0).cast("long"),
-                    F.lit(50),
-                )
-                - 30
-            ).alias("x2"),
-            F.when(
-                F.floor(F.avg("o_totalprice") / 10000.0).cast("long")
-                + F.count(F.lit(1))
-                >= 35,
-                1,
-            )
-            .otherwise(0)
-            .alias("y"),
-        )
-        .withColumn("batch", (F.col("o_custkey") % 5).cast("int"))
+    feats = customer_features(
+        spark, sf_dir, (F.col("o_custkey") % 5).cast("int").alias("batch")
     )
     d = run_tmpdir("online_lr_")
     src_dir = os.path.join(d, "stream")
@@ -5541,24 +5490,9 @@ def orders_streaming_online_logreg(spark: SparkSession, sf_dir: str) -> DataFram
     state = {"w": [0, 0, 0], "rows": []}
 
     def train_batch(bdf, batch_id):
-        w = state["w"]
-        z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-        sgm = F.least(
-            F.greatest(F.floor(z / 4.0).cast("long") + F.lit(500000), F.lit(0)),
-            F.lit(1000000),
-        )
-        err = sgm - F.col("y") * F.lit(1000000)
-        g = bdf.select(
-            F.sum(err).alias("g0"),
-            F.sum(F.col("x1") * err).alias("g1"),
-            F.sum(F.col("x2") * err).alias("g2"),
-            F.count(F.lit(1)).alias("n"),
-            F.min("batch").alias("b"),
-        ).collect()[0]
-        n = int(g["n"])
-        w2 = [w[j] - int(math.floor(float(g[f"g{j}"]) / (8.0 * n))) for j in range(3)]
-        state["w"] = w2
-        state["rows"].append((int(g["b"]), w2[0], w2[1], w2[2]))
+        w, g = gd_step(bdf, state["w"], F.min("batch").alias("b"), divisor=8)
+        state["w"] = w
+        state["rows"].append((int(g["b"]), *w))
 
     q = (
         stream.writeStream.foreachBatch(train_batch)

@@ -17,6 +17,24 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import SQL_DSUM, dsum, query, run_tmpdir, run_tmpfile, t
+from .customer_model import (
+    ISOTONIC_SQL,
+    LINEAR_SCORE_SQL,
+    best_split,
+    best_split_sql,
+    decile_bins,
+    decile_bins_sql,
+    deciles,
+    features_sql,
+    fit_gd,
+    gd_step,
+    gd_steps_sql,
+    hard_sigmoid,
+    hard_sigmoid_sql,
+    isotonic_fit,
+    linear_score,
+    persisted_features,
+)
 
 
 def _view(spark: SparkSession, sf_dir: str, name: str, alias: str) -> None:
@@ -7545,32 +7563,26 @@ def orders_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("append")
         .save()
     )
-    # Round-10 (guide §6 — input split size): split_size was a fixed
-    # 4 KB, planned against r9's 32 smaller files it meant ~5 byte-range
-    # splits per ~20 KB file (~160 Python-task partitions for a 21k-row
-    # read) — the round's one real local regression (1.54 → 2.70 s, and
-    # 3.73 s on the 8-core leg: pure per-task overhead). Derive the
-    # split size from the actual file size instead — half the largest
-    # file — so every file still plans >=2 byte ranges (the mid-file
-    # sync-marker resynchronization path stays exercised at EVERY
-    # scale) while the split count tracks the data instead of a 4 KB
-    # constant.
-    import os as _os
-
+    # Split size is half the SMALLEST file, so every file plans >= 2
+    # byte ranges and the mid-file sync-marker resynchronization path
+    # runs at every scale, while the split count tracks the data rather
+    # than a fixed size (a fixed 4 KB gave ~160 Python tasks for a
+    # 21k-row read).
     sizes = [
         _os.path.getsize(_os.path.join(d, n))
         for n in _os.listdir(d)
         if n.endswith(".avro")
     ]
-    split_size = max(1024, max(sizes, default=4096) // 2)
+    split_size = max(1024, min(sizes, default=4096) // 2)
     back = (
         spark.read.format("pyavro")
         .option("path", d)
         .option("split_size", str(split_size))
         .load()
     )
-    # the split planner must actually fan out (several byte ranges/file)
-    assert back.rdd.getNumPartitions() >= 2, "avro reader did not split"
+    assert back.rdd.getNumPartitions() >= 2 * len(sizes), (
+        "avro reader planned fewer than 2 byte ranges for some file"
+    )
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.count(F.when(F.col("prio").isNull(), 1)).alias("n_null_prio"),
@@ -7581,56 +7593,19 @@ def orders_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _logreg_oracle_sql(n_iters: int) -> str:
-    """Unroll hard-sigmoid logistic GD into materialized CTEs: one
-    (scored, weight-update, accuracy) block per iteration. All state is
-    integer micro-units; the only floating step is one IEEE division
-    per aggregate, floored — identical in both engines."""
-    feats = """feats AS MATERIALIZED (
-      SELECT o_custkey,
-             least(COUNT(*), 20) - 5 AS x1,
-             least(CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT), 50) - 30
-               AS x2,
-             CASE WHEN CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT)
-                       + COUNT(*) >= 35
-                  THEN 1 ELSE 0 END AS y
-      FROM orders GROUP BY o_custkey
-    ),
-    it0 AS (SELECT CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1,
-                   CAST(0 AS BIGINT) AS w2)"""
-    parts = [feats]
-    for r in range(1, n_iters + 1):
-        p = r - 1
-        s = (
-            f"least(greatest(CAST(floor((w.w0 + w.w1 * f.x1 + w.w2 * f.x2)"
-            f" / 4.0) AS BIGINT) + 500000, 0), 1000000)"
-        )
-        parts.append(
-            f"""it{r} AS MATERIALIZED (
-      SELECT
-        w.w0 - CAST(floor(SUM(({s}) - f.y * 1000000) / (32.0 * COUNT(*))) AS BIGINT) AS w0,
-        w.w1 - CAST(floor(SUM(f.x1 * (({s}) - f.y * 1000000)) / (32.0 * COUNT(*))) AS BIGINT) AS w1,
-        w.w2 - CAST(floor(SUM(f.x2 * (({s}) - f.y * 1000000)) / (32.0 * COUNT(*))) AS BIGINT) AS w2
-      FROM feats f CROSS JOIN it{p} w
-      GROUP BY w.w0, w.w1, w.w2
-    )"""
-        )
-    selects = []
-    for r in range(1, n_iters + 1):
-        s = (
-            f"least(greatest(CAST(floor((w.w0 + w.w1 * f.x1 + w.w2 * f.x2)"
-            f" / 4.0) AS BIGINT) + 500000, 0), 1000000)"
-        )
-        selects.append(
-            f"""SELECT CAST({r} AS INTEGER) AS iter, w.w0 AS w0, w.w1 AS w1, w.w2 AS w2,
+    """Unroll hard-sigmoid logistic GD into materialized CTEs, then one
+    training-accuracy select per iteration under its weights."""
+    s = hard_sigmoid_sql()
+    selects = [
+        f"""SELECT CAST({r} AS INTEGER) AS iter, w.w0 AS w0, w.w1 AS w1, w.w2 AS w2,
            CAST(SUM(CASE WHEN ({s}) >= 500000 THEN f.y ELSE 1 - f.y END) AS BIGINT)
              AS n_correct,
            CAST(COUNT(*) AS BIGINT) AS n_rows
     FROM feats f CROSS JOIN it{r} w GROUP BY w.w0, w.w1, w.w2"""
-        )
+        for r in range(1, n_iters + 1)
+    ]
     return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + "\n    "
+        f"WITH {features_sql()},\n    {gd_steps_sql(n_iters)}\n    "
         + "\n    UNION ALL\n    ".join(selects)
     )
 
@@ -7654,83 +7629,27 @@ def customers_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver between passes exactly like BPE merge rules and k-means
     centroids. At 100 TB each pass is one scan, no shuffle beyond the
     3-value aggregate."""
-    feats = (
-        t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            (F.least(F.count(F.lit(1)), F.lit(20)) - 5).alias("x1"),
-            (
-                F.least(
-                    F.floor(F.avg("o_totalprice") / 10000.0).cast("long"),
-                    F.lit(50),
-                )
-                - 30
-            ).alias("x2"),
-            F.when(
-                F.floor(F.avg("o_totalprice") / 10000.0).cast("long")
-                + F.count(F.lit(1))
-                >= 35,
-                1,
-            )
-            .otherwise(0)
-            .alias("y"),
-        )
-        .persist()
-    )
-    import math
-
     from ..session import iterative_loop
 
-    def _sig(w):
-        # hard sigmoid in integer micro-units under weight vector w
-        z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-        return F.least(
-            F.greatest(F.floor(z / 4.0).cast("long") + F.lit(500000), F.lit(0)),
-            F.lit(1000000),
-        )
-
-    def _grad_cols(s):
-        err = s - F.col("y") * F.lit(1000000)
-        return [
-            F.sum(err).alias("g0"),
-            F.sum(F.col("x1") * err).alias("g1"),
-            F.sum(F.col("x2") * err).alias("g2"),
-        ]
-
-    try:
-        # Round-9 optimization (guide §1.2 — fewer passes, fewer
-        # actions): iteration i's training-accuracy scan and iteration
-        # i+1's gradient scan both evaluate under the SAME weight
-        # vector (the one produced by update i), so they fuse into ONE
-        # aggregate; the row count rides the initial gradient pass.
-        # 17 actions -> 9, and at scale 17 full scans -> 9. Values are
-        # identical by construction (same expressions, same weights).
-        # The 8 fixed-shape single-row aggregates run under
-        # iterative_loop (AQE re-planning jobs are pure overhead here).
-        w = [0, 0, 0]
-        rows = []
-        first = feats.select(
-            F.count(F.lit(1)).alias("n"), *_grad_cols(_sig(w))
-        ).collect()[0]
+    rows = []
+    with persisted_features(spark, sf_dir) as feats:
+        # Iteration i's training-accuracy scan and iteration i+1's
+        # gradient scan both run under the weights of update i, so they
+        # share one aggregate: 9 actions for 8 iterations. The 8
+        # fixed-shape single-row aggregates run under iterative_loop
+        # (AQE re-planning jobs are pure overhead here).
+        w, first = gd_step(feats, [0, 0, 0])
         n = first["n"]
-        g = [first["g0"], first["g1"], first["g2"]]
         with iterative_loop(spark, n):
             for it in range(1, 9):
-                w = [
-                    w[j] - int(math.floor(float(g[j]) / (32.0 * n)))
-                    for j in range(3)
-                ]
-                s = _sig(w)
-                res = feats.select(
-                    F.sum(
-                        F.when(s >= 500000, F.col("y")).otherwise(1 - F.col("y"))
-                    ).alias("c"),
-                    *_grad_cols(s),
-                ).collect()[0]
-                rows.append((it, w[0], w[1], w[2], int(res["c"]), n))
-                g = [res["g0"], res["g1"], res["g2"]]
-    finally:
-        feats.unpersist()
+                correct = F.sum(
+                    F.when(hard_sigmoid(w) >= 500000, F.col("y")).otherwise(
+                        1 - F.col("y")
+                    )
+                ).alias("c")
+                w_next, res = gd_step(feats, w, correct)
+                rows.append((it, *w, int(res["c"]), n))
+                w = w_next
     return spark.createDataFrame(
         rows,
         "iter int, w0 long, w1 long, w2 long, n_correct long, n_rows long",
@@ -8074,57 +7993,11 @@ def orders_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TREE_FEATS_SQL = """feats AS MATERIALIZED (
-      SELECT least(COUNT(*), 20) - 5 AS x1,
-             least(CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT), 50) - 30
-               AS x2,
-             CASE WHEN CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT)
-                       + COUNT(*) >= 35
-                  THEN 1 ELSE 0 END AS y
-      FROM orders GROUP BY o_custkey
-    )"""
-
-_TREE_SCORE_SQL = (
-    "CAST((pl*pl + (nl-pl)*(nl-pl)) * (n-nl)"
-    " + ((pos-pl)*(pos-pl) + ((n-nl)-(pos-pl))*((n-nl)-(pos-pl))) * nl"
-    " AS DOUBLE) / (nl * (n - nl))"
-)
-
-
-def _tree_split_sql(src: str, name: str) -> str:
-    """One histogram-trick split search over CTE ``src``: per-feature
-    value histograms, cumulative left-side counts by window, exact
-    integer score numerator/denominator, one IEEE division for the
-    argmax ordering (both engines round it identically), tie-break
-    (feature, value)."""
-    return f"""h_{name} AS (
-      SELECT f, v, COUNT(*) AS n_all, CAST(SUM(y) AS BIGINT) AS n_pos
-      FROM (SELECT 'x1' AS f, x1 AS v, y FROM {src}
-            UNION ALL SELECT 'x2', x2, y FROM {src})
-      GROUP BY f, v
-    ),
-    c_{name} AS (
-      SELECT f, v,
-             SUM(n_all) OVER (PARTITION BY f ORDER BY v) AS nl,
-             SUM(n_pos) OVER (PARTITION BY f ORDER BY v) AS pl,
-             SUM(n_all) OVER (PARTITION BY f) AS n,
-             SUM(n_pos) OVER (PARTITION BY f) AS pos,
-             MAX(v) OVER (PARTITION BY f) AS vmax
-      FROM h_{name}
-    ),
-    split_{name} AS MATERIALIZED (
-      SELECT f, v, nl, pl, n - nl AS nr, pos - pl AS pr, n, pos
-      FROM c_{name} WHERE v < vmax AND nl > 0 AND nl < n
-      ORDER BY {_TREE_SCORE_SQL} DESC, f, v
-      LIMIT 1
-    )"""
-
-
 _TREE_ORACLE = (
     "WITH "
-    + _TREE_FEATS_SQL
+    + features_sql()
     + ",\n    "
-    + _tree_split_sql("feats", "root")
+    + best_split_sql("feats", "root")
     + """,
     feats_l AS MATERIALIZED (
       SELECT feats.* FROM feats CROSS JOIN split_root r
@@ -8135,9 +8008,9 @@ _TREE_ORACLE = (
       WHERE (r.f = 'x1' AND x1 > r.v) OR (r.f = 'x2' AND x2 > r.v)
     ),
     """
-    + _tree_split_sql("feats_l", "l")
+    + best_split_sql("feats_l", "l")
     + ",\n    "
-    + _tree_split_sql("feats_r", "r")
+    + best_split_sql("feats_r", "r")
     + """
     SELECT 'root' AS node, f AS feature, CAST(v AS BIGINT) AS threshold,
            CAST(n AS BIGINT) AS n_node, CAST(pos AS BIGINT) AS n_pos
@@ -8179,61 +8052,8 @@ def customers_decision_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold, node population) and the four leaf populations with
     their positive counts — so a learner that mis-buckets a single row
     or breaks a tie differently fails the hash."""
-    feats = (
-        t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            (F.least(F.count(F.lit(1)), F.lit(20)) - 5).alias("x1"),
-            (
-                F.least(
-                    F.floor(F.avg("o_totalprice") / 10000.0).cast("long"),
-                    F.lit(50),
-                )
-                - 30
-            ).alias("x2"),
-            F.when(
-                F.floor(F.avg("o_totalprice") / 10000.0).cast("long")
-                + F.count(F.lit(1))
-                >= 35,
-                1,
-            )
-            .otherwise(0)
-            .alias("y"),
-        )
-        .persist()
-    )
-
-    def best_split(df):
-        best = None
-        for feat in ("x1", "x2"):
-            h = sorted(
-                (int(r["v"]), int(r["n_all"]), int(r["n_pos"]))
-                for r in df.groupBy(F.col(feat).alias("v"))
-                .agg(
-                    F.count(F.lit(1)).alias("n_all"),
-                    F.sum("y").alias("n_pos"),
-                )
-                .collect()
-            )
-            n = sum(a for _, a, _ in h)
-            pos = sum(p for _, _, p in h)
-            nl = pl = 0
-            for v, a, p in h[:-1]:
-                nl += a
-                pl += p
-                nr, pr = n - nl, pos - pl
-                if nl == 0 or nr == 0:
-                    continue
-                num = (pl * pl + (nl - pl) ** 2) * nr + (
-                    pr * pr + (nr - pr) ** 2
-                ) * nl
-                key = (-(num / (nl * nr)), feat, v)
-                if best is None or key < best[:3]:
-                    best = (key[0], feat, v, nl, pl, nr, pr, n, pos)
-        return best
-
-    try:
-        rows = []
+    rows = []
+    with persisted_features(spark, sf_dir) as feats:
         root = best_split(feats)
         if root is not None:
             _, f, v, nl, pl, nr, pr, n, pos = root
@@ -8248,8 +8068,6 @@ def customers_decision_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((tag, cf, cv, cn, cpos))
                 rows.append((tag + "L", None, None, cnl, cpl))
                 rows.append((tag + "R", None, None, cnr, cpr))
-    finally:
-        feats.unpersist()
     return spark.createDataFrame(
         rows,
         "node string, feature string, threshold long, n_node long, n_pos long",
@@ -8373,21 +8191,11 @@ def _cv_oracle_sql() -> str:
     """Three generated (split, eval) blocks — train on folds != f via
     the histogram-trick split search, evaluate on fold = f with
     majority-label leaves (tie predicts 0)."""
-    feats = """feats AS MATERIALIZED (
-      SELECT least(COUNT(*), 20) - 5 AS x1,
-             least(CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT), 50) - 30
-               AS x2,
-             CASE WHEN CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT)
-                       + COUNT(*) >= 35
-                  THEN 1 ELSE 0 END AS y,
-             CAST(o_custkey % 3 AS INTEGER) AS fold
-      FROM orders GROUP BY o_custkey
-    )"""
-    parts = [feats]
+    parts = [features_sql("CAST(o_custkey % 3 AS INTEGER) AS fold")]
     selects = []
     for f in range(3):
         parts.append(
-            _tree_split_sql(f"(SELECT * FROM feats WHERE fold <> {f}) tr{f}", f"f{f}")
+            best_split_sql(f"(SELECT * FROM feats WHERE fold <> {f}) tr{f}", f"f{f}")
         )
         parts.append(
             f"""eval_f{f} AS (
@@ -8430,62 +8238,9 @@ def customers_cv_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     K folds = K passes, no shuffle beyond the tiny histograms. The same
     harness wraps any of the trainer queries
     ([[customers_decision_tree]], [[customers_logreg_gd]])."""
-    feats = (
-        t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            (F.least(F.count(F.lit(1)), F.lit(20)) - 5).alias("x1"),
-            (
-                F.least(
-                    F.floor(F.avg("o_totalprice") / 10000.0).cast("long"),
-                    F.lit(50),
-                )
-                - 30
-            ).alias("x2"),
-            F.when(
-                F.floor(F.avg("o_totalprice") / 10000.0).cast("long")
-                + F.count(F.lit(1))
-                >= 35,
-                1,
-            )
-            .otherwise(0)
-            .alias("y"),
-            (F.col("o_custkey") % 3).cast("int").alias("fold"),
-        )
-        .persist()
-    )
-
-    def best_split(df):
-        best = None
-        for feat in ("x1", "x2"):
-            h = sorted(
-                (int(r["v"]), int(r["n_all"]), int(r["n_pos"]))
-                for r in df.groupBy(F.col(feat).alias("v"))
-                .agg(
-                    F.count(F.lit(1)).alias("n_all"),
-                    F.sum("y").alias("n_pos"),
-                )
-                .collect()
-            )
-            n = sum(a for _, a, _ in h)
-            pos = sum(p for _, _, p in h)
-            nl = pl = 0
-            for v, a, p in h[:-1]:
-                nl += a
-                pl += p
-                nr, pr = n - nl, pos - pl
-                if nl == 0 or nr == 0:
-                    continue
-                num = (pl * pl + (nl - pl) ** 2) * nr + (
-                    pr * pr + (nr - pr) ** 2
-                ) * nl
-                key = (-(num / (nl * nr)), feat, v)
-                if best is None or key < best[:3]:
-                    best = (key[0], feat, v, nl, pl, nr, pr, n, pos)
-        return best
-
     rows = []
-    try:
+    fold_col = (F.col("o_custkey") % 3).cast("int").alias("fold")
+    with persisted_features(spark, sf_dir, fold_col) as feats:
         for fold in range(3):
             train = feats.filter(F.col("fold") != fold)
             test = feats.filter(F.col("fold") == fold)
@@ -8507,8 +8262,6 @@ def customers_cv_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append(
                 (fold, f, v, n, int(ev["n_test"]), int(ev["test_correct"]))
             )
-    finally:
-        feats.unpersist()
     return spark.createDataFrame(
         rows,
         "fold int, feature string, threshold long, n_train long, "
@@ -8970,36 +8723,19 @@ def lineitem_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_isotonic_calibration",
-    oracle="""
-    WITH ranked AS (
-      SELECT (o_orderstatus = 'F') AS y,
-             ROW_NUMBER() OVER (ORDER BY o_totalprice, o_orderkey) AS rn,
-             COUNT(*) OVER () AS n
-      FROM orders
-    ),
-    bins AS MATERIALIZED (
-      SELECT 1 + ((rn - 1) * 10) // n AS b,
-             COUNT(*) AS nb,
-             CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS sb
-      FROM ranked GROUP BY 1
-    ),
-    grid AS (
-      SELECT i.b AS i, j.b AS j, k.b AS k,
-             (SUM(m.sb) * 1000000) // SUM(m.nb) AS a
-      FROM bins i
-      JOIN bins j ON j.b <= i.b
-      JOIN bins k ON k.b >= i.b
-      JOIN bins m ON m.b BETWEEN j.b AND k.b
-      GROUP BY 1, 2, 3
-    ),
-    mins AS (SELECT i, j, MIN(a) AS am FROM grid GROUP BY i, j)
+    oracle=f"""
+    WITH {decile_bins_sql(
+        "(SELECT CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y,"
+        " o_totalprice, o_orderkey FROM orders)",
+        "o_totalprice, o_orderkey",
+    )},
+    {ISOTONIC_SQL}
     SELECT CAST(b.b AS INTEGER) AS decile,
            CAST(b.nb AS BIGINT) AS n_orders,
            CAST(b.sb AS BIGINT) AS n_events,
            CAST((b.sb * 1000000) // b.nb AS BIGINT) AS raw_rate_micro,
-           CAST(iso.v AS BIGINT) AS iso_rate_micro
-    FROM bins b
-    JOIN (SELECT i, MAX(am) AS v FROM mins GROUP BY i) iso ON iso.i = b.b
+           CAST(iso.iso_p AS BIGINT) AS iso_rate_micro
+    FROM bins b JOIN iso ON iso.b = b.b
     """,
 )
 def orders_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9020,42 +8756,21 @@ def orders_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     count; the minimax runs on the 10-row summary (10^3 grid) — at
     100 TB the calibration cost is constant once the histogram
     exists."""
-    o = t(spark, sf_dir, "orders")
-    w = Window.orderBy("o_totalprice", "o_orderkey")
-    ranked = o.select(
-        (F.col("o_orderstatus") == "F").alias("y"),
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
+    o = t(spark, sf_dir, "orders").select(
+        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
+        "o_totalprice",
+        "o_orderkey",
     )
-    bins = (
-        ranked.groupBy(
-            (1 + ((F.col("rn") - 1) * 10) / F.col("n")).cast("long").alias("b")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("nb"),
-            F.sum(F.when(F.col("y"), 1).otherwise(0)).alias("sb"),
-        )
-        .localCheckpoint(eager=True)
+    bins = decile_bins(deciles(o, "o_totalprice", "o_orderkey")).localCheckpoint(
+        eager=True
     )
-    i = bins.select(F.col("b").alias("i"))
-    j = bins.select(F.col("b").alias("j"))
-    k = bins.select(F.col("b").alias("k"))
-    m = bins.select(F.col("b").alias("mb"), "nb", "sb")
-    grid = (
-        i.join(j, F.col("j") <= F.col("i"))
-        .join(k, F.col("k") >= F.col("i"))
-        .join(m, (F.col("mb") >= F.col("j")) & (F.col("mb") <= F.col("k")))
-        .groupBy("i", "j", "k")
-        .agg(F.expr("(sum(sb) * 1000000) div sum(nb)").alias("a"))
-    )
-    mins = grid.groupBy("i", "j").agg(F.min("a").alias("am"))
-    iso = mins.groupBy("i").agg(F.max("am").alias("v"))
+    iso = isotonic_fit(bins)
     return bins.join(iso, bins["b"] == iso["i"]).select(
         F.col("b").cast("int").alias("decile"),
         F.col("nb").cast("long").alias("n_orders"),
         F.col("sb").cast("long").alias("n_events"),
         F.expr("(sb * 1000000) div nb").cast("long").alias("raw_rate_micro"),
-        F.col("v").cast("long").alias("iso_rate_micro"),
+        F.col("iso_p").cast("long").alias("iso_rate_micro"),
     )
 
 
@@ -9198,41 +8913,15 @@ def orders_avro_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ipw_oracle_sql(n_iters: int) -> str:
     """Propensity model (hard-sigmoid GD on treatment) unrolled, then
     Horvitz-Thompson inverse-propensity means in exact integers."""
-    parts = [
-        """feats AS MATERIALIZED (
-      SELECT least(COUNT(*), 20) - 5 AS x1,
-             least(CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT), 50) - 30
-               AS x2,
-             MAX(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS tr,
-             CAST(SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                  AS BIGINT) AS y_cents
-      FROM orders GROUP BY o_custkey
-    ),
-    it0 AS (SELECT CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1,
-                   CAST(0 AS BIGINT) AS w2)"""
-    ]
-    s = (
-        "least(greatest(CAST(floor((w.w0 + w.w1 * f.x1 + w.w2 * f.x2)"
-        " / 4.0) AS BIGINT) + 500000, 0), 1000000)"
+    feats = features_sql(
+        "MAX(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS tr",
+        "CAST(SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))"
+        " AS BIGINT) AS y_cents",
     )
-    for r in range(1, n_iters + 1):
-        parts.append(
-            f"""it{r} AS MATERIALIZED (
-      SELECT
-        w.w0 - CAST(floor(SUM(({s}) - f.tr * 1000000) / (32.0 * COUNT(*))) AS BIGINT) AS w0,
-        w.w1 - CAST(floor(SUM(f.x1 * (({s}) - f.tr * 1000000)) / (32.0 * COUNT(*))) AS BIGINT) AS w1,
-        w.w2 - CAST(floor(SUM(f.x2 * (({s}) - f.tr * 1000000)) / (32.0 * COUNT(*))) AS BIGINT) AS w2
-      FROM feats f CROSS JOIN it{r - 1} w
-      GROUP BY w.w0, w.w1, w.w2
-    )"""
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + f""",
+    return f"""WITH {feats},
+    {gd_steps_sql(n_iters, label="tr")},
     scored AS (
-      SELECT f.tr, f.y_cents,
-             least(greatest({s}, 10000), 990000) AS p
+      SELECT f.tr, f.y_cents, {hard_sigmoid_sql(10000, 990000)} AS p
       FROM feats f CROSS JOIN it{n_iters} w
     ),
     sums AS (
@@ -9254,7 +8943,6 @@ def _ipw_oracle_sql(n_iters: int) -> str:
            CAST(cy // cw AS BIGINT) AS mu_control_cents,
            CAST(ty // tw - cy // cw AS BIGINT) AS ate_cents
     FROM sums"""
-    )
 
 
 @query("customers_ipw_ate", oracle=_ipw_oracle_sql(3))
@@ -9276,58 +8964,18 @@ def customers_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: training = 3 scans with 3-value aggregates; scoring +
     the two weighted means = one more scan. No shuffle wider than the
     per-customer groupBy that builds the feature table."""
-    import math
-
-    feats = (
-        t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            (F.least(F.count(F.lit(1)), F.lit(20)) - 5).alias("x1"),
-            (
-                F.least(
-                    F.floor(F.avg("o_totalprice") / 10000.0).cast("long"),
-                    F.lit(50),
-                )
-                - 30
-            ).alias("x2"),
-            F.max(
-                F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
-            ).alias("tr"),
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-            ).alias("y_cents"),
-        )
-        .persist()
-    )
-    try:
-        n = feats.count()
-        w = [0, 0, 0]
-        for _ in range(3):
-            z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-            sgm = F.least(
-                F.greatest(
-                    F.floor(z / 4.0).cast("long") + F.lit(500000), F.lit(0)
-                ),
-                F.lit(1000000),
-            )
-            err = sgm - F.col("tr") * F.lit(1000000)
-            g = feats.select(
-                F.sum(err).alias("g0"),
-                F.sum(F.col("x1") * err).alias("g1"),
-                F.sum(F.col("x2") * err).alias("g2"),
-            ).collect()[0]
-            w = [w[j] - int(math.floor(float(g[j]) / (32.0 * n))) for j in range(3)]
-        z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-        p = F.least(
-            F.greatest(
-                F.floor(z / 4.0).cast("long") + F.lit(500000), F.lit(10000)
-            ),
-            F.lit(990000),
-        )
+    tr = F.max(
+        F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
+    ).alias("tr")
+    y_cents = F.sum(
+        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
+    ).alias("y_cents")
+    with persisted_features(spark, sf_dir, tr, y_cents) as feats:
+        w = fit_gd(feats, 3, label="tr")
         scored = feats.select(
             "tr",
             "y_cents",
-            p.alias("p"),
+            hard_sigmoid(w, 10000, 990000).alias("p"),
         ).select(
             "tr",
             "y_cents",
@@ -9355,8 +9003,6 @@ def customers_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("ty") / F.col("tw")) - F.floor(F.col("cy") / F.col("cw"))
             ).cast("long").alias("ate_cents"),
         ).localCheckpoint(eager=True)
-    finally:
-        feats.unpersist()
     return out
 
 
@@ -9364,63 +9010,23 @@ def _gains_oracle_sql() -> str:
     """Three unrolled training iterations (the customers_logreg_gd
     recurrence), then total-order decile ranking with exact-integer
     capture and lift."""
-    parts = [
-        """feats AS MATERIALIZED (
-      SELECT least(COUNT(*), 20) - 5 AS x1,
-             least(CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT), 50) - 30
-               AS x2,
-             CASE WHEN CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT)
-                       + COUNT(*) >= 35
-                  THEN 1 ELSE 0 END AS y
-      FROM orders GROUP BY o_custkey
-    ),
-    it0 AS (SELECT CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1,
-                   CAST(0 AS BIGINT) AS w2)"""
-    ]
-    s = (
-        "least(greatest(CAST(floor((w.w0 + w.w1 * f.x1 + w.w2 * f.x2)"
-        " / 4.0) AS BIGINT) + 500000, 0), 1000000)"
+    scored = (
+        f"(SELECT f.y, f.x1, f.x2, {LINEAR_SCORE_SQL} AS z"
+        " FROM feats f CROSS JOIN it3 w)"
     )
-    for r in range(1, 4):
-        parts.append(
-            f"""it{r} AS MATERIALIZED (
-      SELECT
-        w.w0 - CAST(floor(SUM(({s}) - f.y * 1000000) / (32.0 * COUNT(*))) AS BIGINT) AS w0,
-        w.w1 - CAST(floor(SUM(f.x1 * (({s}) - f.y * 1000000)) / (32.0 * COUNT(*))) AS BIGINT) AS w1,
-        w.w2 - CAST(floor(SUM(f.x2 * (({s}) - f.y * 1000000)) / (32.0 * COUNT(*))) AS BIGINT) AS w2
-      FROM feats f CROSS JOIN it{r - 1} w
-      GROUP BY w.w0, w.w1, w.w2
-    )"""
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + """,
-    scored AS (
-      SELECT f.y,
-             ROW_NUMBER() OVER (ORDER BY w.w0 + w.w1 * f.x1 + w.w2 * f.x2 DESC,
-                                f.x1, f.x2, f.y) AS rn,
-             COUNT(*) OVER () AS n,
-             SUM(f.y) OVER () AS pos
-      FROM feats f CROSS JOIN it3 w
-    ),
-    agg AS (
-      SELECT 1 + ((rn - 1) * 10) // n AS decile,
-             COUNT(*) AS n_d, CAST(SUM(y) AS BIGINT) AS pos_d,
-             MAX(n) AS n, MAX(pos) AS pos
-      FROM scored GROUP BY 1
-    )
-    SELECT CAST(decile AS INTEGER) AS decile,
-           CAST(n_d AS BIGINT) AS n_rows,
-           CAST(pos_d AS BIGINT) AS n_pos,
-           CAST((SUM(pos_d) OVER (ORDER BY decile) * 1000000) // MAX(pos) OVER ()
+    return f"""WITH {features_sql()},
+    {gd_steps_sql(3)},
+    {decile_bins_sql(scored, "z DESC, x1, x2, y")}
+    SELECT CAST(b AS INTEGER) AS decile,
+           CAST(nb AS BIGINT) AS n_rows,
+           CAST(sb AS BIGINT) AS n_pos,
+           CAST((SUM(sb) OVER (ORDER BY b) * 1000000) // SUM(sb) OVER ()
                 AS BIGINT) AS cum_capture_micro,
-           CAST((SUM(pos_d) OVER (ORDER BY decile) * MAX(n) OVER () * 1000000)
-                // (SUM(n_d) OVER (ORDER BY decile) * MAX(pos) OVER ())
+           CAST((SUM(sb) OVER (ORDER BY b) * SUM(nb) OVER () * 1000000)
+                // (SUM(nb) OVER (ORDER BY b) * SUM(sb) OVER ())
                 AS BIGINT) AS cum_lift_micro
-    FROM agg
+    FROM bins
     """
-    )
 
 
 @query("customers_gains_lift", oracle=_gains_oracle_sql())
@@ -9440,159 +9046,43 @@ def customers_gains_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: 3 training scans + one rank (a total-order sort is
     inherent to decile assignment — the RangePartitioner pattern is
     the 100 TB form) + windowed cumulative sums over 10 rows."""
-    feats = (
-        t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            (F.least(F.count(F.lit(1)), F.lit(20)) - 5).alias("x1"),
-            (
-                F.least(
-                    F.floor(F.avg("o_totalprice") / 10000.0).cast("long"),
-                    F.lit(50),
-                )
-                - 30
-            ).alias("x2"),
-            F.when(
-                F.floor(F.avg("o_totalprice") / 10000.0).cast("long")
-                + F.count(F.lit(1))
-                >= 35,
-                1,
-            )
-            .otherwise(0)
-            .alias("y"),
-        )
-        .persist()
-    )
-    try:
-        import math
-
-        n = feats.count()
-        w = [0, 0, 0]
-        for _ in range(3):
-            z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-            sgm = F.least(
-                F.greatest(
-                    F.floor(z / 4.0).cast("long") + F.lit(500000), F.lit(0)
-                ),
-                F.lit(1000000),
-            )
-            err = sgm - F.col("y") * F.lit(1000000)
-            g = feats.select(
-                F.sum(err).alias("g0"),
-                F.sum(F.col("x1") * err).alias("g1"),
-                F.sum(F.col("x2") * err).alias("g2"),
-            ).collect()[0]
-            w = [w[j] - int(math.floor(float(g[j]) / (32.0 * n))) for j in range(3)]
-        from pyspark.sql import Window as W
-
-        z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-        scored = feats.select(
-            "y",
-            F.row_number()
-            .over(W.orderBy(z.desc(), "x1", "x2", "y"))
-            .alias("rn"),
-            F.count(F.lit(1)).over(W.partitionBy()).alias("n"),
-            F.sum("y").over(W.partitionBy()).alias("pos"),
-        )
-        agg = (
-            scored.groupBy(
-                (1 + ((F.col("rn") - 1) * 10) / F.col("n"))
-                .cast("long")
-                .alias("decile")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_d"),
-                F.sum("y").alias("pos_d"),
-                F.max("n").alias("n"),
-                F.max("pos").alias("pos"),
-            )
-        )
-        wd = W.orderBy("decile")
-        out = agg.select(
-            F.col("decile").cast("int").alias("decile"),
-            F.col("n_d").cast("long").alias("n_rows"),
-            F.col("pos_d").cast("long").alias("n_pos"),
+    with persisted_features(spark, sf_dir) as feats:
+        w = fit_gd(feats, 3)
+        scored = feats.select("y", "x1", "x2", linear_score(w).alias("z"))
+        bins = decile_bins(deciles(scored, F.desc("z"), "x1", "x2", "y"))
+        out = bins.select(
+            F.col("b").cast("int").alias("decile"),
+            F.col("nb").cast("long").alias("n_rows"),
+            F.col("sb").cast("long").alias("n_pos"),
             F.expr(
-                "(sum(pos_d) OVER (ORDER BY decile) * 1000000) div max(pos) OVER ()"
+                "(sum(sb) OVER (ORDER BY b) * 1000000) div sum(sb) OVER ()"
             ).cast("long").alias("cum_capture_micro"),
             F.expr(
-                "(sum(pos_d) OVER (ORDER BY decile) * max(n) OVER () * 1000000)"
-                " div (sum(n_d) OVER (ORDER BY decile) * max(pos) OVER ())"
+                "(sum(sb) OVER (ORDER BY b) * sum(nb) OVER () * 1000000)"
+                " div (sum(nb) OVER (ORDER BY b) * sum(sb) OVER ())"
             ).cast("long").alias("cum_lift_micro"),
         ).localCheckpoint(eager=True)
-    finally:
-        feats.unpersist()
     return out
 
 
 def _brier_oracle_sql() -> str:
     """Train 3 logreg iterations, bin raw scores into deciles, fit
     isotonic (minimax) over the bins, and compare Brier sums."""
-    parts = [
-        """feats AS MATERIALIZED (
-      SELECT least(COUNT(*), 20) - 5 AS x1,
-             least(CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT), 50) - 30
-               AS x2,
-             CASE WHEN CAST(floor(AVG(o_totalprice) / 10000.0) AS BIGINT)
-                       + COUNT(*) >= 35
-                  THEN 1 ELSE 0 END AS y
-      FROM orders GROUP BY o_custkey
-    ),
-    it0 AS (SELECT CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1,
-                   CAST(0 AS BIGINT) AS w2)"""
-    ]
-    s = (
-        "least(greatest(CAST(floor((w.w0 + w.w1 * f.x1 + w.w2 * f.x2)"
-        " / 4.0) AS BIGINT) + 500000, 0), 1000000)"
+    scored = (
+        f"(SELECT f.y, f.x1, f.x2, {hard_sigmoid_sql()} AS p"
+        " FROM feats f CROSS JOIN it3 w)"
     )
-    for r in range(1, 4):
-        parts.append(
-            f"""it{r} AS MATERIALIZED (
-      SELECT
-        w.w0 - CAST(floor(SUM(({s}) - f.y * 1000000) / (32.0 * COUNT(*))) AS BIGINT) AS w0,
-        w.w1 - CAST(floor(SUM(f.x1 * (({s}) - f.y * 1000000)) / (32.0 * COUNT(*))) AS BIGINT) AS w1,
-        w.w2 - CAST(floor(SUM(f.x2 * (({s}) - f.y * 1000000)) / (32.0 * COUNT(*))) AS BIGINT) AS w2
-      FROM feats f CROSS JOIN it{r - 1} w
-      GROUP BY w.w0, w.w1, w.w2
-    )"""
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + f""",
-    scored AS MATERIALIZED (
-      SELECT f.y, ({s}) AS p,
-             ROW_NUMBER() OVER (ORDER BY ({s}), f.x1, f.x2, f.y) AS rn,
-             COUNT(*) OVER () AS n
-      FROM feats f CROSS JOIN it3 w
-    ),
-    bins AS MATERIALIZED (
-      SELECT 1 + ((rn - 1) * 10) // n AS b, COUNT(*) AS nb,
-             CAST(SUM(y) AS BIGINT) AS sb
-      FROM scored GROUP BY 1
-    ),
-    grid AS (
-      SELECT i.b AS i, (SUM(m.sb) * 1000000) // SUM(m.nb) AS a, j.b AS j, k.b AS k
-      FROM bins i
-      JOIN bins j ON j.b <= i.b
-      JOIN bins k ON k.b >= i.b
-      JOIN bins m ON m.b BETWEEN j.b AND k.b
-      GROUP BY i.b, j.b, k.b
-    ),
-    iso AS MATERIALIZED (
-      SELECT i AS b, MAX(am) AS iso_p FROM (
-        SELECT i, j, MIN(a) AS am FROM grid GROUP BY i, j)
-      GROUP BY i
-    )
-    SELECT CAST(MAX(s2.n) AS BIGINT) AS n,
-           CAST(SUM((s2.p - s2.y * 1000000) * (s2.p - s2.y * 1000000))
+    return f"""WITH {features_sql()},
+    {gd_steps_sql(3)},
+    {decile_bins_sql(scored, "p, x1, x2, y")},
+    {ISOTONIC_SQL}
+    SELECT CAST(MAX(r.n) AS BIGINT) AS n,
+           CAST(SUM((r.p - r.y * 1000000) * (r.p - r.y * 1000000))
                 AS BIGINT) AS brier_raw_sum,
-           CAST(SUM((iso.iso_p - s2.y * 1000000) * (iso.iso_p - s2.y * 1000000))
+           CAST(SUM((iso.iso_p - r.y * 1000000) * (iso.iso_p - r.y * 1000000))
                 AS BIGINT) AS brier_cal_sum
-    FROM (SELECT y, p, n, 1 + ((rn - 1) * 10) // n AS b FROM scored) s2
-    JOIN iso ON iso.b = s2.b
+    FROM ranked r JOIN iso ON iso.b = r.b
     """
-    )
 
 
 @query("customers_brier_calibration", oracle=_brier_oracle_sql())
@@ -9612,86 +9102,13 @@ def customers_brier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: training is 3 scans; scoring + binning is one
     total-order rank; the isotonic fit runs on the 10-row bin summary;
     the Brier sums are one joined aggregate."""
-    import math
-
-    feats = (
-        t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            (F.least(F.count(F.lit(1)), F.lit(20)) - 5).alias("x1"),
-            (
-                F.least(
-                    F.floor(F.avg("o_totalprice") / 10000.0).cast("long"),
-                    F.lit(50),
-                )
-                - 30
-            ).alias("x2"),
-            F.when(
-                F.floor(F.avg("o_totalprice") / 10000.0).cast("long")
-                + F.count(F.lit(1))
-                >= 35,
-                1,
-            )
-            .otherwise(0)
-            .alias("y"),
-        )
-        .persist()
-    )
-    try:
-        n = feats.count()
-        w = [0, 0, 0]
-        for _ in range(3):
-            z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-            sgm = F.least(
-                F.greatest(
-                    F.floor(z / 4.0).cast("long") + F.lit(500000), F.lit(0)
-                ),
-                F.lit(1000000),
-            )
-            err = sgm - F.col("y") * F.lit(1000000)
-            g = feats.select(
-                F.sum(err).alias("g0"),
-                F.sum(F.col("x1") * err).alias("g1"),
-                F.sum(F.col("x2") * err).alias("g2"),
-            ).collect()[0]
-            w = [w[j] - int(math.floor(float(g[j]) / (32.0 * n))) for j in range(3)]
-        from pyspark.sql import Window as W
-
-        z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-        p = F.least(
-            F.greatest(F.floor(z / 4.0).cast("long") + F.lit(500000), F.lit(0)),
-            F.lit(1000000),
-        )
-        scored = feats.select(
-            "y",
-            p.alias("p"),
-            F.row_number().over(W.orderBy(p, "x1", "x2", "y")).alias("rn"),
-            F.count(F.lit(1)).over(W.partitionBy()).alias("n"),
-        ).withColumn(
-            "b", (1 + ((F.col("rn") - 1) * 10) / F.col("n")).cast("long")
-        ).localCheckpoint(eager=True)
-        bins = scored.groupBy("b").agg(
-            F.count(F.lit(1)).alias("nb"), F.sum("y").alias("sb")
-        )
-        i = bins.select(F.col("b").alias("i"))
-        jj = bins.select(F.col("b").alias("j"))
-        k = bins.select(F.col("b").alias("k"))
-        m = bins.select(F.col("b").alias("mb"), "nb", "sb")
-        grid = (
-            i.join(jj, F.col("j") <= F.col("i"))
-            .join(k, F.col("k") >= F.col("i"))
-            .join(m, (F.col("mb") >= F.col("j")) & (F.col("mb") <= F.col("k")))
-            .groupBy("i", "j", "k")
-            .agg(F.expr("(sum(sb) * 1000000) div sum(nb)").alias("a"))
-        )
-        iso = (
-            grid.groupBy("i", "j")
-            .agg(F.min("a").alias("am"))
-            .groupBy("i")
-            .agg(F.max("am").alias("iso_p"))
-        )
+    with persisted_features(spark, sf_dir) as feats:
+        w = fit_gd(feats, 3)
+        scored = feats.select("y", "x1", "x2", hard_sigmoid(w).alias("p"))
+        ranked = deciles(scored, "p", "x1", "x2", "y").localCheckpoint(eager=True)
+        iso = isotonic_fit(decile_bins(ranked))
         out = (
-            scored.join(iso, scored["b"] == iso["i"])
+            ranked.join(iso, ranked["b"] == iso["i"])
             .agg(
                 F.max("n").cast("long").alias("n"),
                 F.sum(
@@ -9705,8 +9122,6 @@ def customers_brier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        feats.unpersist()
     return out
 
 

@@ -568,6 +568,51 @@ def test_star_cc_contraction_across_partitions(spark, monkeypatch):
     assert all(c == (n % 2) for n, c in labels.items())
 
 
+def _min_id_components(edges):
+    """Plain-dict union-find: node -> minimum id of its component."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {x: find(x) for x in parent}
+
+
+def _random_edges():
+    import random
+
+    rng = random.Random(20240611)
+    return [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        [(i + 1, i) for i in range(30)],  # chain, edges point downward
+        [(0, i) for i in range(1, 25)] + [(i, 100) for i in range(50, 60)],
+        _random_edges(),
+        [(-5, 3), (3, -12), (-12, 7), (40, -1), (-1, -2), (8, 9)],
+    ],
+    ids=["chain", "star", "random", "negative-ids"],
+)
+def test_contract_partitions_matches_union_find(spark, edges):
+    """With one partition the local contraction sees every edge, so each
+    node's rep must be the minimum id of its whole component."""
+    from data_integration_project_spark.operators.dedup import _contract_partitions
+
+    e = spark.createDataFrame(edges, "u long, v long")
+    got = {r["node"]: r["rep"] for r in _contract_partitions(e, parts=1).collect()}
+    assert got == _min_id_components(edges)
+
+
 def test_heavy_hitters_guarantee(spark):
     """Output equals the exact HAVING count*(cap+1) > N set even under
     adversarial partitioning."""

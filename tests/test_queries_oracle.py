@@ -42,91 +42,7 @@ def test_entry_contract(spark):
     qs, os_ = e.queries(), e.oracle_sql()
     assert set(os_) <= set(qs)
     assert len(qs) == len(plans.REGISTRY)
-
-
-def test_never_sampled_rotation():
-    """queries()/oracle_sql() must lead with every query whose latest
-    driver sampling was RED (so fixes re-validate the very next round —
-    VERDICT r7 items 1/5), then every query absent from all past
-    CORRECTNESS_r{N}.json files, so the driver's ~50-query prefix
-    sample covers new ground each round (VERDICT r3 item 2)."""
-    from data_integration_project_spark.plans.driver_sampled import (
-        DRIVER_RED_LATEST,
-        DRIVER_SAMPLED,
-    )
-
-    qs = list(plans.queries())
-    n_red = len(DRIVER_RED_LATEST & set(plans.REGISTRY))
-    n_fresh = sum(1 for n in qs if n not in DRIVER_SAMPLED)
-    assert n_fresh > 0, "rotation is pointless once everything is sampled"
-    assert all(n in DRIVER_RED_LATEST for n in qs[:n_red])
-    mid = qs[n_red : n_red + n_fresh]
-    assert all(n not in DRIVER_SAMPLED for n in mid)
-    assert all(n in DRIVER_SAMPLED for n in qs[n_red + n_fresh :])
-    # sampled names must exist in the registry (catches typos/renames)
-    assert DRIVER_SAMPLED <= set(plans.REGISTRY)
-    assert DRIVER_RED_LATEST <= DRIVER_SAMPLED
-
-
-def test_driver_sampled_is_current():
-    """The sampled-set module must match the CORRECTNESS files — at TWO
-    layers. Working tree: conftest.pytest_configure auto-regens the
-    module before collection, so this leg is belt-and-braces (it alone
-    would be tautological — review r8 finding). Committed tree: the
-    module AT HEAD must match the CORRECTNESS files AT HEAD, which
-    catches committing a new CORRECTNESS_r{N}.json without the
-    regenerated module (the driver imports the committed module with no
-    pytest hook to heal it) while staying green when the driver drops a
-    new JSON into the working tree after the last commit — the
-    bookkeeping red that was this test's recurring false alarm in
-    rounds 4-7."""
-    import glob
-    import json
-    import subprocess
-
-    from data_integration_project_spark.plans.driver_sampled import (
-        DRIVER_SAMPLED,
-    )
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    names: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        with open(path) as fh:
-            names |= set(json.load(fh))
-    assert names == set(DRIVER_SAMPLED)
-
-    def _git_show(path: str) -> str | None:
-        proc = subprocess.run(
-            ["git", "show", f"HEAD:{path}"],
-            capture_output=True,
-            text=True,
-            cwd=root,
-        )
-        return proc.stdout if proc.returncode == 0 else None
-
-    ls = subprocess.run(
-        ["git", "ls-tree", "--name-only", "HEAD"],
-        capture_output=True,
-        text=True,
-        cwd=root,
-    )
-    if ls.returncode != 0:
-        return  # not a git checkout — working-tree leg above suffices
-    head_names: set[str] = set()
-    for fname in ls.stdout.split():
-        if fname.startswith("CORRECTNESS_r") and fname.endswith(".json"):
-            head_names |= set(json.loads(_git_show(fname)))
-    head_module = _git_show(
-        "data_integration_project_spark/plans/driver_sampled.py"
-    )
-    assert head_module is not None, "driver_sampled.py missing at HEAD"
-    ns: dict = {}
-    exec(head_module, ns)  # generated literal-only module
-    assert head_names == set(ns["DRIVER_SAMPLED"]), (
-        "a CORRECTNESS_r{N}.json was committed without the regenerated "
-        "driver_sampled.py — run tools/gen_driver_sampled.py and commit "
-        "both together"
-    )
+    assert list(qs) == list(plans.REGISTRY)
 
 
 def test_duplicate_name_guard_and_reload_idempotency(tmp_path):
