@@ -25,8 +25,9 @@ A ``run_id`` scopes every output path (reference ``DB_{run_id}``).
 Each stage returns DataFrames/paths so callers can stop anywhere.
 Driver actions per stage: ingest runs one write per CSV, which also
 counts the good rows through an Observation; drain/validate runs one
-AvailableNow stream per entity, then counts its clean and error zones;
-the marts are lazy and run no action.
+AvailableNow stream per entity, whose clean and error writes count
+their own rows through Observations, so no zone is read back; the marts
+read the clean zones with their known schema and run no action.
 
 Ingest and drain/validate run one task per entity, all entities at
 once: the batch is bound by driver latency (planning, py4j, stream
@@ -41,6 +42,7 @@ appends to one ``inbox/{entity}`` directory share the commit protocol's
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -54,7 +56,7 @@ from pyspark.util import inheritable_thread_target
 
 from .functions.cleaning import transform_entity
 from .operators.entity_rules import ruleset_for
-from .operators.quality import reject_duplicates
+from .operators.quality import RuleSet, reject_duplicates
 from .operators.reconcile import source_counts
 from .sources.csv import (
     RAW_CSV_LAYOUTS,
@@ -62,7 +64,12 @@ from .sources.csv import (
     read_entity_csv,
     with_line_numbers,
 )
-from .streaming.pipeline import ZonePaths, produce_to_inbox, run_inbox_pipeline
+from .streaming.pipeline import (
+    ZonePaths,
+    clean_zone_schema,
+    produce_to_inbox,
+    run_inbox_pipeline,
+)
 
 #: natural key per entity for the ordered first-wins dedup (V2)
 DEDUP_KEYS: dict[str, list[str]] = {
@@ -148,6 +155,27 @@ def _load_case_mappings(spark: SparkSession) -> None:
     spark.sql("SELECT lower(c) FROM VALUES ('A') AS t(c)").collect()
 
 
+#: the live SparkContext and the csv RuleSet built for each entity under it
+_RULES: tuple[object, dict[str, RuleSet]] = (None, {})
+_RULES_LOCK = threading.Lock()
+
+
+def _entity_rules(spark: SparkSession, entity: str) -> RuleSet:
+    """The entity's csv RuleSet, built once per SparkContext. Building
+    one costs 1.2k-10k py4j calls (0.2-0.44 s), and every micro-batch of
+    every drain validates with it. Private: ``ruleset_for`` keeps
+    returning fresh RuleSets a caller may extend."""
+    global _RULES
+    with _RULES_LOCK:
+        if _RULES[0] is not spark.sparkContext:
+            _RULES = (spark.sparkContext, {})
+        built = _RULES[1]
+    rules = built.get(entity)
+    if rules is None:
+        rules = built.setdefault(entity, ruleset_for(entity, source="csv"))
+    return rules
+
+
 def _transform_validate_dedup(entity: str, df: DataFrame) -> DataFrame:
     """Decoded raw CSV rows → canonical layout, validated by the entity
     RuleSet, then ordered first-wins dedup where the entity is keyed.
@@ -158,7 +186,7 @@ def _transform_validate_dedup(entity: str, df: DataFrame) -> DataFrame:
     the transform; their _-prefixed verdict columns survive the
     transform's metadata passthrough. Every other entity validates the
     canonical post-transform layout."""
-    rules = ruleset_for(entity, source="csv")
+    rules = _entity_rules(df.sparkSession, entity)
     if rules.entity == "mon_csv":
         validated = transform_entity(entity, rules.validate(df))
     else:
@@ -174,30 +202,53 @@ def _transform_validate_dedup(entity: str, df: DataFrame) -> DataFrame:
     return validated
 
 
+def _raw_schema(entity: str) -> T.StructType:
+    """The envelope payload: the entity's RAW CSV layout, all strings."""
+    return T.StructType([T.StructField(c, T.StringType()) for c in RAW_CSV_LAYOUTS[entity]])
+
+
+#: entity → its clean-zone schema; it depends on the code only
+_CLEAN_SCHEMAS: dict[str, T.StructType] = {}
+
+
+def _clean_schema(spark: SparkSession, entity: str) -> T.StructType:
+    """The schema of the entity's clean zone, derived once per process
+    from the validator the drain uses (``clean_zone_schema``). The
+    marts read the zone with it: inferring it costs a job per entity."""
+    schema = _CLEAN_SCHEMAS.get(entity)
+    if schema is None:
+        validate = partial(_transform_validate_dedup, entity)
+        schema = _CLEAN_SCHEMAS.setdefault(
+            entity, clean_zone_schema(spark, _raw_schema(entity), validate)
+        )
+    return schema
+
+
 def drain_and_validate(
     spark: SparkSession, zones: ZonePaths, entities: list[str]
 ) -> dict[str, dict[str, int]]:
     """STEP2+3+4 fused: per entity, drain the inbox exactly once
     (AvailableNow), transform to the canonical layout, validate with
     the entity RuleSet (+ ordered dedup where keyed), split into
-    clean/error parquet zones, and count both zones.
+    clean/error parquet zones, and count both zones from the writes
+    (``run_inbox_pipeline``).
 
     Entities drain concurrently, each as its own checkpointed stream.
     That is safe because an entity's inbox, checkpoint and zone paths
     are its own, and its first-wins dedup state lives in its own
     stream. If an entity fails, every other entity's stream still runs
     to its end; then the first failing entity's exception is raised, so
-    no stream is left running."""
+    no stream is left running. Each entity's thread also derives the
+    clean-zone schema :func:`build_marts` reads with, off the marts'
+    critical path."""
 
     def drain(entity: str) -> dict[str, int]:
+        _clean_schema(spark, entity)
         return run_inbox_pipeline(
             spark,
             zones,
             entity=entity,
-            # the envelope payload is the RAW CSV layout (all strings)
-            data_schema=T.StructType(
-                [T.StructField(c, T.StringType()) for c in RAW_CSV_LAYOUTS[entity]]
-            ),
+            data_schema=_raw_schema(entity),
             validate=partial(_transform_validate_dedup, entity),
         )
 
@@ -210,11 +261,14 @@ def build_marts(
     """Post-hoc layer: merged views (the clean zone's ``_source``
     lineage becomes the merged view's ``source`` tag) + per-source count
     report over the clean zone — the first marts the reference builds in
-    SQL Server. DWH star builds continue from these via operators.dwh."""
+    SQL Server. DWH star builds continue from these via operators.dwh.
+    Lazy: each zone is read with its known schema, so no job runs."""
     marts: dict[str, DataFrame] = {}
     for entity in entities:
-        merged = spark.read.parquet(os.path.join(zones.clean, entity)).withColumnRenamed(
-            "_source", "source"
+        merged = (
+            spark.read.schema(_clean_schema(spark, entity))
+            .parquet(os.path.join(zones.clean, entity))
+            .withColumnRenamed("_source", "source")
         )
         merged.createOrReplaceTempView(f"{entity}_merged")
         marts[f"{entity}_merged"] = merged

@@ -25,8 +25,7 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -74,6 +73,21 @@ def produce_to_inbox(
     enveloped.write.mode("append").text(os.path.join(zones.inbox, entity))
 
 
+def _rows(decoded: DataFrame) -> DataFrame:
+    """The decoded rows that parsed, without the envelope columns."""
+    return decoded.filter(~F.col("_corrupt")).drop("value", "_corrupt")
+
+
+def _clean_and_error(validated: DataFrame) -> tuple[DataFrame, DataFrame]:
+    clean = validated.filter("_is_valid").drop("_errors", "_is_valid")
+    error = (
+        validated.filter(~F.col("_is_valid"))
+        .withColumn("_errors", F.concat_ws(" | ", "_errors"))
+        .drop("_is_valid")
+    )
+    return clean, error
+
+
 def consume_inbox(
     spark: SparkSession,
     zones: ZonePaths,
@@ -81,49 +95,55 @@ def consume_inbox(
     entity: str,
     data_schema: T.StructType,
     validate: Callable[[DataFrame], DataFrame] | None = None,
+    counts: dict[str, int],
 ):
     """STEP2+3 consumer analogue (S9 + V1-V3 + K2/K3): stream the
     entity's inbox, decode envelopes, validate, split clean/error, and
-    append both zones as parquet partitioned by run — one checkpointed
-    query, ``Trigger.AvailableNow`` (drain what exists, then stop).
+    append both zones as parquet — one checkpointed query,
+    ``Trigger.AvailableNow`` (drain what exists, then stop). Poison
+    envelopes go to ``error/{entity}_poison`` as JSON.
 
     ``validate`` maps the decoded rows to rows carrying ``_is_valid``
     and an ``_errors`` array (a RuleSet's ``validate``, optionally
     followed by first-wins dedup); without it every decoded row is
-    clean. Returns the started StreamingQuery; callers
-    ``awaitTermination()``.
+    clean. Each micro-batch adds the rows it appends to
+    ``counts["clean"]`` and ``counts["error"]``, counted by an
+    Observation on the write itself. Returns the started
+    StreamingQuery; callers ``awaitTermination()``.
     """
     raw = spark.readStream.format("text").load(os.path.join(zones.inbox, entity))
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         # the micro-batch feeds three sinks (clean/error/poison) —
-        # decode+validate once, not once per sink
-        decoded = decode_envelope(batch, data_schema).persist()
+        # decode+validate once, not once per sink. The poison count is
+        # observed under the cache: it reports when the first write
+        # builds the cache.
+        n_poison = Observation()
+        decoded = (
+            decode_envelope(batch, data_schema)
+            .observe(n_poison, F.count_if("_corrupt").alias("rows"))
+            .persist()
+        )
         cached = [decoded]
         try:
-            poison = decoded.filter(F.col("_corrupt")).select(
-                F.col("value").alias("_raw_value"),
-                F.lit("unparseable envelope").alias("_errors"),
-            )
-            rows = decoded.filter(~F.col("_corrupt")).drop("value", "_corrupt")
-            if validate is not None:
+            rows = _rows(decoded)
+            if validate is None:
+                sinks = {"clean": rows}
+            else:
                 validated = validate(rows).persist()
                 cached.append(validated)
-                clean = validated.filter("_is_valid").drop("_errors", "_is_valid")
-                error = (
-                    validated.filter(~F.col("_is_valid"))
-                    .withColumn("_errors", F.concat_ws(" | ", "_errors"))
-                    .drop("_is_valid")
-                )
-            else:
-                clean, error = rows, None
-            clean.write.mode("append").parquet(os.path.join(zones.clean, entity))
-            if error is not None:
-                error.write.mode("append").parquet(os.path.join(zones.error, entity))
-            if not poison.isEmpty():
-                poison.write.mode("append").json(
-                    os.path.join(zones.error, f"{entity}_poison")
-                )
+                sinks = dict(zip(("clean", "error"), _clean_and_error(validated)))
+            for zone, df in sinks.items():
+                written = Observation()
+                df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+                    "append"
+                ).parquet(os.path.join(getattr(zones, zone), entity))
+                counts[zone] += written.get["rows"]
+            if n_poison.get["rows"] > 0:
+                decoded.filter(F.col("_corrupt")).select(
+                    F.col("value").alias("_raw_value"),
+                    F.lit("unparseable envelope").alias("_errors"),
+                ).write.mode("append").json(os.path.join(zones.error, f"{entity}_poison"))
         finally:
             for df in cached:  # one leaked cache per batch adds up on a long stream
                 df.unpersist()
@@ -146,20 +166,52 @@ def run_inbox_pipeline(
 ) -> dict[str, int]:
     """Drain the inbox to completion and report zone row counts —
     the bounded consume-exactly-queue-depth loop (main.py:643-730).
-    A zone that was never written counts 0; any other read failure
-    raises."""
-    consume_inbox(
-        spark, zones, entity=entity, data_schema=data_schema, validate=validate
-    ).awaitTermination()
+
+    A zone's count is its rows before the drain plus the rows this drain
+    appended, which the writes count as they run: a zone is read only
+    if it exists, i.e. an earlier drain wrote it. A zone that was never
+    written counts from 0; a read failure of an existing zone raises."""
     counts = {}
-    for zone_name, path in (("clean", zones.clean), ("error", zones.error)):
-        try:
-            counts[zone_name] = spark.read.parquet(os.path.join(path, entity)).count()
-        except AnalysisException as e:
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-            counts[zone_name] = 0
+    for zone in ("clean", "error"):
+        path = os.path.join(getattr(zones, zone), entity)
+        counts[zone] = spark.read.parquet(path).count() if _exists(spark, path) else 0
+    consume_inbox(
+        spark, zones, entity=entity, data_schema=data_schema, validate=validate, counts=counts
+    ).awaitTermination()
     return counts
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists on its Hadoop filesystem. Reading a
+    missing path fails too, but Spark logs a stack trace for it first."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
+def clean_zone_schema(
+    spark: SparkSession,
+    data_schema: T.StructType,
+    validate: Callable[[DataFrame], DataFrame],
+) -> T.StructType:
+    """The schema a reader infers from the clean zone that a drain with
+    ``validate`` writes: the clean rows' schema with every field
+    nullable, as file writes store it. Derived from the plan over an
+    empty inbox; runs no job."""
+    empty = spark.range(0).select(F.lit(None).cast("string").alias("value"))
+    clean, _ = _clean_and_error(validate(_rows(decode_envelope(empty, data_schema))))
+    return _nullable(clean.schema)
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 # ---------------------------------------------------------------------------

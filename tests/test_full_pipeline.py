@@ -8,18 +8,21 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import types
 import warnings
 
 import pytest
 from pyspark.sql import functions as F
 
 from data_integration_project_spark import pipeline
+from data_integration_project_spark.operators.entity_rules import ruleset_for
 from data_integration_project_spark.pipeline import (
     ZonePaths,
     drain_and_validate,
     ingest_csv_dir,
     run_full_pipeline,
 )
+from data_integration_project_spark.session import CODEGEN_CACHE_ENTRIES
 
 _CSVS = {
     "khachhang.csv": [
@@ -70,9 +73,43 @@ def pipeline_dirs(request):
     shutil.rmtree(root, ignore_errors=True)
 
 
+def _compilations(spark) -> int:
+    """Janino compilations so far in this JVM (cache hits do not count)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _assert_zones_match_disk(spark, run):
+    """The write-counted zone counts equal the rows on disk, and the
+    schema the marts read a clean zone with is the one parquet infers."""
+    for entity, counts in run.zone_counts.items():
+        on_disk = {
+            zone: spark.read.parquet(os.path.join(getattr(run.zones, zone), entity)).count()
+            for zone in ("clean", "error")
+        }
+        assert counts == on_disk, entity
+        inferred = spark.read.parquet(os.path.join(run.zones.clean, entity)).schema
+        assert pipeline._clean_schema(spark, entity) == inferred, entity
+
+
+# first in this file: the first pipeline run of the file compiles cold
+def test_second_run_reuses_generated_classes(spark, pipeline_dirs):
+    """A second batch in one session finds the first batch's generated
+    classes in Spark's codegen cache instead of compiling them again."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    root, data = pipeline_dirs
+    compiled = []
+    for run_id in ("cg1", "cg2"):
+        before = _compilations(spark)
+        run_full_pipeline(spark, data, os.path.join(root, "out"), run_id=run_id)
+        compiled.append(_compilations(spark) - before)
+    assert compiled[1] * 3 <= compiled[0], compiled
+
+
 def test_run_full_pipeline(spark, pipeline_dirs):
     root, data = pipeline_dirs
     run = run_full_pipeline(spark, data, os.path.join(root, "out"), run_id="t1")
+    _assert_zones_match_disk(spark, run)
 
     assert run.ingested == {
         "khach_hang": 5,
@@ -139,8 +176,36 @@ def test_run_full_pipeline_all_rows_rejected(spark, pipeline_dirs):
 
     assert run.ingested == {"loai_mon": 2}
     assert run.zone_counts == {"loai_mon": {"clean": 0, "error": 2}}
+    _assert_zones_match_disk(spark, run)
     merged = spark.table("loai_mon_merged")
     assert "source" in merged.columns and merged.count() == 0
+
+
+def test_entity_rules_rebuilt_for_a_new_spark_context(spark):
+    """The drain's RuleSet is built once per SparkContext; another
+    context gets freshly built rule columns."""
+    live = pipeline._entity_rules(spark, "khach_hang")
+    assert pipeline._entity_rules(spark, "khach_hang") is live
+    other = pipeline._entity_rules(types.SimpleNamespace(sparkContext=object()), "khach_hang")
+    assert other is not live and len(other.rules) == len(live.rules)
+    assert all(a.check is not b.check for a, b in zip(live.rules, other.rules))
+    assert pipeline._entity_rules(spark, "khach_hang") is not live
+
+
+@pytest.mark.parametrize(
+    "pipeline_dirs", [{"loaisanpham.csv": _CSVS["loaisanpham.csv"]}], indirect=True
+)
+def test_drain_ignores_changes_to_ruleset_for_results(spark, pipeline_dirs):
+    """``ruleset_for`` returns a fresh RuleSet a caller may extend; the
+    drain validates with its own, which such a change does not reach."""
+    root, data = pipeline_dirs
+    mine = ruleset_for("loai_mon", source="csv")
+    assert mine is not ruleset_for("loai_mon", source="csv")
+    mine.rule("reject_all", F.lit(False), "planted rule")
+    cached = pipeline._entity_rules(spark, "loai_mon")
+    assert "reject_all" not in [r.name for r in cached.rules]
+    run = run_full_pipeline(spark, data, os.path.join(root, "out"), run_id="rs")
+    assert run.zone_counts == {"loai_mon": {"clean": 2, "error": 1}}
 
 
 def test_ingest_same_entity_files_append_in_order(spark):
