@@ -20,8 +20,15 @@ from pyspark.sql import functions as F
 
 
 def tokens(col: Column) -> Column:
-    """Whitespace tokenization of lowercased, trimmed text.
-    DuckDB twin: ``regexp_split_to_array(lower(trim(text)), '\\s+')``."""
+    """Whitespace tokenization of lowercased, space-trimmed text: split
+    on runs of Java's ``\\s``, i.e. ``[ \\t\\n\\x0B\\f\\r]``.
+
+    DuckDB twin: ``plans.text_kit.TOKENS_SQL``, which spells that class
+    out because RE2's ``\\s`` leaves out the vertical tab. The twins
+    agree wherever lower-casing maps one code point to one code point
+    without context. Java's full case mapping differs from DuckDB's on
+    a word-final capital sigma (``ς`` here, ``σ`` there) and on ``İ``
+    (``i̇``, two code points, here; ``i`` there)."""
     return F.split(F.lower(F.trim(col)), r"\s+")
 
 

@@ -143,7 +143,8 @@ def shingle_rows(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame
         )
     )
     hs = F.col("_hs")
-    n_windows = F.size(hs) - F.lit(k - 1)
+    # a null text has a null size: it yields no window, like the SQL twin
+    n_windows = F.coalesce(F.size(hs), F.lit(0)) - F.lit(k - 1)
 
     def fold(i):
         acc = F.lit(0).cast("long")

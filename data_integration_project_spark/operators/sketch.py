@@ -51,9 +51,8 @@ def hll_hash(col: Column) -> Column:
     affine hash because its k-th-smallest estimator only needs
     equidistribution, which a lattice satisfies.
 
-    DuckDB twin: fold the same 8 hex chars with
-    ``acc·16 + hex_digit`` (see plans/events_q._HLL_HASH_SQL) —
-    verified bit-equal."""
+    DuckDB twin: ``plans.catalog.SQL_MD5_INT(.., 8)``, which folds the
+    same 8 hex chars with ``acc·16 + hex_digit`` — verified bit-equal."""
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
 
 

@@ -156,6 +156,19 @@ def SQL_DSUM(expr: str, alias: str, scale: int = 6) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE) AS {alias}"
 
 
+def SQL_MD5_INT(expr: str, n_hex: int) -> str:
+    """The first ``n_hex`` (≤ 15) hex digits of ``md5(expr)`` as a BIGINT,
+    folded ``acc·16 + digit`` from the digits' ascii codes. Spark twin:
+    ``F.conv(F.substring(F.md5(..), 1, n_hex), 16, 10).cast("long")``
+    (``operators.sketch.hll_hash``)."""
+    return (
+        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
+        f"list_transform(string_split(substr(md5({expr}), 1, {n_hex}), ''), "
+        "c -> CAST(CASE WHEN ascii(c) >= 97 THEN ascii(c) - 87 "
+        "ELSE ascii(c) - 48 END AS BIGINT))), (acc, d) -> acc * 16 + d)"
+    )
+
+
 def dmean(col: Column, alias: str, scale: int = 6) -> Column:
     """Order-independent float mean: exact-decimal sum ÷ exact count as a
     single double division. DuckDB twin: ``SQL_DMEAN``."""

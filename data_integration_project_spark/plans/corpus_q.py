@@ -16,10 +16,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as X
+from ..operators import dedup as D
 from ..session import iterative_loop
-from .catalog import query, t
-
-_TOKENS_SQL = "regexp_split_to_array(lower(trim(text)), '\\s+')"
+from . import text_kit as K
+from .catalog import SQL_MD5_INT, query, t
 
 
 @query(
@@ -29,7 +29,7 @@ _TOKENS_SQL = "regexp_split_to_array(lower(trim(text)), '\\s+')"
       SELECT t AS token,
              COUNT(*) AS n_occurrences,
              COUNT(DISTINCT doc_id) AS n_docs
-      FROM (SELECT doc_id, unnest({_TOKENS_SQL}) AS t FROM documents)
+      FROM (SELECT doc_id, unnest({K.TOKENS_SQL}) AS t FROM documents)
       GROUP BY t
     )
     ORDER BY n_occurrences DESC, token
@@ -67,7 +67,7 @@ def doc_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH scored AS (
       SELECT doc_id, lang, n_chars,
              md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
-             len({_TOKENS_SQL}) AS n_tokens,
+             len({K.TOKENS_SQL}) AS n_tokens,
              CAST(length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g')) AS DOUBLE)
                / nullif(length(lower(text)), 0) AS pr
       FROM documents
@@ -205,7 +205,7 @@ _CHUNK, _STRIDE = 64, 48  # 16-token overlap between consecutive chunks
     "doc_chunk_packing",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKENS_SQL} AS tk, len({_TOKENS_SQL}) AS n
+      SELECT doc_id, {K.TOKENS_SQL} AS tk, len({K.TOKENS_SQL}) AS n
       FROM documents
     ),
     chunked AS (
@@ -330,7 +330,7 @@ _VOCAB_K = 20
         SELECT doc_id,
                unnest(list_transform(range(1, len(tk) + 1),
                       i -> struct_pack(pos := i, tok := tk[i]))) AS u
-        FROM (SELECT doc_id, {_TOKENS_SQL} AS tk FROM documents)
+        FROM (SELECT doc_id, {K.TOKENS_SQL} AS tk FROM documents)
       )
     ),
     vocab AS (
@@ -425,7 +425,7 @@ except ImportError:  # pragma: no cover - pyspark too old
         SELECT doc_id,
                unnest(list_transform(range(1, len(tk) + 1),
                       i -> struct_pack(pos := i, tok := tk[i]))) AS u
-        FROM (SELECT doc_id, {_TOKENS_SQL} AS tk FROM documents)
+        FROM (SELECT doc_id, {K.TOKENS_SQL} AS tk FROM documents)
       )
     ),
     marked AS (
@@ -477,13 +477,6 @@ def doc_token_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CMS_W = 16  # deliberately tight: 31 distinct tokens into 16 buckets
 #             forces collisions, so min-over-depth visibly matters
 
-_CHARFOLD_SQL = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT))), "
-    "(acc, c) -> (acc*31 + c) % 2147483647)"
-)
-
-
 def _cms_params_sql() -> str:
     from ..operators.sketch import CMS_PARAMS
 
@@ -495,10 +488,10 @@ def _cms_params_sql() -> str:
     oracle=f"""
     WITH counts AS (
       SELECT tok, COUNT(*) AS n
-      FROM (SELECT unnest({_TOKENS_SQL}) AS tok FROM documents)
+      FROM (SELECT unnest({K.TOKENS_SQL}) AS tok FROM documents)
       GROUP BY tok
     ),
-    hashed AS (SELECT tok, n, {_CHARFOLD_SQL} AS h FROM counts),
+    hashed AS (SELECT tok, n, {K.char_fold_sql('tok')} AS h FROM counts),
     params(depth, a, b) AS (VALUES {_cms_params_sql()}),
     cells AS (
       SELECT p.depth,
@@ -544,10 +537,9 @@ def doc_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # round-9 (guide §1.2): `hashed` (the vocab-scale token dim) feeds
-    # the counter grid AND the point-query probe side — the corpus
-    # tokenize+groupBy re-ran once per reference (8 scans). Lazy
-    # localCheckpoint: one corpus pass.
+    # `hashed` (the vocab-scale token dim) feeds the counter grid and
+    # the point-query probe side: the lazy checkpoint makes it one
+    # corpus pass instead of one per reference (8 scans)
     hashed = counts.withColumn(
         "h", char_fold_hash(F.col("tok"))
     ).localCheckpoint(eager=False)
@@ -575,7 +567,7 @@ _MG_CAPACITY = 64
 @query(
     "doc_heavy_hitters_mg",
     oracle=f"""
-    WITH tok AS (SELECT unnest({_TOKENS_SQL}) AS t FROM documents),
+    WITH tok AS (SELECT unnest({K.TOKENS_SQL}) AS t FROM documents),
     tot AS (SELECT COUNT(*) AS n FROM tok)
     SELECT t AS token, COUNT(*) AS n_occurrences
     FROM tok, tot
@@ -681,7 +673,7 @@ def doc_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT u.a AS left_tok, u.b AS right_tok FROM (
         SELECT unnest(list_transform(range(1, len(tk)),
                       i -> struct_pack(a := tk[i], b := tk[i + 1]))) AS u
-        FROM (SELECT {_TOKENS_SQL} AS tk FROM documents)
+        FROM (SELECT {K.TOKENS_SQL} AS tk FROM documents)
         WHERE len(tk) >= 2
       )
     )
@@ -741,7 +733,7 @@ def doc_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_inverted_index",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest(list_distinct({_TOKENS_SQL})) AS token
+      SELECT doc_id, unnest(list_distinct({K.TOKENS_SQL})) AS token
       FROM documents
     ),
     postings AS (
@@ -811,7 +803,7 @@ def doc_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_tfidf_top_terms",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_TOKENS_SQL}) AS token FROM documents
+      SELECT doc_id, unnest({K.TOKENS_SQL}) AS token FROM documents
     ),
     tf AS (
       SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token
@@ -885,7 +877,7 @@ def doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_gopher_quality",
     oracle=f"""
     WITH tk AS (
-      SELECT doc_id, {_TOKENS_SQL} AS tk FROM documents
+      SELECT doc_id, {K.TOKENS_SQL} AS tk FROM documents
     ),
     grams AS (
       SELECT doc_id, 1 AS gsize, unnest(tk) AS gram FROM tk
@@ -1037,91 +1029,15 @@ def doc_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _charlm_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc char-bigram LM totals (doc_id, n_bigrams, sum_logp_unats)
-    — the exact-integer scoring core shared by [[doc_charlm_score]] and
-    [[corpus_ccnet_buckets]]."""
-    d = t(spark, sf_dir, "documents")
-    s = d.select("doc_id", F.lower(F.trim(F.col("text"))).alias("s"))
-    # bigrams via a codegen char explode + lead window, NOT a
-    # substr-transform HOF: interpreted higher-order lambdas cost
-    # ~µs/element (the recorded per-char trap) — measured 8.4x
-    # superlinear at sf1.0 (55s) before this rewrite; the window
-    # shuffle on doc_id is reused by the per-doc score rollup
-    chars = s.filter(F.length("s") >= 2).select(
-        "doc_id", F.posexplode(F.split("s", "")).alias("p", "ch")
-    )
-    wch = Window.partitionBy("doc_id").orderBy("p")
-    bg = (
-        chars.withColumn("bg", F.concat("ch", F.lead("ch").over(wch)))
-        .filter(F.length("bg") == 2)
-        .select("doc_id", "bg")
-    )
-    vocab = (
-        s.select(F.explode(F.split(F.col("s"), "")).alias("c"))
-        .agg(F.countDistinct("c").cast("long").alias("v"))
-    )
-    counts = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("cnt"))
-    tot_w = Window.partitionBy(F.substring("bg", 1, 1))
-    model = (
-        counts.withColumn("tot", F.sum("cnt").over(tot_w))
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            "bg",
-            F.round(
-                F.log(
-                    (F.col("cnt") + 1).cast("double") / (F.col("tot") + F.col("v"))
-                )
-                * 1000000
-            )
-            .cast("long")
-            .alias("logp_unats"),
-        )
-    )
-    return (
-        bg.join(F.broadcast(model), "bg")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("logp_unats").alias("sum_logp_unats"),
-        )
-    )
-
-
 @query(
     "doc_charlm_score",
-    oracle="""
-    WITH s AS (
-      SELECT doc_id, lower(trim(text)) AS s FROM documents
-    ),
-    bg AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, length(s)), i -> s[i : i + 1])) AS bg
-      FROM s WHERE length(s) >= 2
-    ),
-    vocab AS (
-      SELECT CAST(COUNT(DISTINCT c) AS BIGINT) AS v
-      FROM (SELECT unnest(string_split(s, '')) AS c FROM s)
-    ),
-    model AS (
-      SELECT bg,
-             CAST(round(ln(
-               CAST(cnt + 1 AS DOUBLE) / (tot + (SELECT v FROM vocab))
-             ) * 1000000) AS BIGINT) AS logp_unats
-      FROM (
-        SELECT bg, COUNT(*) AS cnt,
-               SUM(COUNT(*)) OVER (PARTITION BY substr(bg, 1, 1)) AS tot
-        FROM bg GROUP BY bg
-      )
-    )
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-           CAST(SUM(logp_unats) AS BIGINT) AS sum_logp_unats,
-           CAST(SUM(logp_unats) AS DOUBLE) / (1000000 * COUNT(*)) AS avg_logp,
-           CAST(CASE WHEN CAST(SUM(logp_unats) AS DOUBLE) / (1000000 * COUNT(*))
+    oracle=f"""
+    WITH {K.charlm_scores_sql()}
+    SELECT doc_id, n_bigrams, sum_logp_unats,
+           CAST(sum_logp_unats AS DOUBLE) / (1000000 * n_bigrams) AS avg_logp,
+           CAST(CASE WHEN CAST(sum_logp_unats AS DOUBLE) / (1000000 * n_bigrams)
                           >= -4.7 THEN 1 ELSE 0 END AS INT) AS keep
-    FROM bg JOIN model USING (bg)
-    GROUP BY doc_id
+    FROM lm_scores
     """,
 )
 def doc_charlm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1142,7 +1058,7 @@ def doc_charlm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc rollup is the single big shuffle. At 100 TB the same plan holds
     with a word-ngram model as long as the model side stays
     broadcastable (quantize/prune the vocab first otherwise)."""
-    scores = _charlm_doc_scores(spark, sf_dir)
+    scores = K.charlm_scores(t(spark, sf_dir, "documents"))
     avg = F.col("sum_logp_unats").cast("double") / (1000000 * F.col("n_bigrams"))
     return scores.select(
         "doc_id",
@@ -1165,7 +1081,7 @@ def doc_charlm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH per_src AS (
       SELECT source,
              CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(len({_TOKENS_SQL})) AS BIGINT) AS n_tokens
+             CAST(SUM(len({K.TOKENS_SQL})) AS BIGINT) AS n_tokens
       FROM documents GROUP BY source
     ),
     tot AS (
@@ -1245,7 +1161,7 @@ def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_temperature_mixture",
     oracle=f"""
     WITH per_lang AS (
-      SELECT lang, CAST(SUM(len({_TOKENS_SQL})) AS BIGINT) AS n_tokens
+      SELECT lang, CAST(SUM(len({K.TOKENS_SQL})) AS BIGINT) AS n_tokens
       FROM documents GROUP BY lang
     ),
     sq AS (
@@ -1354,7 +1270,7 @@ def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_span_corruption",
     oracle=f"""
     WITH pos AS (
-      SELECT doc_id, unnest(range(1, len({_TOKENS_SQL}) + 1)) AS p
+      SELECT doc_id, unnest(range(1, len({K.TOKENS_SQL}) + 1)) AS p
       FROM documents
     ),
     st AS (
@@ -1514,18 +1430,10 @@ def corpus_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUPSPAN_L = 40
 
-# 60-bit portable gram key: fold the first 15 hex digits of md5(gram)
-# with acc·16 + digit (the _HLL_HASH_SQL recipe widened from 8 to 15
-# digits — 8 would be a 32-bit space where 150M grams collide ~1%; at
-# 60 bits expected cross-gram collisions over the whole corpus are
-# ~0.01 pairs, and any that occur are deterministic and mirrored by
-# the oracle).
-_GRAM_HASH_SQL = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(string_split(substr(md5({g}), 1, 15), ''), "
-    "c -> CAST(CASE WHEN ascii(c) >= 97 THEN ascii(c) - 87 "
-    "ELSE ascii(c) - 48 END AS BIGINT))), (acc, d) -> acc * 16 + d)"
-)
+# The gram key is the first 15 hex digits of md5(gram), 60 bits: 8
+# digits would be a 32-bit space where 150M grams collide ~1%; at 60
+# bits expected cross-gram collisions over the whole corpus are ~0.01
+# pairs, and any that occur are deterministic and mirrored by the oracle.
 
 
 @query(
@@ -1543,7 +1451,7 @@ _GRAM_HASH_SQL = (
     ),
     gpos AS (
       SELECT doc_id, pos,
-             {_GRAM_HASH_SQL.format(g=f"substr(s, pos, {_DUPSPAN_L})")} AS h
+             {SQL_MD5_INT(f"substr(s, pos, {_DUPSPAN_L})", 15)} AS h
       FROM grams
     ),
     dup AS (
@@ -1615,14 +1523,11 @@ def doc_dup_substring_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.lower(F.trim(F.col("text"))).alias("s"),
     ).withColumn("n_chars", F.length("s").cast("long"))
-    # Round-9 optimization (guide §2.6 — parallelize the CPU-fat
-    # stage): the per-position md5 projection is the query's dominant
-    # CPU, but the documents table is one small parquet file, so the
-    # explode+md5 ran as ONE task (profiled: 3 tasks total, serial
-    # wall). Spread the doc rows across the session's parallelism
-    # before exploding; at cluster scale the scan is already
-    # many-partitioned and this one narrow exchange of raw docs is
-    # noise next to the gram stream it fans out into.
+    # the per-position md5 projection is the query's dominant CPU, and
+    # the documents table is one small parquet file, so without the
+    # repartition the explode+md5 runs as ONE task. At cluster scale the
+    # scan is already many-partitioned and this one narrow exchange of
+    # raw docs is noise next to the gram stream it fans out into.
     from ..session import default_parallelism
 
     gpos = (
@@ -1702,11 +1607,11 @@ def doc_dup_substring_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tok_first AS (
       SELECT token, MIN(doc_id) AS first_doc
-      FROM (SELECT doc_id, unnest({_TOKENS_SQL}) AS token FROM documents)
+      FROM (SELECT doc_id, unnest({K.TOKENS_SQL}) AS token FROM documents)
       GROUP BY token
     ),
     doc_tokens AS (
-      SELECT doc_id, CAST(len({_TOKENS_SQL}) AS BIGINT) AS n_toks
+      SELECT doc_id, CAST(len({K.TOKENS_SQL}) AS BIGINT) AS n_toks
       FROM documents
     ),
     n_docs AS (SELECT CAST(MAX(doc_id) AS BIGINT) + 1 AS nd FROM documents),
@@ -1818,7 +1723,7 @@ def corpus_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH freq AS (
       SELECT token, CAST(COUNT(*) AS BIGINT) AS f
-      FROM (SELECT unnest({_TOKENS_SQL}) AS token FROM documents)
+      FROM (SELECT unnest({K.TOKENS_SQL}) AS token FROM documents)
       GROUP BY token
     ),
     ranked AS (
@@ -2078,7 +1983,7 @@ def _bpe_round_sql(i: int) -> str:
       SELECT array_to_string(string_split(tok, ''), chr(31)) AS seq,
              CAST(COUNT(*) AS BIGINT) AS freq
       FROM (
-        SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
+        SELECT unnest({K.TOKENS_SQL}) AS tok
         FROM documents
       ) WHERE tok <> '' GROUP BY tok
     ),
@@ -2170,12 +2075,7 @@ def doc_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: 32-bit md5-prefix hash of the doc id (the engine's portable
 #: content-hash pattern — nonlinear, so acceptance is uniform).
-_IMP_U_SQL = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(string_split(substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), ''), "
-    "c -> CAST(CASE WHEN ascii(c) >= 97 THEN ascii(c) - 87 "
-    "ELSE ascii(c) - 48 END AS BIGINT))), (acc, d) -> acc * 16 + d)"
-)
+_IMP_U_SQL = SQL_MD5_INT("CAST(doc_id AS VARCHAR)", 8)
 
 
 @query(
@@ -2238,16 +2138,13 @@ def doc_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _DSIR_B = 64
-_DSIR_TOKH = (
-    "list_transform(" + _TOKENS_SQL + ", tok -> " + _CHARFOLD_SQL + ")"
-)
 
 
 @query(
     "corpus_dsir_weights",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, lang, {_DSIR_TOKH} AS th FROM documents
+      SELECT doc_id, lang, {K.TOKEN_HASHES_SQL} AS th FROM documents
     ),
     feats AS (
       SELECT doc_id, lang,
@@ -2326,12 +2223,10 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(
         F.array(F.col("_h"), (F.col("_h") * 131 + F.col("_hn")) % P)
     )
-    # Round-9 (guide §1.2): `feats` fed BOTH the bucket-ratio pass and
-    # the scoring join — the whole corpus-side pipeline (token dim
-    # join, window, explode) ran twice. Collapse to the per-(doc,
-    # bucket) count panel first (|docs|·64 rows — doc-scale, never
-    # token-scale) and checkpoint THAT; both consumers fold from it
-    # with exact integer arithmetic (Σ lrw per row ≡ Σ n·lrw).
+    # the bucket-ratio pass and the scoring join both read the
+    # per-(doc, bucket) count panel (|docs|·64 rows, never token-scale),
+    # checkpointed so the corpus-side pipeline runs once; both fold
+    # from it with exact integer arithmetic (Σ lrw per row ≡ Σ n·lrw)
     db = (
         tb.select("doc_id", F.explode(pair).alias("h"))
         .join(F.broadcast(d.select("doc_id", "lang")), "doc_id")
@@ -2406,11 +2301,11 @@ _BM25_TERMS_SQL = "('spark', 'merge')"
 #: both engines so every float op replays identically.
 _BM25_CTES = f"""
     docs AS (
-      SELECT doc_id, len({_TOKENS_SQL}) AS dl FROM documents
+      SELECT doc_id, len({K.TOKENS_SQL}) AS dl FROM documents
     ),
     occ AS (
       SELECT doc_id, tok
-      FROM (SELECT doc_id, unnest({_TOKENS_SQL}) AS tok FROM documents)
+      FROM (SELECT doc_id, unnest({K.TOKENS_SQL}) AS tok FROM documents)
       WHERE tok IN {_BM25_TERMS_SQL}
     ),
     tf AS (
@@ -2453,9 +2348,9 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_terms, bm25_micro) for the fixed 2-term query —
     the Spark twin of the ``_BM25_CTES`` chain."""
     d = t(spark, sf_dir, "documents")
-    # round-9 NOTE (measured, left alone): docs/tf feed multiple
-    # branches but AQE exchange reuse covers the shared subtrees at
-    # runtime; lazy checkpoints A/B'd slower (0.60 plain vs 0.71).
+    # docs/tf feed multiple branches, but exchange reuse covers the
+    # shared subtrees at runtime; lazy checkpoints measured slower
+    # (0.60 plain vs 0.71)
     docs = d.select("doc_id", F.size(X.tokens(F.col("text"))).alias("dl"))
     occ = (
         d.select("doc_id", F.explode(X.tokens(F.col("text"))).alias("tok"))
@@ -2653,7 +2548,7 @@ def _bpe_chain_parts(n_merges: int) -> list[str]:
         f"""words_0 AS MATERIALIZED (
       SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt,
              string_split(word, '') AS syms
-      FROM (SELECT unnest({_TOKENS_SQL}) AS word FROM documents)
+      FROM (SELECT unnest({K.TOKENS_SQL}) AS word FROM documents)
       WHERE word <> ''
       GROUP BY word
     )"""
@@ -2728,7 +2623,7 @@ def _bpe_encode_oracle_sql(n_merges: int) -> str:
     return f"""WITH {chain},
     tokd AS (
       SELECT doc_id, tl, unnest(range(1, len(tl) + 1)) AS wpos
-      FROM (SELECT doc_id, {_TOKENS_SQL} AS tl FROM documents)
+      FROM (SELECT doc_id, {K.TOKENS_SQL} AS tl FROM documents)
     ),
     wt AS (
       SELECT doc_id, wpos, tl[wpos] AS word FROM tokd WHERE tl[wpos] <> ''
@@ -2743,11 +2638,7 @@ def _bpe_encode_oracle_sql(n_merges: int) -> str:
     ),
     wordsum AS (
       SELECT doc_id, wpos, CAST(COUNT(*) AS BIGINT) AS n_syms,
-             SUM((wpos * 131 + spos) *
-                list_reduce(list_prepend(CAST(0 AS BIGINT),
-                  list_transform(string_split(syms[spos], ''),
-                                 c -> CAST(ascii(c) AS BIGINT))),
-                  (acc, c) -> (acc * 31 + c) % 2147483647)) AS wterm
+             SUM((wpos * 131 + spos) * {K.char_fold_sql('syms[spos]')}) AS wterm
       FROM symrows GROUP BY doc_id, wpos
     )
     SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -2787,7 +2678,7 @@ def _bpe_fertility_oracle_sql(n_merges: int) -> str:
     return f"""WITH {chain},
     tokd AS (
       SELECT doc_id, tl, unnest(range(1, len(tl) + 1)) AS wpos
-      FROM (SELECT doc_id, {_TOKENS_SQL} AS tl FROM documents)
+      FROM (SELECT doc_id, {K.TOKENS_SQL} AS tl FROM documents)
     ),
     wt AS (
       SELECT doc_id, tl[wpos] AS word FROM tokd WHERE tl[wpos] <> ''
@@ -2836,9 +2727,8 @@ def doc_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents")
     toks = X.tokens(F.col("text"))
-    # Round-9 optimization (guide §1.1): `words` feeds BOTH the training
-    # loop and the encode side — without the checkpoint the corpus-wide
-    # tokenize+explode+groupBy histogram pass ran twice. One pass, reused.
+    # `words` feeds both the training loop and the encode side: the
+    # checkpoint runs the corpus-wide histogram pass once, not twice
     words = word_histogram(d, toks).localCheckpoint(eager=True)
     merges_rows = train_bpe(spark, words, n_merges=6).orderBy("round").collect()
     merges = [(r["left_sym"], r["right_sym"]) for r in merges_rows]
@@ -2901,9 +2791,8 @@ def doc_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents")
     toks = X.tokens(F.col("text"))
-    # Round-9 optimization (guide §1.1): `words` feeds BOTH the training
-    # loop and the encode side — without the checkpoint the corpus-wide
-    # tokenize+explode+groupBy histogram pass ran twice. One pass, reused.
+    # `words` feeds both the training loop and the encode side: the
+    # checkpoint runs the corpus-wide histogram pass once, not twice
     words = word_histogram(d, toks).localCheckpoint(eager=True)
     merges_rows = train_bpe(spark, words, n_merges=6).orderBy("round").collect()
     merges = [(r["left_sym"], r["right_sym"]) for r in merges_rows]
@@ -2951,36 +2840,15 @@ def _lp_oracle_sql(n_rounds: int) -> str:
     """Unrolled synchronous label propagation over the rare-shingle
     blocking graph. MATERIALIZED on every round's label table — each is
     referenced by the next round's votes AND the final histogram."""
-    head = f"""WITH th AS (
-      SELECT doc_id,
-             list_transform(regexp_split_to_array(lower(trim(text)), '\\s+'),
-               t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-                      list_transform(string_split(t, ''),
-                                     c -> CAST(ascii(c) AS BIGINT))),
-                      (acc, c) -> (acc * 31 + c) % 2147483647)) AS th,
-             len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tok
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(generate_series(1, greatest(len(th) - 2, 0)),
-               i -> ((((th[i] * 1000003 + th[i + 1]) % 2147483647)
-                      * 1000003 + th[i + 2]) % 2147483647))) AS shash
-      FROM th
-    ),
-    rare AS (SELECT shash FROM sh GROUP BY shash HAVING COUNT(*) BETWEEN 2 AND 8),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-      FROM sh a JOIN rare USING (shash) JOIN sh b USING (shash)
-      WHERE a.doc_id <> b.doc_id
-    ),
+    head = f"""WITH sh AS ({K.shingles_sql('documents', 3)}),
+    {K.rare_edges_sql('sh')},
     seeds AS (
-      SELECT doc_id, least(2, n_tok // 40) AS label
-      FROM th WHERE doc_id % 4 = 0
+      SELECT doc_id, least(2, len({K.TOKENS_SQL}) // 40) AS label
+      FROM documents WHERE doc_id % 4 = 0
     ),
     labels_0 AS MATERIALIZED (
-      SELECT t2.doc_id, s.label
-      FROM th t2 LEFT JOIN seeds s USING (doc_id)
+      SELECT d.doc_id, s.label
+      FROM documents d LEFT JOIN seeds s USING (doc_id)
     )"""
     parts = [head]
     for r in range(1, n_rounds + 1):
@@ -3002,7 +2870,7 @@ def _lp_oracle_sql(n_rounds: int) -> str:
     ),
     labels_{r} AS MATERIALIZED (
       SELECT t2.doc_id, COALESCE(s.label, p2.label) AS label
-      FROM th t2
+      FROM documents t2
       LEFT JOIN seeds s USING (doc_id)
       LEFT JOIN pick_{r} p2 USING (doc_id)
     )"""
@@ -3031,89 +2899,44 @@ def doc_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation that mis-votes any round fails.
 
     Scale shape: the vote is one shuffle per round on the edge list
-    (groupBy dst,label with map-side combine); per-round
+    (groupBy dst with map-side combine); per-round
     localCheckpoint truncates the iterative lineage (the connected-
     components lesson). The rare-shingle filter bounds block sizes, so
     |edges| = sum of small block squares, never corpus-quadratic."""
-    from ..operators.dedup import shingle_rows
-
     d = t(spark, sf_dir, "documents")
     th = d.select(
         "doc_id", "text", F.size(X.tokens(F.col("text"))).alias("n_tok")
     )
-    # Round-9: `sh` feeds the rare-filter AND both sides of the
-    # blocking self-join — FOUR evaluations of the tokenize+fold
-    # pipeline in the edge plan, and the (doc,shash) distinct rides the
-    # doc_id repartition without its own exchange, so ReuseExchange has
-    # nothing to dedup past the raw-text scatter. A persist() was
-    # measured a small warm loss earlier this round (1.42 vs 1.70 —
-    # materialization serializes branches that overlap on idle local
-    # cores); localCheckpoint re-measured interleaved: hot-window WASH
-    # (1.51 plain vs 1.57), cold-window win (9.4 vs 3.4). Kept: at
-    # cluster scale the four corpus passes are 4x scan+hash CPU, and
-    # the checkpoint is |distinct shingles| * 16 bytes.
-    sh = shingle_rows(th, "doc_id", "text", 3).distinct().localCheckpoint()
-    # Round-10 (guide §2.4 — remove shuffles outright): the rare-filter
-    # + blocking SELF-JOIN needed the rare aggregate's exchange plus a
-    # sort-merge self-join on _shash (two sorted exchanges, one shared
-    # via ReuseExchange). The block bound (2..8 docs/shingle) means each
-    # block's pairs fit trivially in-row: ONE groupBy(_shash) collects
-    # the block members (the same exchange the rare count already
-    # paid), the size filter IS the rare filter, and pairs explode from
-    # a <=64-element in-row array — self-join gone, measured edge set
-    # identical, 1.35 -> 0.88 s warm at sf0.1.
-    blocks = (
-        sh.groupBy("_shash")
-        .agg(F.collect_list("doc_id").alias("_docs"))
-        .filter(F.size("_docs").between(2, 8))
-    )
-    pairs = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("_docs"),
-                lambda x: F.transform(
-                    F.col("_docs"),
-                    lambda y: F.struct(x.alias("src"), y.alias("dst")),
-                ),
-            )
-        )
-    )
-    edges = (
-        blocks.select(pairs.alias("_p"))
-        .select("_p.src", "_p.dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
+    # the shingle rows feed the rare count and both join sides; the
+    # checkpoint folds the corpus once (sf0.1, 4 cores, best of 4 in a
+    # warm session: 1.40 s with it, 1.54 s without)
+    sh = D.shingle_rows(th, "doc_id", "text", 3).distinct().localCheckpoint()
+    edges = K.rare_shingle_edges(sh).persist()
     seeds = th.filter(F.col("doc_id") % 4 == 0).select(
         "doc_id", F.least(F.lit(2), (F.col("n_tok") / 40).cast("int")).alias("seeded")
     )
     nodes = th.select("doc_id")
-    # Round-9 optimization (guide §1.2): `nodes ⋈ seeds` is loop-
-    # invariant but was rebuilt INSIDE every round — re-reading and
-    # re-tokenizing the corpus three extra times. Checkpoint the seeded
-    # base once; each round is then exactly one vote shuffle + one
-    # window + one join against the 2-column base. The loop runs under
-    # iterative_loop (shuffle partitions from the measured edge count,
-    # AQE suspended for the fixed-shape rounds — the connected-
-    # components lesson; 40 jobs → ~12 at sf0.1).
-    base = nodes.join(seeds, "doc_id", "left").localCheckpoint(eager=True)
+    # `nodes ⋈ seeds` is loop-invariant: checkpointed once, so a round
+    # is one vote shuffle and one join against the 2-column base, not a
+    # re-read and re-tokenize of the corpus. The checkpoint is lazy: the
+    # first round's histogram collect materializes it, one action fewer.
+    # The loop runs under iterative_loop (shuffle partitions from the
+    # measured edge count, AQE suspended for the fixed-shape rounds).
+    base = nodes.join(seeds, "doc_id", "left").localCheckpoint(eager=False)
     labels = base.select("doc_id", F.col("seeded").alias("label"))
     out = []
     try:
         n_edges = edges.count()  # materializes the persisted edge set
         with iterative_loop(spark, n_edges):
             for rnd in range(1, 4):
-                # Round-10 (guide §2.4 — remove shuffles outright): the
-                # label domain is CLOSED over {0,1,2} (seeds are
+                # the label domain is closed over {0,1,2} (seeds are
                 # least(2, n_tok//40) >= 0 and votes only replay seed-
                 # descended labels), so the majority vote is one
                 # map-side-combinable groupBy(dst) with three
-                # conditional counts instead of groupBy(dst,label) +
-                # row_number window over dst — which cost a second
-                # exchange plus a sort EVERY round (2 exchanges/round ->
-                # 1). Tie-break (count desc, label asc) is the when-
-                # chain's >= order.
+                # conditional counts, not groupBy(dst,label) plus a
+                # row_number window (a second exchange and a sort per
+                # round). Tie-break (count desc, label asc) is the
+                # when-chain's >= order.
                 joined = edges.join(
                     labels.filter(F.col("label").isNotNull()).withColumnRenamed(
                         "doc_id", "src"
@@ -3170,6 +2993,7 @@ def doc_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
     finally:
         edges.unpersist()
+        sh.unpersist()
         labels.unpersist()
         base.unpersist()
     return spark.createDataFrame(out, "round int, label int, n_nodes long")
@@ -3179,7 +3003,7 @@ def doc_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_kneser_ney_lm",
     oracle=f"""
     WITH toks AS (
-      SELECT {_TOKENS_SQL} AS tk FROM documents
+      SELECT {K.TOKENS_SQL} AS tk FROM documents
     ),
     bigrams AS (
       SELECT u.a AS v, u.b AS w, COUNT(*) AS c FROM (
@@ -3316,7 +3140,7 @@ def _eig_oracle_sql(n_iters: int) -> str:
     """Unrolled integer power iteration on the symmetrized bigram
     count matrix; sup-norm normalization by truncating division."""
     head = f"""WITH toks AS (
-      SELECT {_TOKENS_SQL} AS tk FROM documents
+      SELECT {K.TOKENS_SQL} AS tk FROM documents
     ),
     bi AS (
       SELECT u.a AS v, u.b AS w, COUNT(*) AS c FROM (
@@ -3432,48 +3256,18 @@ def doc_word_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MIS_HASH_SQL = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(string_split(substr(md5({col}), 1, 8), ''), "
-    "c -> CAST(CASE WHEN ascii(c) >= 97 THEN ascii(c) - 87 "
-    "ELSE ascii(c) - 48 END AS BIGINT))), (acc, d) -> acc * 16 + d)"
-)
-
-
 def _mis_oracle_sql(n_rounds: int) -> str:
     """Unrolled deterministic-Luby MIS over the rare-shingle graph:
     per round, an active node enters the set iff its md5 round
     priority beats every ACTIVE neighbor's; winners and their
     neighbors deactivate."""
-    head = f"""WITH th AS (
-      SELECT doc_id,
-             list_transform(regexp_split_to_array(lower(trim(text)), '\\s+'),
-               t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-                      list_transform(string_split(t, ''),
-                                     c -> CAST(ascii(c) AS BIGINT))),
-                      (acc, c) -> (acc * 31 + c) % 2147483647)) AS th
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(generate_series(1, greatest(len(th) - 2, 0)),
-               i -> ((((th[i] * 1000003 + th[i + 1]) % 2147483647)
-                      * 1000003 + th[i + 2]) % 2147483647))) AS shash
-      FROM th
-    ),
-    rare AS (SELECT shash FROM sh GROUP BY shash HAVING COUNT(*) BETWEEN 2 AND 8),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-      FROM sh a JOIN rare USING (shash) JOIN sh b USING (shash)
-      WHERE a.doc_id <> b.doc_id
-    ),
-    act_0 AS (SELECT doc_id FROM th)"""
+    head = f"""WITH sh AS ({K.shingles_sql('documents', 3)}),
+    {K.rare_edges_sql('sh')},
+    act_0 AS (SELECT doc_id FROM documents)"""
     parts = [head]
     for r in range(1, n_rounds + 1):
         p = r - 1
-        pri = _MIS_HASH_SQL.format(
-            col=f"CAST(doc_id AS VARCHAR) || ':{r}'"
-        )
+        pri = SQL_MD5_INT(f"CAST(doc_id AS VARCHAR) || ':{r}'", 8)
         parts.append(
             f""",
     pri_{r} AS MATERIALIZED (
@@ -3525,25 +3319,9 @@ def doc_diverse_subset_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor-min is one shuffle of the edge list; deactivation is two
     anti-joins. O(log n) rounds with high probability — four saturate
     this graph; localCheckpoint truncates the loop lineage."""
-    from ..operators.dedup import shingle_rows
-
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    sh = shingle_rows(d, "doc_id", "text", 3).distinct()
-    rare = (
-        sh.groupBy("_shash")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df").between(2, 8))
-        .select("_shash")
-    )
-    blocked = sh.join(rare, "_shash")
-    edges = (
-        blocked.alias("a")
-        .join(blocked.alias("b"), "_shash")
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sh = D.shingle_rows(d, "doc_id", "text", 3).distinct()
+    edges = K.rare_shingle_edges(sh).localCheckpoint(eager=True)
     act = d.select("doc_id").localCheckpoint(eager=True)
     rows = []
     for rnd in range(1, 5):
@@ -3599,28 +3377,8 @@ def doc_diverse_subset_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kcore_oracle_sql(k: int, n_rounds: int) -> str:
     """Unrolled k-core peeling over the rare-shingle graph: each round
     drops nodes whose degree among SURVIVORS is < k."""
-    head = f"""WITH th AS (
-      SELECT doc_id,
-             list_transform(regexp_split_to_array(lower(trim(text)), '\\s+'),
-               t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-                      list_transform(string_split(t, ''),
-                                     c -> CAST(ascii(c) AS BIGINT))),
-                      (acc, c) -> (acc * 31 + c) % 2147483647)) AS th
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(generate_series(1, greatest(len(th) - 2, 0)),
-               i -> ((((th[i] * 1000003 + th[i + 1]) % 2147483647)
-                      * 1000003 + th[i + 2]) % 2147483647))) AS shash
-      FROM th
-    ),
-    rare AS (SELECT shash FROM sh GROUP BY shash HAVING COUNT(*) BETWEEN 2 AND 8),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-      FROM sh a JOIN rare USING (shash) JOIN sh b USING (shash)
-      WHERE a.doc_id <> b.doc_id
-    ),
+    head = f"""WITH sh AS ({K.shingles_sql('documents', 3)}),
+    {K.rare_edges_sql('sh')},
     alive_0 AS (SELECT DISTINCT src AS doc_id FROM edges)"""
     parts = [head]
     for r in range(1, n_rounds + 1):
@@ -3664,25 +3422,9 @@ def doc_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined to the survivor set on both endpoints, map-side-combined
     HAVING) — the standard distributed peel; localCheckpoint truncates
     the loop."""
-    from ..operators.dedup import shingle_rows
-
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    sh = shingle_rows(d, "doc_id", "text", 3).distinct()
-    rare = (
-        sh.groupBy("_shash")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df").between(2, 8))
-        .select("_shash")
-    )
-    blocked = sh.join(rare, "_shash")
-    edges = (
-        blocked.alias("a")
-        .join(blocked.alias("b"), "_shash")
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sh = D.shingle_rows(d, "doc_id", "text", 3).distinct()
+    edges = K.rare_shingle_edges(sh).localCheckpoint(eager=True)
     alive = edges.select(F.col("src").alias("doc_id")).distinct().localCheckpoint(
         eager=True
     )
@@ -3714,7 +3456,7 @@ def doc_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH tok AS (
       SELECT doc_id, tk[i] AS token, i AS pos FROM (
         SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS i
-        FROM (SELECT doc_id, {_TOKENS_SQL} AS tk FROM documents))
+        FROM (SELECT doc_id, {K.TOKENS_SQL} AS tk FROM documents))
     ),
     nonstop AS (
       SELECT doc_id, token, pos,
@@ -3894,44 +3636,15 @@ def doc_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_ccnet_buckets",
-    oracle="""
-    WITH s AS (
-      SELECT doc_id, lower(trim(text)) AS s FROM documents
-    ),
-    bg AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, length(s)), i -> s[i : i + 1])) AS bg
-      FROM s WHERE length(s) >= 2
-    ),
-    vocab AS (
-      SELECT CAST(COUNT(DISTINCT c) AS BIGINT) AS v
-      FROM (SELECT unnest(string_split(s, '')) AS c FROM s)
-    ),
-    model AS (
-      SELECT bg,
-             CAST(round(ln(
-               CAST(cnt + 1 AS DOUBLE) / (tot + (SELECT v FROM vocab))
-             ) * 1000000) AS BIGINT) AS logp_unats
-      FROM (
-        SELECT bg, COUNT(*) AS cnt,
-               SUM(COUNT(*)) OVER (PARTITION BY substr(bg, 1, 1)) AS tot
-        FROM bg GROUP BY bg
-      )
-    ),
-    scores AS (
-      SELECT doc_id,
-             CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-             CAST(SUM(logp_unats) AS BIGINT) AS sum_logp_unats
-      FROM bg JOIN model USING (bg)
-      GROUP BY doc_id
-    ),
+    oracle=f"""
+    WITH {K.charlm_scores_sql()},
     tiled AS (
       SELECT d.lang, sc.doc_id, sc.n_bigrams, sc.sum_logp_unats,
              ntile(3) OVER (PARTITION BY d.lang
                ORDER BY CAST(sc.sum_logp_unats AS DOUBLE)
                         / (1000000 * sc.n_bigrams) DESC,
                         sc.doc_id) AS tile
-      FROM scores sc JOIN documents d USING (doc_id)
+      FROM lm_scores sc JOIN documents d USING (doc_id)
     )
     SELECT lang,
            CASE tile WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
@@ -3947,7 +3660,7 @@ def corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNET HEAD/MIDDLE/TAIL BUCKETING — the exact recipe CCNet (and
     the pipelines built on it) uses to stratify a crawl: score every
     document with the in-engine LM ([[doc_charlm_score]]'s exact
-    integer micro-nat totals, shared via ``_charlm_doc_scores``), then
+    integer micro-nat totals, shared via ``text_kit.charlm_scores``), then
     split EACH LANGUAGE into perplexity terciles — head (most fluent)
     / middle / tail — so downstream mixing can oversample head and
     drop or audit tail. The per-language ntile runs over the average
@@ -3961,8 +3674,9 @@ def corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     [[orders_quantile_sketch]]'s pattern — instead of a full sort).
     Documents shorter than one bigram carry no LM evidence and stay
     out of the buckets."""
-    scores = _charlm_doc_scores(spark, sf_dir)
-    d = t(spark, sf_dir, "documents").select("doc_id", "lang")
+    d = t(spark, sf_dir, "documents")
+    scores = K.charlm_scores(d)
+    d = d.select("doc_id", "lang")
     avg = F.col("sum_logp_unats").cast("double") / (
         1000000 * F.col("n_bigrams")
     )
@@ -3997,7 +3711,7 @@ def corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH tok AS (
       SELECT doc_id, lang, source,
              CAST(length(text) AS BIGINT) AS n_chars,
-             CAST(len({_TOKENS_SQL}) AS BIGINT) AS n_tokens,
+             CAST(len({K.TOKENS_SQL}) AS BIGINT) AS n_tokens,
              md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
       FROM documents
     )
@@ -4041,12 +3755,12 @@ def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: every value is an exact integer (counts, sums, md5
     distinct); no averages, so no division anywhere. Scale shape: ONE
     pass computes all per-doc stats, then each section is a
-    map-side-combined aggregate over it. Round-9: the per-doc stats
-    table is lazily localCheckpoint-ed (GC-collectable blocks, not a
-    leaked cache — the no-leaked-cache harness invariant stays green),
-    so the tokenize+md5 corpus pass runs ONCE and every section leg is
-    a cheap rollup; previously Spark evaluated the shared scan once
-    per section (9 scans in the built plan)."""
+    map-side-combined aggregate over it. The per-doc stats table is
+    lazily localCheckpoint-ed (GC-collectable blocks, not a leaked
+    cache — the no-leaked-cache harness invariant stays green), so the
+    tokenize+md5 corpus pass runs ONCE and every section leg is a
+    cheap rollup instead of one shared-scan evaluation per section (9
+    scans in the built plan)."""
     d = t(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",

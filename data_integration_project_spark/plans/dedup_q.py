@@ -5,7 +5,9 @@ deterministically: mutated copies of every 10th document (token
 appended / token dropped) under ``doc_id + 100000``. The Spark side
 runs the real operators (operators/dedup.py); the oracles rebuild the
 same signatures/pairs in DuckDB with the identical portable hash
-(polynomial char fold mod 2^31-1 — verified bit-equal).
+(polynomial char fold mod 2^31-1 — verified bit-equal). The corpus,
+shingle, signature, candidate and verify pieces come from
+``text_kit``, once per engine.
 """
 
 from __future__ import annotations
@@ -13,79 +15,43 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..operators import dedup as D
+from . import text_kit as K
 from .catalog import query, run_tmpdir, t
 
 # ---------------------------------------------------------------------------
-# Shared corpus-with-injected-duplicates (Spark + SQL twins)
+# Corpora with planted duplicates (text_kit.variant_corpus specs)
 # ---------------------------------------------------------------------------
 
-# %10==0 → exact copy; %10==5 → near-copy (one token appended)
-_CORPUS_SQL = """
-    WITH corpus AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 0
-      UNION ALL
-      SELECT doc_id + 100000, text || ' extra' FROM documents WHERE doc_id % 10 = 5
-    )
-"""
+#: every document, plus an exact copy of each %10 == 0 one and a
+#: one-token edit of each %10 == 5 one, the copies under doc_id + 100000
+_PLANTED = (
+    (None, 0, "text"),
+    ("doc_id % 10 = 0", 100000, "text"),
+    ("doc_id % 10 = 5", 100000, "text || ' extra'"),
+)
+_CORPUS_SQL = f"WITH {K.variant_corpus_sql(_PLANTED)}"
+
+#: every 10th document in four versions: the original, an exact copy and
+#: two successive one-token edits, so the pair graph has multi-hop paths
+#: (orig ~ copy ~ +extra ~ +extra extra) and transitivity matters
+_CHAIN = (
+    (None, 0, "text"),
+    (None, 100000, "text"),
+    (None, 200000, "text || ' extra'"),
+    (None, 300000, "text || ' extra extra'"),
+)
+_CHAIN_WHERE = "doc_id % 10 = 0"
+_CHAIN_CORPUS_SQL = f"WITH RECURSIVE {K.variant_corpus_sql(_CHAIN, _CHAIN_WHERE)}"
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round-9 (guide §2.4): was a UNION of three selections of the SAME
-    # table — three scans per reference, and ten queries reference this
-    # corpus (several more than once per plan). One scan emits each
-    # row's variants as a conditional array + explode: identical row
-    # multiset (injected branches partition on doc_id % 10; the base
-    # branch keeps every row).
-    d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    did, txt = F.col("doc_id"), F.col("text")
-    mod = did % 10
-    empty = F.array().cast("array<struct<doc_id:bigint,text:string>>")
-    rows = F.concat(
-        F.array(F.struct(did.alias("doc_id"), txt.alias("text"))),
-        F.when(
-            mod == 0,
-            F.array(F.struct((did + 100000).alias("doc_id"), txt.alias("text"))),
-        ).otherwise(empty),
-        F.when(
-            mod == 5,
-            F.array(
-                F.struct(
-                    (did + 100000).alias("doc_id"),
-                    F.concat(txt, F.lit(" extra")).alias("text"),
-                )
-            ),
-        ).otherwise(empty),
-    )
-    return d.select(F.explode(rows).alias("_r")).select("_r.doc_id", "_r.text")
+    return K.variant_corpus(t(spark, sf_dir, "documents"), _PLANTED)
 
 
-_PORTABLE_HASH_SQL = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(string_split({s}, ''), c -> CAST(ascii(c) AS BIGINT))), "
-    "(acc, c) -> (acc*31 + c) % 2147483647)"
-)
-
-_TOKENS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
-#: per-token char-fold hashes — mirror of functions.text.token_hash_array
-_TOKEN_HASHES = (
-    f"list_transform({_TOKENS}, t -> {_PORTABLE_HASH_SQL.format(s='t')})"
-)
-# 3-token window hashes: numeric fold (acc*M + tok_hash) mod P over each
-# window, mirroring operators.dedup.with_shingle_set (k=3 closed form;
-# the first step's mod is a no-op since tok hashes are already < P).
-_SHINGLES_SQL = f"""
-      SELECT DISTINCT doc_id, shash FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                 generate_series(1, greatest(len(th) - 2, 0)),
-                 i -> ((((th[i] * 1000003 + th[i+1]) % 2147483647)
-                        * 1000003 + th[i+2]) % 2147483647))) AS shash
-        FROM (SELECT doc_id, {_TOKEN_HASHES} AS th FROM corpus)
-      )
-"""
+def _chain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return K.variant_corpus(t(spark, sf_dir, "documents"), _CHAIN, _CHAIN_WHERE)
 
 
 # ---------------------------------------------------------------------------
@@ -128,50 +94,12 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-_N_HASHES, _N_BANDS, _ROWS_PER_BAND = 16, 4, 4
-_PARAMS_SQL = ", ".join(
-    f"({i}, {a}, {b})" for i, (a, b) in enumerate(D.hash_params(_N_HASHES))
-)
-
-
 @query(
     "dedup_minhash_lsh",
-    oracle=_CORPUS_SQL
-    + f"""
-    , shingled AS ({_SHINGLES_SQL}),
-    params(hidx, a, b) AS (VALUES {_PARAMS_SQL}),
-    sigs AS (
-      SELECT doc_id, hidx, min((a * shash + b) % 2147483647) AS minhash
-      FROM shingled CROSS JOIN params
-      GROUP BY doc_id, hidx
-    ),
-    buckets AS (
-      SELECT doc_id, hidx // {_ROWS_PER_BAND} AS band,
-             string_agg(minhash, '-' ORDER BY hidx) AS bucket
-      FROM sigs GROUP BY doc_id, hidx // {_ROWS_PER_BAND}
-    ),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM buckets a JOIN buckets b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    inter AS (
-      SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
-      FROM cands c
-      JOIN shingled sa ON sa.doc_id = c.id_a
-      JOIN shingled sb ON sb.doc_id = c.id_b AND sb.shash = sa.shash
-      GROUP BY c.id_a, c.id_b
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingled GROUP BY doc_id)
-    SELECT c.id_a AS _id_a, c.id_b AS _id_b,
-           CAST(COALESCE(i.n_inter, 0) AS DOUBLE)
-             / (za.sz + zb.sz - COALESCE(i.n_inter, 0)) AS jaccard
-    FROM cands c
-    LEFT JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
-    JOIN sizes za ON za.doc_id = c.id_a
-    JOIN sizes zb ON zb.doc_id = c.id_b
-    WHERE CAST(COALESCE(i.n_inter, 0) AS DOUBLE)
-            / (za.sz + zb.sz - COALESCE(i.n_inter, 0)) >= 0.5
+    oracle=f"""{_CORPUS_SQL},
+    {K.near_dup_sql('corpus')}
+    SELECT id_a AS _id_a, id_b AS _id_b, {K.JACCARD_SQL} AS jaccard
+    FROM scored WHERE {K.JACCARD_SQL} >= 0.5
     """,
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,15 +108,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully relational (explode/groupBy/join) — the oracle reproduces the
     identical signatures in SQL. At corpus scale the only quadratic step
     is within-bucket pairing, bounded by the banding s-curve."""
-    return D.minhash_lsh_dedup(
-        _corpus(spark, sf_dir),
-        "doc_id",
-        "text",
-        shingle_k=3,
-        n_hashes=_N_HASHES,
-        n_bands=_N_BANDS,
-        threshold=0.5,
-    )
+    return K.near_dup_pairs(_corpus(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -196,58 +116,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # near-dup pair graph)
 # ---------------------------------------------------------------------------
 
-# Chain corpus: every 10th doc in four versions — exact copy plus two
-# successive one-token edits — so the pair graph has multi-hop paths
-# (orig ~ copy ~ +extra ~ +extra extra) and transitivity actually
-# matters: pairwise dedup alone would keep multiple chain members.
-_CHAIN_CORPUS_SQL = """
-    WITH RECURSIVE corpus AS (
-      SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0
-      UNION ALL
-      SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 0
-      UNION ALL
-      SELECT doc_id + 200000, text || ' extra' FROM documents WHERE doc_id % 10 = 0
-      UNION ALL
-      SELECT doc_id + 300000, text || ' extra extra' FROM documents
-      WHERE doc_id % 10 = 0
-    )
-"""
-
-_PAIRS_BLOCKS_SQL = f"""
-    , shingled AS ({_SHINGLES_SQL}),
-    params(hidx, a, b) AS (VALUES {_PARAMS_SQL}),
-    sigs AS (
-      SELECT doc_id, hidx, min((a * shash + b) % 2147483647) AS minhash
-      FROM shingled CROSS JOIN params
-      GROUP BY doc_id, hidx
-    ),
-    buckets AS (
-      SELECT doc_id, hidx // {_ROWS_PER_BAND} AS band,
-             string_agg(minhash, '-' ORDER BY hidx) AS bucket
-      FROM sigs GROUP BY doc_id, hidx // {_ROWS_PER_BAND}
-    ),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM buckets a JOIN buckets b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    inter AS (
-      SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
-      FROM cands c
-      JOIN shingled sa ON sa.doc_id = c.id_a
-      JOIN shingled sb ON sb.doc_id = c.id_b AND sb.shash = sa.shash
-      GROUP BY c.id_a, c.id_b
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingled GROUP BY doc_id),
-    pairs AS (
-      SELECT c.id_a, c.id_b
-      FROM cands c
-      LEFT JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
-      JOIN sizes za ON za.doc_id = c.id_a
-      JOIN sizes zb ON zb.doc_id = c.id_b
-      WHERE CAST(COALESCE(i.n_inter, 0) AS DOUBLE)
-              / (za.sz + zb.sz - COALESCE(i.n_inter, 0)) >= 0.5
-    )
+_PAIRS_BLOCKS_SQL = f""",
+    {K.near_dup_sql('corpus')},
+    pairs AS (SELECT id_a, id_b FROM scored WHERE {K.JACCARD_SQL} >= 0.5)
 """
 
 
@@ -283,42 +154,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes and resolves reachability with a recursive CTE — the
     fixpoints agree exactly. The Spark loop is O(graph diameter)
     bounded shuffles; edit-chain clusters are shallow."""
-    base = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 10 == 0)
-    )
-
-    # Round-9 (guide §2.4, the [[streaming_neardup_ingest]] fold): was a
-    # 4-branch UNION of the same filtered base — 4 scans per reference.
-    # One scan emits all four variants per row; identical row multiset.
-    def variant(offset: int, suffix: str):
-        txt = (
-            F.concat(F.col("text"), F.lit(suffix)) if suffix else F.col("text")
-        )
-        return F.struct(
-            (F.col("doc_id") + offset).alias("doc_id"), txt.alias("text")
-        )
-
-    corpus = base.select(
-        F.explode(
-            F.array(
-                variant(0, ""),
-                variant(100000, ""),
-                variant(200000, " extra"),
-                variant(300000, " extra extra"),
-            )
-        ).alias("_r")
-    ).select("_r.doc_id", "_r.text")
-    pairs = D.minhash_lsh_dedup(
-        corpus,
-        "doc_id",
-        "text",
-        shingle_k=3,
-        n_hashes=_N_HASHES,
-        n_bands=_N_BANDS,
-        threshold=0.5,
-    )
+    corpus = _chain_corpus(spark, sf_dir)
+    pairs = K.near_dup_pairs(corpus)
     labels = D.connected_components(pairs)
     return (
         labels.groupBy("comp")
@@ -339,33 +176,32 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _simhash_bit_sql(j: int) -> str:
-    src = "h" if j < 31 else "h2"
-    return f"SUM(CASE WHEN ({src} // {1 << (j % 31)}) % 2 = 1 THEN 1 ELSE -1 END) AS s{j}"
+def _simhash_sql(src: str) -> str:
+    """``sigs`` (doc_id, simhash) over the (doc_id, text) CTE ``src``:
+    SQL twin of ``operators.dedup.simhash_signature`` at 62 bits."""
+    bits = [
+        f"SUM(CASE WHEN ({'h' if j < 31 else 'h2'} // {1 << (j % 31)}) % 2 = 1"
+        f" THEN 1 ELSE -1 END) AS s{j}"
+        for j in range(62)
+    ]
+    sig = " + ".join(f"CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(62))
+    return f"""sigs AS (
+      SELECT doc_id, CAST({sig} AS BIGINT) AS simhash
+      FROM (
+        SELECT doc_id, {', '.join(bits)}
+        FROM (
+          SELECT doc_id, h, ({D.A2} * h + {D.B2}) % 2147483647 AS h2
+          FROM (SELECT doc_id, {K.char_fold_sql('tok')} AS h
+                FROM (SELECT doc_id, unnest({K.TOKENS_SQL}) AS tok FROM {src}))
+        ) GROUP BY doc_id
+      )
+    )"""
 
 
 @query(
     "dedup_simhash",
-    oracle=_CORPUS_SQL
-    + f"""
-    , toks AS (
-      SELECT doc_id, unnest({_TOKENS}) AS tok FROM corpus
-    ),
-    hashed AS (
-      SELECT doc_id, h, ({D.A2} * h + {D.B2}) % 2147483647 AS h2 FROM (
-        SELECT doc_id, {_PORTABLE_HASH_SQL.format(s='tok')} AS h FROM toks
-      )
-    ),
-    sums AS (
-      SELECT doc_id, {', '.join(_simhash_bit_sql(j) for j in range(62))}
-      FROM hashed GROUP BY doc_id
-    ),
-    sigs AS (
-      SELECT doc_id,
-        CAST({' + '.join(f"CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(62))} AS BIGINT)
-          AS simhash
-      FROM sums
-    )
+    oracle=f"""{_CORPUS_SQL},
+    {_simhash_sql('corpus')}
     SELECT a.doc_id AS _id_a, b.doc_id AS _id_b,
            bit_count(xor(a.simhash, b.simhash)) AS hamming
     FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
@@ -380,11 +216,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle checks the same pair set the slow way (its corpus is
     small); signatures are bit-identical across engines.
 
-    Round-9 optimization (guide §1.1): the banding self-join evaluates
-    its input once PER SIDE, and the signature pipeline (tokenize, dim
-    hash join, 62-way bit-sum aggregate — measured 1.8 s of the
-    query's 2.2 s at sf0.1) sits entirely AFTER its last exchange, so
-    ReuseExchange cannot dedup it — the whole corpus pass ran twice.
+    The banding self-join evaluates its input once PER SIDE, and the
+    signature pipeline (tokenize, dim hash join, 62-way bit-sum
+    aggregate — measured 1.8 s of the query's 2.2 s at sf0.1) sits
+    entirely AFTER its last exchange, so ReuseExchange cannot dedup it
+    — without a checkpoint the whole corpus pass runs twice.
     localCheckpoint materializes the |docs|-row signature table once;
     both join sides read the checkpointed blocks (GC-collectable, not
     a leaked cache)."""
@@ -403,31 +239,16 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_ngram_jaccard",
-    oracle=_CORPUS_SQL
-    + f"""
-    , shingled AS ({_SHINGLES_SQL}),
+    oracle=f"""{_CORPUS_SQL},
+    shingled AS ({K.shingles_sql('corpus', 3)}),
     subset AS (SELECT DISTINCT doc_id FROM corpus WHERE doc_id % 20 = 0),
     pairs AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
       FROM subset a JOIN subset b ON a.doc_id < b.doc_id
-    ),
-    inter AS (
-      SELECT p.id_a, p.id_b, COUNT(*) AS n_inter
-      FROM pairs p
-      JOIN shingled sa ON sa.doc_id = p.id_a
-      JOIN shingled sb ON sb.doc_id = p.id_b AND sb.shash = sa.shash
-      GROUP BY p.id_a, p.id_b
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingled GROUP BY doc_id)
-    SELECT p.id_a AS _id_a, p.id_b AS _id_b,
-           CAST(COALESCE(i.n_inter, 0) AS DOUBLE)
-             / (za.sz + zb.sz - COALESCE(i.n_inter, 0)) AS jaccard
-    FROM pairs p
-    LEFT JOIN inter i ON i.id_a = p.id_a AND i.id_b = p.id_b
-    JOIN sizes za ON za.doc_id = p.id_a
-    JOIN sizes zb ON zb.doc_id = p.id_b
-    WHERE CAST(COALESCE(i.n_inter, 0) AS DOUBLE)
-            / (za.sz + zb.sz - COALESCE(i.n_inter, 0)) >= 0.3
+    )
+    SELECT id_a AS _id_a, id_b AS _id_b, {K.JACCARD_SQL} AS jaccard
+    FROM ({K.verified_sql('pairs', 'shingled')})
+    WHERE {K.JACCARD_SQL} >= 0.3
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,15 +265,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``array_intersect`` per surviving candidate
     (``tests/test_plan_shapes.py`` pins the no-cartesian contract)."""
     corpus = _corpus(spark, sf_dir).filter(F.col("doc_id") % 20 == 0)
-    # Round-9 (guide §1.2): `sets` feeds the frequency pass, the
-    # prefix-ordering window, BOTH prefix-join sides and BOTH verify
-    # attaches — since the shingle fold is pure scan projection, the
-    # un-checkpointed plan re-ran the corpus scan 18 times (the a/b
-    # prefix branches broadcast one side, so ReuseExchange has nothing
-    # to dedup — unlike [[dedup_prefix_filter_join]] where the shared
-    # window exchange IS reused and a checkpoint measured a loss).
-    # localCheckpoint of sets + prefix: 18 scans -> 1, interleaved A/B
-    # lower on every rep (1.28 vs 1.17 best), parity exact.
+    # `sets` feeds the frequency pass, the prefix-ordering window, both
+    # prefix-join sides and both verify attaches, and the shingle fold
+    # is pure scan projection with no exchange for ReuseExchange to
+    # share: without the checkpoints the plan scans the corpus 18 times
     sets = D.shingle_sets(corpus, "doc_id", "text", 3).localCheckpoint()
     rows = sets.select("doc_id", F.explode("_shs").alias("_shash"))
     freq = rows.groupBy("_shash").agg(F.count(F.lit(1)).alias("df"))
@@ -498,28 +314,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _shingle_fold_sql(k: int) -> str:
-    """Nested (acc*M + th[i+j]) % P fold over a k-token window —
-    the SQL twin of operators.dedup.shingle_rows for any k."""
-    expr = "th[i]"
-    for j in range(1, k):
-        expr = f"(({expr}) * 1000003 + th[i+{j}]) % 2147483647"
-    return expr
-
-
-def _shingles_sql_for(src: str, k: int) -> str:
-    """DISTINCT (doc_id, shash) k-gram shingle hashes over CTE ``src``."""
-    return f"""
-      SELECT DISTINCT doc_id, shash FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                 generate_series(1, greatest(len(th) - {k - 1}, 0)),
-                 i -> {_shingle_fold_sql(k)})) AS shash
-        FROM (SELECT doc_id, {_TOKEN_HASHES} AS th FROM {src})
-      )
-    """
-
-
 _DECON_K = 8
 
 
@@ -535,8 +329,8 @@ _DECON_K = 8
     evalset AS (
       SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0
     ),
-    ts AS ({_shingles_sql_for('train', _DECON_K)}),
-    es AS ({_shingles_sql_for('evalset', _DECON_K)})
+    ts AS ({K.shingles_sql('train', _DECON_K)}),
+    es AS ({K.shingles_sql('evalset', _DECON_K)})
     SELECT t.doc_id AS train_id, e.doc_id AS eval_id,
            COUNT(*) AS n_shared_ngrams
     FROM ts t JOIN es e ON t.shash = e.shash
@@ -724,27 +518,10 @@ def dedup_incremental_against_store(spark: SparkSession, sf_dir: str) -> DataFra
              'novel'
       FROM documents WHERE doc_id % 10 = 2
     ),
-    store_sh AS ({_shingles_sql_for('documents', 3)}),
-    in_sh AS ({_shingles_sql_for('incoming', 3)}),
-    params(hidx, a, b) AS (VALUES {_PARAMS_SQL}),
-    store_buckets AS (
-      SELECT DISTINCT band, bucket FROM (
-        SELECT doc_id, hidx // {_ROWS_PER_BAND} AS band,
-               string_agg(minhash, '-' ORDER BY hidx) AS bucket
-        FROM (
-          SELECT doc_id, hidx, min((a * shash + b) % 2147483647) AS minhash
-          FROM store_sh CROSS JOIN params GROUP BY doc_id, hidx
-        ) GROUP BY doc_id, hidx // {_ROWS_PER_BAND}
-      )
-    ),
-    in_buckets AS (
-      SELECT doc_id, hidx // {_ROWS_PER_BAND} AS band,
-             string_agg(minhash, '-' ORDER BY hidx) AS bucket
-      FROM (
-        SELECT doc_id, hidx, min((a * shash + b) % 2147483647) AS minhash
-        FROM in_sh CROSS JOIN params GROUP BY doc_id, hidx
-      ) GROUP BY doc_id, hidx // {_ROWS_PER_BAND}
-    ),
+    store_sh AS ({K.shingles_sql('documents', 3)}),
+    in_sh AS ({K.shingles_sql('incoming', 3)}),
+    store_buckets AS (SELECT DISTINCT band, bucket FROM ({K.buckets_sql('store_sh')})),
+    in_buckets AS ({K.buckets_sql('in_sh')}),
     hits AS (
       SELECT DISTINCT i.doc_id
       FROM in_buckets i JOIN store_buckets s
@@ -805,12 +582,9 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     did = F.col("doc_id")
-    # Round-9 optimization (guide §2.4): the three ingest classes were
-    # a UNION of three filtered selections of the SAME stream source —
-    # every micro-batch planned three scans of the batch's files. One
-    # scan with CASE-branched projections emits the identical row set
-    # (the classes partition on doc_id % 10, so no row belongs to two
-    # branches and union order is immaterial to the rollup).
+    # one scan with CASE-branched projections emits all three ingest
+    # classes (they partition on doc_id % 10), not three scans of each
+    # micro-batch's files
     mod = did % 10
     incoming = src.filter(mod.isin(0, 5, 2)).select(
         F.when(mod == 2, did + 200000).otherwise(did + 100000).alias("doc_id"),
@@ -903,36 +677,12 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
              'b2_novel'
       FROM documents WHERE doc_id % 10 = 7
     ),
-    store_sh AS ({{store_sh}}),
-    b1_sh AS ({{b1_sh}}),
-    b2_sh AS ({{b2_sh}}),
-    params(hidx, a, b) AS (VALUES {_PARAMS_SQL}),
-    store_buckets AS (
-      SELECT DISTINCT band, bucket FROM (
-        SELECT doc_id, hidx // {_ROWS_PER_BAND} AS band,
-               string_agg(minhash, '-' ORDER BY hidx) AS bucket
-        FROM (
-          SELECT doc_id, hidx, min((a * shash + b) % 2147483647) AS minhash
-          FROM store_sh CROSS JOIN params GROUP BY doc_id, hidx
-        ) GROUP BY doc_id, hidx // {_ROWS_PER_BAND}
-      )
-    ),
-    b1_buckets AS (
-      SELECT doc_id, hidx // {_ROWS_PER_BAND} AS band,
-             string_agg(minhash, '-' ORDER BY hidx) AS bucket
-      FROM (
-        SELECT doc_id, hidx, min((a * shash + b) % 2147483647) AS minhash
-        FROM b1_sh CROSS JOIN params GROUP BY doc_id, hidx
-      ) GROUP BY doc_id, hidx // {_ROWS_PER_BAND}
-    ),
-    b2_buckets AS (
-      SELECT doc_id, hidx // {_ROWS_PER_BAND} AS band,
-             string_agg(minhash, '-' ORDER BY hidx) AS bucket
-      FROM (
-        SELECT doc_id, hidx, min((a * shash + b) % 2147483647) AS minhash
-        FROM b2_sh CROSS JOIN params GROUP BY doc_id, hidx
-      ) GROUP BY doc_id, hidx // {_ROWS_PER_BAND}
-    ),
+    store_sh AS ({K.shingles_sql('documents', 3)}),
+    b1_sh AS ({K.shingles_sql('b1', 3)}),
+    b2_sh AS ({K.shingles_sql('b2', 3)}),
+    store_buckets AS (SELECT DISTINCT band, bucket FROM ({K.buckets_sql('store_sh')})),
+    b1_buckets AS ({K.buckets_sql('b1_sh')}),
+    b2_buckets AS ({K.buckets_sql('b2_sh')}),
     hits1 AS (
       SELECT DISTINCT i.doc_id
       FROM b1_buckets i JOIN store_buckets s
@@ -963,11 +713,7 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(f) AS BIGINT) AS n_flagged,
            CAST(SUM(1 - f) AS BIGINT) AS n_passed
     FROM flags GROUP BY ingest_class
-    """.format(
-        store_sh=_shingles_sql_for("documents", 3),
-        b1_sh=_shingles_sql_for("b1", 3),
-        b2_sh=_shingles_sql_for("b2", 3),
-    ),
+    """,
 )
 def streaming_neardup_store_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup ingest where the store GROWS as batches are accepted —
@@ -1110,12 +856,8 @@ def streaming_neardup_store_growth(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query(
     "dedup_prefix_filter_join",
-    oracle="""
-    WITH tk AS (
-      SELECT doc_id,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS tk
-      FROM documents
-    ),
+    oracle=f"""
+    WITH tk AS (SELECT doc_id, {K.TOKENS_SQL} AS tk FROM documents),
     toks AS (
       SELECT DISTINCT doc_id,
              unnest(list_transform(range(1, len(tk) - 1),
@@ -1177,7 +919,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-skewed (the heavy shingles never enter the join). All integer
     math; one double division at the end."""
     d = t(spark, sf_dir, "documents")
-    tk = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    tk = tokens(F.col("text"))
     toks = (
         d.select("doc_id", tk.alias("tk"))
         .filter(F.size("tk") >= 3)
@@ -1196,21 +938,16 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     freq = toks.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    # Round-10 part 1 (guide §2.4): the rarest-first ordering used to
-    # be a row_number + count WINDOW over the exploded 260k-row token
-    # stream — a full sort of every partition's tokens — followed by a
-    # separate collect_set aggregate for the verify sets. Each doc's
-    # ordering is decidable in-row: ONE groupBy(doc_id) collects
-    # (df, token) structs and array_sort orders them (df asc, token
-    # asc — the window's exact key), so prefix selection is an in-row
-    # slice, the verify sets are the same array re-projected, and the
-    # global sort disappears (at scale: bounded per-doc array sorts
-    # instead of partition-wide sorts). localCheckpoint of docs_arr
-    # re-measured a LOSS (4.2 vs 2.8 s — serializes the fat string
-    # arrays; ReuseExchange already shares the one doc_id exchange),
-    # same verdict as round 9's `ordered` checkpoint.
+    # Each doc's rarest-first ordering is decided in-row: ONE
+    # groupBy(doc_id) collects (df, token) structs and array_sort orders
+    # them (df asc, token asc), so prefix selection is an in-row slice,
+    # the verify sets are the same array re-projected, and no row_number
+    # window sorts every partition's tokens. A localCheckpoint of
+    # docs_arr measured a loss (4.2 vs 2.8 s: it serializes the fat
+    # string arrays, and ReuseExchange already shares the one doc_id
+    # exchange).
     #
-    # Round-10 part 2 (guide §2.3 — shuffle keys, not payloads): every
+    # Shuffle keys, not payloads: every
     # downstream comparison (prefix equi-join, candidate verify
     # intersect) only needs token IDENTITY, never the string, so each
     # distinct token gets an INJECTIVE int64 id and the ~18-char
@@ -1348,10 +1085,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "doc_containment_pairs",
     oracle=f"""
-    WITH corpus AS (SELECT doc_id, text FROM documents),
-    toks AS (
-      SELECT doc_id, shash AS g FROM ({_SHINGLES_SQL})
-    ),
+    WITH toks AS (SELECT doc_id, shash AS g FROM ({K.shingles_sql('documents', 3)})),
     sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS s FROM toks GROUP BY doc_id),
     freq AS (SELECT g, COUNT(*) AS df FROM toks GROUP BY g),
     ordered AS (
@@ -1537,42 +1271,8 @@ def dedup_clusters_bcubed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: each cell term is one division rounded to integer
     ppb, summed exactly. Scale shape: everything after the pair graph
     is dimension-sized aggregates over cluster labels."""
-    base = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 10 == 0)
-    )
-
-    # Round-9 (guide §2.4, the [[streaming_neardup_ingest]] fold): was a
-    # 4-branch UNION of the same filtered base — 4 scans per reference.
-    # One scan emits all four variants per row; identical row multiset.
-    def variant(offset: int, suffix: str):
-        txt = (
-            F.concat(F.col("text"), F.lit(suffix)) if suffix else F.col("text")
-        )
-        return F.struct(
-            (F.col("doc_id") + offset).alias("doc_id"), txt.alias("text")
-        )
-
-    corpus = base.select(
-        F.explode(
-            F.array(
-                variant(0, ""),
-                variant(100000, ""),
-                variant(200000, " extra"),
-                variant(300000, " extra extra"),
-            )
-        ).alias("_r")
-    ).select("_r.doc_id", "_r.text")
-    pairs = D.minhash_lsh_dedup(
-        corpus,
-        "doc_id",
-        "text",
-        shingle_k=3,
-        n_hashes=_N_HASHES,
-        n_bands=_N_BANDS,
-        threshold=0.5,
-    )
+    corpus = _chain_corpus(spark, sf_dir)
+    pairs = K.near_dup_pairs(corpus)
     cc = D.connected_components(pairs)
     items = (
         corpus.select("doc_id")
@@ -1633,42 +1333,11 @@ def dedup_clusters_bcubed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_threshold_sweep",
-    oracle=_CORPUS_SQL
-    + f"""
-    , shingled AS ({_SHINGLES_SQL}),
-    params(hidx, a, b) AS (VALUES {_PARAMS_SQL}),
-    sigs AS (
-      SELECT doc_id, hidx, min((a * shash + b) % 2147483647) AS minhash
-      FROM shingled CROSS JOIN params
-      GROUP BY doc_id, hidx
-    ),
-    buckets AS (
-      SELECT doc_id, hidx // {_ROWS_PER_BAND} AS band,
-             string_agg(minhash, '-' ORDER BY hidx) AS bucket
-      FROM sigs GROUP BY doc_id, hidx // {_ROWS_PER_BAND}
-    ),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM buckets a JOIN buckets b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    inter AS (
-      SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
-      FROM cands c
-      JOIN shingled sa ON sa.doc_id = c.id_a
-      JOIN shingled sb ON sb.doc_id = c.id_b AND sb.shash = sa.shash
-      GROUP BY c.id_a, c.id_b
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingled GROUP BY doc_id),
-    scored AS (
-      SELECT c.id_a, c.id_b,
-             CAST(COALESCE(i.n_inter, 0) AS DOUBLE)
-               / (za.sz + zb.sz - COALESCE(i.n_inter, 0)) AS jac,
-             CAST(c.id_b - c.id_a = 100000 AS INT) AS is_planted
-      FROM cands c
-      LEFT JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
-      JOIN sizes za ON za.doc_id = c.id_a
-      JOIN sizes zb ON zb.doc_id = c.id_b
+    oracle=f"""{_CORPUS_SQL},
+    {K.near_dup_sql('corpus')},
+    jac AS (
+      SELECT {K.JACCARD_SQL} AS jac, CAST(id_b - id_a = 100000 AS INT) AS is_planted
+      FROM scored
     ),
     n_planted AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS np FROM documents WHERE doc_id % 5 = 0
@@ -1689,7 +1358,7 @@ def dedup_clusters_bcubed(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      AND s.is_planted = 1
                                     THEN 1 ELSE 0 END) AS DOUBLE) * 1000000
                       / (SELECT np FROM n_planted)) AS BIGINT) AS recall_ppm
-    FROM thresholds t, scored s
+    FROM thresholds t, jac s
     GROUP BY t.thr_pct
     """,
 )
@@ -1706,15 +1375,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Planted truth: %10==0 docs get an exact copy, %10==5 a one-token
     edit — so at threshold 1.0 only exact copies remain (precision
     stays 1, recall halves): the sweep shows exactly that elbow."""
-    pairs = D.minhash_lsh_dedup(
-        _corpus(spark, sf_dir),
-        "doc_id",
-        "text",
-        shingle_k=3,
-        n_hashes=_N_HASHES,
-        n_bands=_N_BANDS,
-        threshold=0.0,
-    ).select(
+    pairs = K.near_dup_pairs(_corpus(spark, sf_dir), threshold=0.0).select(
         "_id_a",
         "_id_b",
         "jaccard",
@@ -1800,7 +1461,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.r
     ),
     labels AS (SELECT node, MIN(r) AS comp FROM walk GROUP BY node),
-    scored AS (
+    ranked AS (
       SELECT l.comp, l.node, length(c.text) AS quality,
              ROW_NUMBER() OVER (PARTITION BY l.comp
                                 ORDER BY length(c.text) DESC, l.node) AS rk
@@ -1813,7 +1474,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) - 1 AS BIGINT) AS n_discarded,
            CAST(SUM(CASE WHEN rk > 1 THEN node ELSE 0 END) AS BIGINT)
              AS discarded_checksum
-    FROM scored GROUP BY comp
+    FROM ranked GROUP BY comp
     """,
 )
 def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1827,42 +1488,8 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     component, so survivorship costs one more component-keyed shuffle
     after CC, nothing corpus-wide. Compare customer_golden_records for
     the column-level merge variant on entities."""
-    base = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 10 == 0)
-    )
-
-    # Round-9 (guide §2.4, the [[streaming_neardup_ingest]] fold): was a
-    # 4-branch UNION of the same filtered base — 4 scans per reference.
-    # One scan emits all four variants per row; identical row multiset.
-    def variant(offset: int, suffix: str):
-        txt = (
-            F.concat(F.col("text"), F.lit(suffix)) if suffix else F.col("text")
-        )
-        return F.struct(
-            (F.col("doc_id") + offset).alias("doc_id"), txt.alias("text")
-        )
-
-    corpus = base.select(
-        F.explode(
-            F.array(
-                variant(0, ""),
-                variant(100000, ""),
-                variant(200000, " extra"),
-                variant(300000, " extra extra"),
-            )
-        ).alias("_r")
-    ).select("_r.doc_id", "_r.text")
-    pairs = D.minhash_lsh_dedup(
-        corpus,
-        "doc_id",
-        "text",
-        shingle_k=3,
-        n_hashes=_N_HASHES,
-        n_bands=_N_BANDS,
-        threshold=0.5,
-    )
+    corpus = _chain_corpus(spark, sf_dir)
+    pairs = K.near_dup_pairs(corpus)
     labels = D.connected_components(pairs)
     scored = labels.join(
         corpus.select(
@@ -1896,19 +1523,15 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_blocking_quality",
     oracle=_CHAIN_CORPUS_SQL
     + _PAIRS_BLOCKS_SQL
-    + """
+    + f"""
     , copairs AS (
-      SELECT sa.doc_id AS id_a, sb.doc_id AS id_b, COUNT(*) AS n_inter
+      SELECT DISTINCT sa.doc_id AS id_a, sb.doc_id AS id_b
       FROM shingled sa
       JOIN shingled sb ON sb.shash = sa.shash AND sa.doc_id < sb.doc_id
-      GROUP BY 1, 2
     ),
     truth AS (
-      SELECT c.id_a, c.id_b
-      FROM copairs c
-      JOIN sizes za ON za.doc_id = c.id_a
-      JOIN sizes zb ON zb.doc_id = c.id_b
-      WHERE CAST(c.n_inter AS DOUBLE) / (za.sz + zb.sz - c.n_inter) >= 0.5
+      SELECT id_a, id_b FROM ({K.verified_sql('copairs', 'shingled')})
+      WHERE {K.JACCARD_SQL} >= 0.5
     ),
     m AS (
       SELECT (SELECT COUNT(*) FROM corpus) AS nd,
@@ -1940,41 +1563,15 @@ def dedup_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the enumeration is complete — no N² scan). Complements
     dedup_clusters_bcubed, which scores the END clustering; this
     scores the candidate generator."""
-    base = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 10 == 0)
-    )
-
-    # Round-9 (guide §2.4, the [[streaming_neardup_ingest]] fold): was a
-    # 4-branch UNION of the same filtered base — 4 scans per reference.
-    # One scan emits all four variants per row; identical row multiset.
-    def variant(offset: int, suffix: str):
-        txt = (
-            F.concat(F.col("text"), F.lit(suffix)) if suffix else F.col("text")
-        )
-        return F.struct(
-            (F.col("doc_id") + offset).alias("doc_id"), txt.alias("text")
-        )
-
-    corpus = base.select(
-        F.explode(
-            F.array(
-                variant(0, ""),
-                variant(100000, ""),
-                variant(200000, " extra"),
-                variant(300000, " extra extra"),
-            )
-        ).alias("_r")
-    ).select("_r.doc_id", "_r.text")
+    corpus = _chain_corpus(spark, sf_dir)
     # output is one summary row: compute it eagerly inside try/finally
     # so the persisted signature/candidate/truth frames (pair-scale at
     # sf1.0) never outlive the call in a long-lived session
     sets = D.shingle_sets_with_signatures(
-        corpus, "doc_id", "text", 3, _N_HASHES
+        corpus, "doc_id", "text", 3, K.N_HASHES
     ).persist()
     try:
-        buckets = D.lsh_bucket_rows(sets, "doc_id", _N_BANDS, _ROWS_PER_BAND)
+        buckets = D.lsh_bucket_rows(sets, "doc_id", K.N_BANDS, K.ROWS_PER_BAND)
         cand = D.candidate_pairs(buckets, "doc_id").persist()
         try:
             ex = sets.select("doc_id", F.explode("_shs").alias("h"))
@@ -2033,48 +1630,17 @@ def dedup_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Content-defined chunking dedup (FastCDC/LBFS boundary rule)
 # ---------------------------------------------------------------------------
 
-#: CDC corpus adds a PREFIX-shifted near-duplicate — the case that
-#: defeats fixed-size chunking but not content-defined boundaries.
-_CDC_CORPUS_SQL = """
-    WITH corpus AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 0
-      UNION ALL
-      SELECT doc_id + 100000, text || ' extra' FROM documents WHERE doc_id % 10 = 5
-      UNION ALL
-      SELECT doc_id + 200000, 'early preamble ' || text
-      FROM documents WHERE doc_id % 10 = 3
-    )
-"""
-
+#: the planted corpus plus a PREFIX-shifted near-duplicate of each
+#: %10 == 3 document, the case that defeats fixed-size chunking but not
+#: content-defined boundaries
+_CDC = _PLANTED + (("doc_id % 10 = 3", 200000, "'early preamble ' || text"),)
 _CDC_W, _CDC_D = 16, 32
-
-
-def _cdc_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round-9 (guide §2.4, the [[streaming_neardup_ingest]] fold): was a
-    # UNION of four selections of the SAME table — four scans per
-    # reference. One scan emits each row's variants as a conditional
-    # array + explode: identical row multiset (the injected branches
-    # partition on doc_id % 10; the base branch keeps every row).
-    d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    did, txt = F.col("doc_id"), F.col("text")
-    mod = did % 10
-    empty = F.array().cast("array<struct<doc_id:bigint,text:string>>")
-    variant = lambda cond, i, s: F.when(cond, F.array(F.struct(i.alias("doc_id"), s.alias("text")))).otherwise(empty)  # noqa: E731
-    rows = F.concat(
-        F.array(F.struct(did.alias("doc_id"), txt.alias("text"))),
-        variant(mod == 0, did + 100000, txt),
-        variant(mod == 5, did + 100000, F.concat(txt, F.lit(" extra"))),
-        variant(mod == 3, did + 200000, F.concat(F.lit("early preamble "), txt)),
-    )
-    return d.select(F.explode(rows).alias("_r")).select("_r.doc_id", "_r.text")
 
 
 @query(
     "doc_cdc_chunk_dedup",
     oracle=f"""
-    {_CDC_CORPUS_SQL},
+    WITH {K.variant_corpus_sql(_CDC)},
     pos AS (
       SELECT doc_id, text, length(text) AS n,
              unnest(range({_CDC_W}, length(text)+1)) AS i
@@ -2136,7 +1702,7 @@ def doc_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.dedup import cdc_chunk_rows
 
-    corpus = _cdc_corpus(spark, sf_dir)
+    corpus = K.variant_corpus(t(spark, sf_dir, "documents"), _CDC)
     chunks = cdc_chunk_rows(corpus, "doc_id", "text", _CDC_W, _CDC_D)
     perfp = chunks.groupBy("_chunk_fp").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -2182,39 +1748,9 @@ def doc_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM corpus
     ),
     s1 AS (SELECT doc_id, text FROM fp WHERE dup_rank = 1),
-    shingled AS ({_shingles_sql_for('s1', 3)}),
-    params(hidx, a, b) AS (VALUES {_PARAMS_SQL}),
-    sigs AS (
-      SELECT doc_id, hidx, min((a * shash + b) % 2147483647) AS minhash
-      FROM shingled CROSS JOIN params
-      GROUP BY doc_id, hidx
-    ),
-    buckets AS (
-      SELECT doc_id, hidx // 4 AS band,
-             string_agg(minhash, '-' ORDER BY hidx) AS bucket
-      FROM sigs GROUP BY doc_id, hidx // 4
-    ),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM buckets a JOIN buckets b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    inter AS (
-      SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
-      FROM cands c
-      JOIN shingled sa ON sa.doc_id = c.id_a
-      JOIN shingled sb ON sb.doc_id = c.id_b AND sb.shash = sa.shash
-      GROUP BY c.id_a, c.id_b
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingled GROUP BY doc_id),
+    {K.near_dup_sql('s1')},
     dupes AS (
-      SELECT DISTINCT c.id_b AS doc_id
-      FROM cands c
-      LEFT JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
-      JOIN sizes za ON za.doc_id = c.id_a
-      JOIN sizes zb ON zb.doc_id = c.id_b
-      WHERE CAST(COALESCE(i.n_inter, 0) AS DOUBLE)
-              / (za.sz + zb.sz - COALESCE(i.n_inter, 0)) >= 0.5
+      SELECT DISTINCT id_b AS doc_id FROM scored WHERE {K.JACCARD_SQL} >= 0.5
     ),
     flags AS (
       SELECT f.doc_id,
@@ -2260,15 +1796,7 @@ def corpus_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _corpus(spark, sf_dir)
     ranked = D.exact_dedup(c, "doc_id", "text")
     s1 = ranked.filter(F.col("_dup_rank") == 1).select("doc_id", "text")
-    pairs = D.minhash_lsh_dedup(
-        s1,
-        "doc_id",
-        "text",
-        shingle_k=3,
-        n_hashes=_N_HASHES,
-        n_bands=_N_BANDS,
-        threshold=0.5,
-    )
+    pairs = K.near_dup_pairs(s1)
     dupes = pairs.select(F.col("_id_b").alias("doc_id")).distinct()
     flags = (
         ranked.select("doc_id", "_dup_rank")
@@ -2314,17 +1842,10 @@ _ROUGE_W = 16  # last-W-token window per side; DP is W x W
 @query(
     "doc_rougel_pairs",
     oracle=f"""
-    WITH RECURSIVE corpus AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 0
-      UNION ALL
-      SELECT doc_id + 100000, text || ' extra' FROM documents
-      WHERE doc_id % 10 = 5
-    ),
+    WITH RECURSIVE {K.variant_corpus_sql(_PLANTED)},
     tw AS (
       SELECT doc_id, th[greatest(len(th) - {_ROUGE_W - 1}, 1):] AS w
-      FROM (SELECT doc_id, {_TOKEN_HASHES} AS th FROM corpus)
+      FROM (SELECT doc_id, {K.TOKEN_HASHES_SQL} AS th FROM corpus)
     ),
     pairs AS (
       SELECT d.doc_id AS id_a, d.doc_id + 100000 AS id_b,
@@ -2402,10 +1923,9 @@ def doc_rougel_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     W = _ROUGE_W
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
     c = _corpus(spark, sf_dir)
-    # Round-9 (guide §1.2): `th` feeds BOTH pair-attach join sides, and
-    # the tokenize+hash pipeline is pure scan projection (nothing for
-    # ReuseExchange to dedup) — localCheckpoint the (doc_id, 16-hash
-    # window) table so the corpus pass runs once, not twice.
+    # `th` feeds both pair-attach join sides, and the tokenize+hash
+    # pipeline is pure scan projection (nothing for ReuseExchange to
+    # share): the checkpoint runs the corpus pass once, not twice
     th = c.select(
         "doc_id", X.token_hash_array(F.col("text")).alias("th")
     ).select(
@@ -2511,27 +2031,8 @@ def doc_rougel_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "doc_simhash_sort_locality",
     oracle=f"""
-    WITH corpus AS (SELECT doc_id, text FROM documents),
-    toks AS (
-      SELECT doc_id, unnest({_TOKENS}) AS tok FROM corpus
-    ),
-    hashed AS (
-      SELECT doc_id, h, ({D.A2} * h + {D.B2}) % 2147483647 AS h2 FROM (
-        SELECT doc_id, {_PORTABLE_HASH_SQL.format(s='tok')} AS h FROM toks
-      )
-    ),
-    sums AS (
-      SELECT doc_id, {', '.join(_simhash_bit_sql(j) for j in range(62))}
-      FROM hashed GROUP BY doc_id
-    ),
-    sigs AS (
-      SELECT doc_id,
-        CAST({' + '.join(f"CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(62))} AS BIGINT)
-          AS simhash
-      FROM sums
-    ),
-    shingled AS ({_shingles_sql_for('corpus', 3)}),
-    sz AS (SELECT doc_id, COUNT(*) AS sz FROM shingled GROUP BY doc_id),
+    WITH {_simhash_sql('documents')},
+    shingled AS ({K.shingles_sql('documents', 3)}),
     orderings AS (
       SELECT 'doc_id' AS ordering, doc_id,
              ROW_NUMBER() OVER (ORDER BY doc_id) AS rn
@@ -2546,22 +2047,9 @@ def doc_rougel_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orderings o
       JOIN orderings o2 ON o2.ordering = o.ordering AND o2.rn = o.rn + 1
     ),
-    inter AS (
-      SELECT p.ordering, p.id_a, p.id_b, COUNT(*) AS ni
-      FROM pairs p
-      JOIN shingled sa ON sa.doc_id = p.id_a
-      JOIN shingled sb ON sb.doc_id = p.id_b AND sb.shash = sa.shash
-      GROUP BY 1, 2, 3
-    ),
     scored AS (
-      SELECT p.ordering,
-             (COALESCE(i.ni, 0) * 1000000)
-               // (za.sz + zb.sz - COALESCE(i.ni, 0)) AS j_ppm
-      FROM pairs p
-      LEFT JOIN inter i ON i.ordering = p.ordering
-                       AND i.id_a = p.id_a AND i.id_b = p.id_b
-      JOIN sz za ON za.doc_id = p.id_a
-      JOIN sz zb ON zb.doc_id = p.id_b
+      SELECT ordering, (n_inter * 1000000) // n_union AS j_ppm
+      FROM ({K.verified_sql('pairs', 'shingled')})
     )
     SELECT ordering,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
@@ -2595,18 +2083,14 @@ def doc_simhash_sort_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit attaches each side's per-doc shingle-set ARRAY (one row per
     doc) to the |docs| adjacent pairs and intersects in-row.
 
-    Round-9 optimization (guide §2.4/§1.1): the audit previously joined
-    the EXPLODED shingle table three ways (both sides of the
-    intersection join plus a size aggregate) and paired neighbors with
-    a rn = rn+1 self-join — Catalyst replicates the whole
-    tokenize+hash+explode subtree into every branch (106 Exchange
-    nodes). Now the shingle sets materialize ONCE as per-doc arrays
+    The shingle sets materialize ONCE as per-doc arrays
     (``shingle_sets`` — set size = ``size(_shs)``, no separate
     aggregate), neighbor pairing is a ``lead`` window on the existing
     sort (no self-join), and ``ni`` is an in-row ``array_intersect``
-    size — the [[dedup_prefix_filter_join]] verify discipline. Same
-    integers (set semantics preserved: collect_set ≡ distinct rows;
-    inner joins drop the same shingle-less docs), oracle-exact."""
+    size — the [[dedup_prefix_filter_join]] verify discipline. Joining
+    the EXPLODED shingle table three ways instead replicates the whole
+    tokenize+hash+explode subtree into every branch (106 Exchange
+    nodes)."""
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     # Both per-doc tables feed TWO plan branches each (sigs: the two
     # orderings; sets: both sides of the pair audit), and both sit

@@ -16,7 +16,7 @@ from pyspark.sql import Window
 
 from ..operators.quality import RuleSet, not_blank, positive
 from ..streaming.pipeline import ZonePaths, produce_to_inbox, run_inbox_pipeline, streaming_window_counts
-from .catalog import SQL_DSUM, dsum, query, run_tmpdir, t
+from .catalog import SQL_DSUM, SQL_MD5_INT, dsum, query, run_tmpdir, t
 from .customer_model import customer_features, features_sql, gd_step, gd_steps_sql
 
 # ---------------------------------------------------------------------------
@@ -393,14 +393,8 @@ def events_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-#: md5-based 32-bit hash twin of operators.sketch.hll_hash: fold the
-#: first 8 hex digits with acc*16 + digit (ascii arithmetic).
-_HLL_HASH_SQL = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(string_split(substr(md5(CAST({col} AS VARCHAR)), 1, 8), ''), "
-    "c -> CAST(CASE WHEN ascii(c) >= 97 THEN ascii(c) - 87 "
-    "ELSE ascii(c) - 48 END AS BIGINT))), (acc, d) -> acc * 16 + d)"
-)
+#: SQL twin of operators.sketch.hll_hash, a template over ``{col}``.
+_HLL_HASH_SQL = SQL_MD5_INT("CAST({col} AS VARCHAR)", 8)
 
 
 def _hll_rank_sql(m: int, k_max: int) -> str:

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..operators import quality as Q
 from .catalog import SQL_DSUM, dsum, query, run_tmpdir, t
+from .text_kit import char_fold_sql
 
 # ---------------------------------------------------------------------------
 # Deterministic dirt injection (both engines must express this identically)
@@ -1381,17 +1382,8 @@ def orders_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Leakage-safe train/val/test split (duplicate-cluster-aware)
 # ---------------------------------------------------------------------------
 
-_SPLIT_HASH = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(string_split({s}, ''), c -> CAST(ascii(c) AS BIGINT))), "
-    "(acc, c) -> (acc*31 + c) % 2147483647)"
-)
-
-
-_SPLIT_FP = _SPLIT_HASH.format(
-    s="lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-)
-_SPLIT_BUCKET = _SPLIT_HASH.format(s="'split:' || CAST(r.rep AS VARCHAR)")
+_SPLIT_FP = char_fold_sql("lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))")
+_SPLIT_BUCKET = char_fold_sql("'split:' || CAST(r.rep AS VARCHAR)")
 
 
 @query(

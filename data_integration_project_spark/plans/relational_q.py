@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import SQL_DSUM, dsum, query, run_tmpdir, run_tmpfile, t
+from .catalog import SQL_DSUM, SQL_MD5_INT, dsum, query, run_tmpdir, run_tmpfile, t
 from .customer_model import (
     ISOTONIC_SQL,
     LINEAR_SCORE_SQL,
@@ -5970,12 +5970,6 @@ def orders_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KLL_CAP = 256
 _KLL_LMAX = 20
-_KLL_HASH_SQL = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(string_split(substr(md5(CAST({col} AS VARCHAR)), 1, 8), ''), "
-    "c -> CAST(CASE WHEN ascii(c) >= 97 THEN ascii(c) - 87 "
-    "ELSE ascii(c) - 48 END AS BIGINT))), (acc, d) -> acc * 16 + d)"
-)
 
 
 @query(
@@ -5984,7 +5978,7 @@ _KLL_HASH_SQL = (
     WITH c AS (
       SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS v,
              o_orderkey AS id,
-             {_KLL_HASH_SQL.format(col="o_orderkey")} AS h,
+             {SQL_MD5_INT("CAST(o_orderkey AS VARCHAR)", 8)} AS h,
              o_orderkey % 4 AS shard
       FROM orders
     ),
@@ -6234,15 +6228,11 @@ def orders_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_priority_sample",
-    oracle="""
+    oracle=f"""
     WITH sc AS (
       SELECT o_orderkey AS key, o_totalprice AS w,
-             o_totalprice / ((list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(string_split(
-                 substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8), ''),
-                 c -> CAST(CASE WHEN ascii(c) >= 97 THEN ascii(c) - 87
-                      ELSE ascii(c) - 48 END AS BIGINT))),
-               (acc, d) -> acc * 16 + d) + 1) / 4294967296.0) AS priority
+             o_totalprice / (({SQL_MD5_INT("CAST(o_orderkey AS VARCHAR)", 8)} + 1)
+                             / 4294967296.0) AS priority
       FROM orders
     ),
     rk AS (

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import similarity as S
+from . import text_kit as K
 from .catalog import query, t
 
 # left-to-right double fold, matching functions.vectors.dot exactly
@@ -74,7 +75,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     toks AS (
       SELECT doc_id,
-             len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens
+             len({K.TOKENS_SQL}) AS n_tokens
       FROM documents
     ),
     j AS (

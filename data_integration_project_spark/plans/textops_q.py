@@ -14,9 +14,8 @@ from pyspark.sql import functions as F
 
 from ..functions import text as X
 from ..operators import multimodal as M
+from . import text_kit as K
 from .catalog import query, t
-
-_TOKENS_SQL = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 
 
 _BPE_SQL = X.BPE_ISH_PATTERN.replace("'", "''")
@@ -30,11 +29,11 @@ _BPE_SQL = X.BPE_ISH_PATTERN.replace("'", "''")
       lang,
       source,
       CAST(length(text) AS BIGINT) AS n_chars,
-      CAST(len({_TOKENS_SQL}) AS INT) AS n_tokens,
-      CAST(len(list_distinct({_TOKENS_SQL})) AS INT) AS n_distinct_tokens,
+      CAST(len({K.TOKENS_SQL}) AS INT) AS n_tokens,
+      CAST(len(list_distinct({K.TOKENS_SQL})) AS INT) AS n_distinct_tokens,
       CAST(len(regexp_extract_all(text, '{_BPE_SQL}')) AS INT) AS n_bpe_tokens,
-      CAST(len(list_distinct({_TOKENS_SQL})) AS DOUBLE)
-        / len({_TOKENS_SQL}) AS type_token_ratio
+      CAST(len(list_distinct({K.TOKENS_SQL})) AS DOUBLE)
+        / len({K.TOKENS_SQL}) AS type_token_ratio
     FROM documents
     """,
 )
@@ -64,7 +63,7 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH scored AS (
       SELECT doc_id,
         CAST(length(text) AS BIGINT) AS n_chars,
-        len({_TOKENS_SQL}) AS n_tokens,
+        len({K.TOKENS_SQL}) AS n_tokens,
         CAST(length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g')) AS DOUBLE)
           / nullif(length(lower(text)), 0) AS punct_ratio,
         CAST((length(' '||lower(text)||' ') - length(replace(' '||lower(text)||' ', ' the ', '')))/5
@@ -110,7 +109,7 @@ _PREF_SCORE_SQL = f"""(
              - length(replace(' '||lower(text)||' ', ' the ', '')))/5
           + (length(' '||lower(text)||' ')
              - length(replace(' '||lower(text)||' ', ' a ', '')))/3 AS BIGINT)
-  + len({_TOKENS_SQL})
+  + len({K.TOKENS_SQL})
 )"""
 
 
@@ -607,123 +606,15 @@ def doc_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _nb_scored(spark: SparkSession, sf_dir: str, *, with_label: bool = True):
-    """Shared Naive Bayes train+score pipeline for the four NB-family
-    queries (classify / calibration / kappa / margin-AUC) — identical
-    arithmetic to the previous per-query inline copies (same rounding,
-    same total orders), factored with round-9 pass discipline
-    (guide §1.2): the all-409 plan sweep found these queries re-running
-    the corpus tokenize up to 12 times per plan because `toks` fed
-    counts/vocab/priors/scoring and `counts_tl` fed the model twice
-    more. Now `counts_tl` (a |vocab|·|langs| panel) and `pr`
-    (|langs| rows) are lazily checkpointed, and vocab derives from
-    counts_tl (same token set by construction) — THREE corpus passes
-    total (token counts, doc-count priors, scoring), at any scale.
-
-    Returns ``scored``: per-(doc, lang) exact micro-nat NB scores,
-    grouped with ``labeled_lang`` when ``with_label``."""
-    d = t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.col("lang").alias("labeled_lang"),
-        F.explode(X.tokens(F.col("text"))).alias("token"),
-    )
-    counts_tl = (
-        toks.groupBy(F.col("labeled_lang").alias("lang"), "token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
-    )
-    tot_l = counts_tl.groupBy("lang").agg(F.sum("cnt").alias("tot"))
-    vocab = counts_tl.select("token").distinct()
-    vsize = vocab.agg(F.count(F.lit(1)).alias("v"))
-    pr = (
-        toks.groupBy("labeled_lang")
-        .agg(F.countDistinct("doc_id").alias("n"))
-        .localCheckpoint(eager=False)
-    )
-    priors = pr.crossJoin(F.broadcast(pr.agg(F.sum("n").alias("total")))).select(
-        F.col("labeled_lang").alias("lang"),
-        F.round(F.log(F.col("n").cast("double") / F.col("total")) * 1000000)
-        .cast("long")
-        .alias("prior_unats"),
-    )
-    model = (
-        vocab.crossJoin(tot_l)
-        .join(counts_tl, ["token", "lang"], "left")
-        .crossJoin(F.broadcast(vsize))
-        .select(
-            "token",
-            "lang",
-            F.round(
-                F.log(
-                    (F.coalesce(F.col("cnt"), F.lit(0)) + 1).cast("double")
-                    / (F.col("tot") + F.col("v"))
-                )
-                * 1000000
-            )
-            .cast("long")
-            .alias("logp_unats"),
-        )
-    )
-    keys = ["doc_id", "labeled_lang", "lang"] if with_label else ["doc_id", "lang"]
-    return (
-        toks.join(F.broadcast(model), "token")
-        .join(F.broadcast(priors), "lang")
-        .groupBy(*keys)
-        .agg((F.sum("logp_unats") + F.first("prior_unats")).alias("score_unats"))
-    )
-
-
 @query(
     "doc_nb_lang_classify",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, lang AS labeled_lang, unnest({_TOKENS_SQL}) AS token
-      FROM documents
-    ),
-    counts_tl AS (
-      SELECT labeled_lang AS lang, token, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM toks GROUP BY 1, 2
-    ),
-    tot_l AS (
-      SELECT lang, CAST(SUM(cnt) AS BIGINT) AS tot FROM counts_tl GROUP BY lang
-    ),
-    vocab AS (SELECT DISTINCT token FROM toks),
-    vsize AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM vocab),
-    priors AS (
-      SELECT lang,
-             CAST(round(ln(CAST(n AS DOUBLE) / total) * 1000000) AS BIGINT)
-               AS prior_unats
-      FROM (
-        SELECT labeled_lang AS lang,
-               COUNT(DISTINCT doc_id) AS n,
-               SUM(COUNT(DISTINCT doc_id)) OVER () AS total
-        FROM toks GROUP BY labeled_lang
-      )
-    ),
-    model AS (
-      SELECT v.token, l.lang,
-             CAST(round(ln(
-               CAST(COALESCE(c.cnt, 0) + 1 AS DOUBLE)
-               / (l.tot + (SELECT v FROM vsize))
-             ) * 1000000) AS BIGINT) AS logp_unats
-      FROM vocab v CROSS JOIN tot_l l
-      LEFT JOIN counts_tl c ON c.token = v.token AND c.lang = l.lang
-    ),
-    scored AS (
-      SELECT t.doc_id, t.labeled_lang, m.lang,
-             CAST(SUM(m.logp_unats) AS BIGINT) + ANY_VALUE(p.prior_unats)
-               AS score_unats
-      FROM toks t
-      JOIN model m USING (token)
-      JOIN priors p ON p.lang = m.lang
-      GROUP BY t.doc_id, t.labeled_lang, m.lang
-    ),
+    WITH {K.nb_scores_sql()},
     best AS (
       SELECT doc_id, labeled_lang, lang AS detected_lang,
              row_number() OVER (PARTITION BY doc_id
                                 ORDER BY score_unats DESC, lang) AS rn
-      FROM scored
+      FROM nb_scored
     )
     SELECT detected_lang, labeled_lang, COUNT(*) AS n_docs
     FROM best WHERE rn = 1
@@ -746,7 +637,7 @@ def doc_nb_lang_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-side token stream fans out only by |langs| and the doc
     rollup is the single big shuffle. The same plan carries a
     100 TB corpus as long as the pruned vocab stays broadcastable."""
-    scored = _nb_scored(spark, sf_dir)
+    scored = K.nb_scores(t(spark, sf_dir, "documents"))
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("score_unats"), F.asc("lang")
     )
@@ -761,53 +652,12 @@ def doc_nb_lang_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "doc_nb_calibration",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, lang AS labeled_lang, unnest({_TOKENS_SQL}) AS token
-      FROM documents
-    ),
-    counts_tl AS (
-      SELECT labeled_lang AS lang, token, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM toks GROUP BY 1, 2
-    ),
-    tot_l AS (
-      SELECT lang, CAST(SUM(cnt) AS BIGINT) AS tot FROM counts_tl GROUP BY lang
-    ),
-    vocab AS (SELECT DISTINCT token FROM toks),
-    vsize AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM vocab),
-    priors AS (
-      SELECT lang,
-             CAST(round(ln(CAST(n AS DOUBLE) / total) * 1000000) AS BIGINT)
-               AS prior_unats
-      FROM (
-        SELECT labeled_lang AS lang,
-               COUNT(DISTINCT doc_id) AS n,
-               SUM(COUNT(DISTINCT doc_id)) OVER () AS total
-        FROM toks GROUP BY labeled_lang
-      )
-    ),
-    model AS (
-      SELECT v.token, l.lang,
-             CAST(round(ln(
-               CAST(COALESCE(c.cnt, 0) + 1 AS DOUBLE)
-               / (l.tot + (SELECT v FROM vsize))
-             ) * 1000000) AS BIGINT) AS logp_unats
-      FROM vocab v CROSS JOIN tot_l l
-      LEFT JOIN counts_tl c ON c.token = v.token AND c.lang = l.lang
-    ),
-    scored AS (
-      SELECT t.doc_id, t.labeled_lang, m.lang,
-             CAST(SUM(m.logp_unats) AS BIGINT) + ANY_VALUE(p.prior_unats)
-               AS score_unats
-      FROM toks t
-      JOIN model m USING (token)
-      JOIN priors p ON p.lang = m.lang
-      GROUP BY t.doc_id, t.labeled_lang, m.lang
-    ),
+    WITH {K.nb_scores_sql()},
     ranked AS (
       SELECT doc_id, labeled_lang, lang, score_unats,
              row_number() OVER (PARTITION BY doc_id
                                 ORDER BY score_unats DESC, lang) AS rn
-      FROM scored
+      FROM nb_scored
     ),
     per_doc AS (
       SELECT a.doc_id,
@@ -845,10 +695,10 @@ def doc_nb_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: same broadcast-model scoring pass as
     doc_nb_lang_classify, plus a rank window per doc and a
     dimension-sized decile window."""
-    scored = _nb_scored(spark, sf_dir)
+    scored = K.nb_scores(t(spark, sf_dir, "documents"))
     w = Window.partitionBy("doc_id").orderBy(F.desc("score_unats"), F.asc("lang"))
-    # round-9: `ranked` feeds both the top-1 and runner-up branches —
-    # lazy checkpoint so the scoring pass and rank window run once
+    # `ranked` feeds both the top-1 and runner-up branches: the lazy
+    # checkpoint runs the scoring pass and rank window once
     ranked = scored.withColumn("rn", F.row_number().over(w)).localCheckpoint(
         eager=False
     )
@@ -886,48 +736,7 @@ def doc_nb_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _NB_DETECT_SQL = f"""
-    toks AS (
-      SELECT doc_id, lang AS labeled_lang, unnest({_TOKENS_SQL}) AS token
-      FROM documents
-    ),
-    counts_tl AS (
-      SELECT labeled_lang AS lang, token, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM toks GROUP BY 1, 2
-    ),
-    tot_l AS (
-      SELECT lang, CAST(SUM(cnt) AS BIGINT) AS tot FROM counts_tl GROUP BY lang
-    ),
-    vocab AS (SELECT DISTINCT token FROM toks),
-    vsize AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM vocab),
-    priors AS (
-      SELECT lang,
-             CAST(round(ln(CAST(n AS DOUBLE) / total) * 1000000) AS BIGINT)
-               AS prior_unats
-      FROM (
-        SELECT labeled_lang AS lang,
-               COUNT(DISTINCT doc_id) AS n,
-               SUM(COUNT(DISTINCT doc_id)) OVER () AS total
-        FROM toks GROUP BY labeled_lang
-      )
-    ),
-    model AS (
-      SELECT v.token, l.lang,
-             CAST(round(ln(
-               CAST(COALESCE(c.cnt, 0) + 1 AS DOUBLE)
-               / (l.tot + (SELECT v FROM vsize))
-             ) * 1000000) AS BIGINT) AS logp_unats
-      FROM vocab v CROSS JOIN tot_l l
-      LEFT JOIN counts_tl c ON c.token = v.token AND c.lang = l.lang
-    ),
-    nb_scored AS (
-      SELECT t.doc_id, t.labeled_lang, m.lang,
-             CAST(SUM(m.logp_unats) AS BIGINT) + ANY_VALUE(p.prior_unats)
-               AS score_unats
-      FROM toks t
-      JOIN model m USING (token)
-      JOIN priors p ON p.lang = m.lang
-      GROUP BY t.doc_id, t.labeled_lang, m.lang
-    ),
+    {K.nb_scores_sql()},
     nb_best AS (
       SELECT doc_id, labeled_lang, lang AS nb_lang
       FROM (
@@ -1012,7 +821,7 @@ def doc_classifier_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import lang_id
 
     d = t(spark, sf_dir, "documents")
-    nb_scored = _nb_scored(spark, sf_dir, with_label=False)
+    nb_scored = K.nb_scores(t(spark, sf_dir, "documents"))
     wnb = Window.partitionBy("doc_id").orderBy(
         F.desc("score_unats"), F.asc("lang")
     )
@@ -1022,9 +831,9 @@ def doc_classifier_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("lang").alias("nb_lang"))
     )
     heur = d.select("doc_id", lang_id(F.col("text")).alias("heur_lang"))
-    # round-9: `joined` feeds the agreement aggregate and BOTH marginal
-    # rollups — lazy checkpoint of the |docs|-row panel so the NB
-    # scoring pass and the heuristic scan run once, not three times
+    # `joined` feeds the agreement aggregate and both marginal rollups:
+    # the lazy checkpoint of the |docs|-row panel runs the NB scoring
+    # pass and the heuristic scan once, not three times
     joined = nb_best.join(heur, "doc_id").localCheckpoint(eager=False)
     marg = joined.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1113,11 +922,11 @@ def doc_nb_margin_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: margins are exact micro-nat integers; midranks are
     .5-granular doubles whose sums are exact; AUC is a fixed chain."""
-    scored = _nb_scored(spark, sf_dir)
+    scored = K.nb_scores(t(spark, sf_dir, "documents"))
     wr = Window.partitionBy("doc_id").orderBy(
         F.desc("score_unats"), F.asc("lang")
     )
-    # round-9: same two-branch fan-out as doc_nb_calibration
+    # the same two-branch fan-out as doc_nb_calibration
     ranked2 = scored.withColumn("rn", F.row_number().over(wr)).localCheckpoint(
         eager=False
     )
@@ -1159,11 +968,6 @@ def doc_nb_margin_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vocabulary — the feature path that never shuffles a vocab table.
 # ---------------------------------------------------------------------------
 
-_FOLD_TOK_SQL = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(string_split(tok, ''), "
-    "c -> CAST(ascii(c) AS BIGINT))), (acc, c) -> (acc*31 + c) % 2147483647)"
-)
 
 
 @query(
@@ -1173,14 +977,14 @@ _FOLD_TOK_SQL = (
       SELECT doc_id, u.pos, u.tok
       FROM (
         SELECT doc_id,
-               unnest(list_transform(range(1, len({_TOKENS_SQL})+1),
-                      i -> struct_pack(pos := i, tok := {_TOKENS_SQL}[i])))
+               unnest(list_transform(range(1, len({K.TOKENS_SQL})+1),
+                      i -> struct_pack(pos := i, tok := {K.TOKENS_SQL}[i])))
                  AS u
         FROM documents
       )
     ),
     dim AS (
-      SELECT tok, {_FOLD_TOK_SQL} AS h
+      SELECT tok, {K.char_fold_sql('tok')} AS h
       FROM (SELECT DISTINCT tok FROM tokpos)
     ),
     tp AS (
@@ -1411,20 +1215,11 @@ def multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return M.audio_frame_features(media, frame_len=256)
 
 
-#: char_fold_hash twin over one token (see functions/text.py).
-_TOKHASH_SQL = (
-    "list_transform(regexp_split_to_array(lower(trim(text)), '\\s+'), "
-    "t -> list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(string_split(t, ''), c -> CAST(ascii(c) AS BIGINT))), "
-    "(acc, c) -> (acc * 31 + c) % 2147483647))"
-)
-
-
 @query(
     "doc_winnowing_fingerprints",
     oracle=f"""
     WITH th AS (
-      SELECT doc_id, {_TOKHASH_SQL} AS v FROM documents
+      SELECT doc_id, {K.TOKEN_HASHES_SQL} AS v FROM documents
     ),
     gpos AS (
       SELECT doc_id, v, len(v) - 2 AS g,
@@ -1542,11 +1337,8 @@ def doc_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_phrase_search",
-    oracle="""
-    WITH tk AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-      FROM documents
-    ),
+    oracle=f"""
+    WITH tk AS (SELECT doc_id, {K.TOKENS_SQL} AS t FROM documents),
     postings AS (
       SELECT doc_id, unnest(range(1, len(t) + 1)) AS pos, t
       FROM tk
@@ -2222,26 +2014,26 @@ def doc_html_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_token_class_pmi",
     oracle=f"""
     WITH toks AS (
-      SELECT lang, unnest({_TOKENS_SQL}) AS token FROM documents
+      SELECT lang, unnest({K.TOKENS_SQL}) AS token FROM documents
     ),
-    counts_tl AS (
+    tl_counts AS (
       SELECT lang, token, CAST(COUNT(*) AS BIGINT) AS n_token_lang
       FROM toks GROUP BY 1, 2
     ),
     tok_tot AS (
       SELECT token, CAST(SUM(n_token_lang) AS BIGINT) AS n_t
-      FROM counts_tl GROUP BY token
+      FROM tl_counts GROUP BY token
     ),
     lang_tot AS (
       SELECT lang, CAST(SUM(n_token_lang) AS BIGINT) AS n_l
-      FROM counts_tl GROUP BY lang
+      FROM tl_counts GROUP BY lang
     ),
     tot AS (SELECT CAST(SUM(n_l) AS BIGINT) AS n FROM lang_tot),
     lifted AS (
       SELECT c.lang, c.token, c.n_token_lang,
              (CAST(c.n_token_lang AS DOUBLE) * CAST(t.n AS DOUBLE))
                / (CAST(tt.n_t AS DOUBLE) * CAST(lt.n_l AS DOUBLE)) AS pmi_lift
-      FROM counts_tl c
+      FROM tl_counts c
       JOIN tok_tot tt USING (token)
       JOIN lang_tot lt USING (lang)
       CROSS JOIN tot t
