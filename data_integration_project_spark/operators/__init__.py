@@ -1,12 +1,10 @@
 from . import (  # noqa: F401
-    ddl,
     dedup,
     dwh,
     entity_rules,
     multimodal,
     quality,
     reconcile,
-    rule_dsl,
     similarity,
     sinks,
     skew,

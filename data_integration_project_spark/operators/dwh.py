@@ -216,7 +216,8 @@ def scd2_merge_incremental(
 
     The merged slice is localCheckpoint-ed before the write because the
     output path is also the input path (Spark refuses a self-overwrite
-    otherwise); single-writer assumption, same as compact_zone."""
+    otherwise). Single writer, no concurrent reader: a reader during the
+    overwrite sees the affected buckets half rewritten."""
     upd = updates.withColumn(bucket_col, _bucket_of(key, n_buckets))
     affected = sorted(
         r[0] for r in upd.select(bucket_col).distinct().collect()
@@ -257,25 +258,6 @@ def read_dim_bucketed(
 ) -> DataFrame:
     """Scan the bucketed dimension without the bucket column."""
     return spark.read.parquet(path).drop(bucket_col)
-
-
-def build_fact(
-    base: DataFrame,
-    dims: list[tuple[DataFrame, Column, list[Column]]],
-    measures: list[Column],
-) -> DataFrame:
-    """Generic fact build (fact_dat_hang shape,
-    create_dwh_tables.sql:138-166): broadcast each dimension, join on its
-    natural-key predicate, project surrogate keys + measures. FK
-    integrity is join-time (Spark has no constraints): rows that miss a
-    dimension keep NULL keys so the caller can route them to the error
-    zone instead of silently dropping."""
-    out = base
-    keep: list[Column] = []
-    for dim, on, take in dims:
-        out = out.join(F.broadcast(dim), on, "left")
-        keep.extend(take)
-    return out.select(*keep, *measures)
 
 
 def cdc_apply(

@@ -1580,7 +1580,6 @@ def decode_flac(payload: bytes) -> dict:
     check of the reconstructed PCM against STREAMINFO. Raises on any
     integrity failure — a silent bit error cannot produce output."""
     import hashlib
-    import struct
 
     if payload[:4] != b"fLaC":
         raise ValueError("not a FLAC payload")
@@ -1850,7 +1849,8 @@ def _jpeg_idct_block(coef: list[int]) -> list[int]:
     SCALAR REFERENCE ONLY — the decode hot path batches every non-DC
     block of a payload through :func:`_jpeg_idct_batch` (two 8x8
     matmuls per block in one einsum); this quadruple loop survives as
-    the from-spec twin the property test checks the batch against."""
+    the from-spec twin ``test_properties`` checks the batch against (no
+    query calls it)."""
     if not any(coef[1:]):
         v = coef[0]
         # round-half-away-from-zero of v/8, exact for v = 8k
@@ -2095,7 +2095,10 @@ def encode_jpeg_raster(pixels: list[int], width: int) -> bytes:
     (width and height multiples of 8): real forward DCT per 8x8 block,
     flat quantization by 8, zigzag, full run/size AC entropy coding.
     Lossy in general — the entropy layer itself is exactly invertible,
-    which tests verify at the quantized-coefficient level."""
+    which tests verify at the quantized-coefficient level.
+
+    No query calls it: it is the reference encoder ``test_properties``
+    builds general payloads with for the decoder's property tests."""
     height = len(pixels) // width
     if width % 8 or height % 8 or len(pixels) != width * height:
         raise ValueError("jpeg: raster must tile into 8x8 blocks")

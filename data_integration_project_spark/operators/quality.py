@@ -142,17 +142,23 @@ class RuleSet:
         )
 
     def split(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Clean/error zone split (reference V3,
-        STEP3_QUALITY_ENGINE.py:129-165): clean rows drop the annotation
-        columns; error rows carry ``_errors`` joined with ``' | '``."""
-        validated = self.validate(df)
-        clean = validated.filter("_is_valid").drop("_errors", "_is_valid")
-        error = (
-            validated.filter(~F.col("_is_valid"))
-            .withColumn("_errors", F.concat_ws(" | ", "_errors"))
-            .drop("_is_valid")
-        )
-        return clean, error
+        """Validate ``df`` and split it into its clean and error zones
+        (:func:`split_validated`)."""
+        return split_validated(self.validate(df))
+
+
+def split_validated(validated: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Clean/error zone split of rows carrying ``_is_valid`` and an
+    ``_errors`` array (reference V3, STEP3_QUALITY_ENGINE.py:129-165):
+    clean rows drop the annotation columns; error rows carry ``_errors``
+    joined with ``' | '``."""
+    clean = validated.filter("_is_valid").drop("_errors", "_is_valid")
+    error = (
+        validated.filter(~F.col("_is_valid"))
+        .withColumn("_errors", F.concat_ws(" | ", "_errors"))
+        .drop("_is_valid")
+    )
+    return clean, error
 
 
 # ---------------------------------------------------------------------------

@@ -28,15 +28,6 @@ def sample_bucket(col: Column, salt: int = 0) -> Column:
     return ((F.lit(_A) * ((col.cast("long") + salt) % P) + F.lit(_B)) % P) % 1000
 
 
-def hash_sample(
-    df: DataFrame, key_col: str, rate_permille: int, *, salt: int = 0
-) -> DataFrame:
-    """Keep ~rate_permille/1000 of rows, chosen by key hash. All rows
-    sharing a key are kept or dropped together (leak-free for
-    train/test splits on a grouping key)."""
-    return df.filter(sample_bucket(F.col(key_col), salt) < rate_permille)
-
-
 def stratified_hash_sample(
     df: DataFrame,
     key_col: str,

@@ -24,9 +24,6 @@ from pyspark.sql import Window
 
 from ..functions.vectors import cosine
 
-# fixed 32-bit odd multiplier (Knuth); plane component c(p, d) in [-1, 1)
-_KNUTH = 2654435761
-
 # default plane width when the caller doesn't pass the observed vector
 # length. Plane literals land in the serialized plan and every task's
 # codegen, so the right width is the COLUMN's width: entry points probe
@@ -43,16 +40,6 @@ def observed_dim(df: DataFrame, vec_col: str, default: int = _SRP_MAX_DIM) -> in
     ``default`` on an empty dataset."""
     row = df.select(F.size(F.col(vec_col)).alias("d")).first()
     return int(row["d"]) if row and row["d"] is not None and row["d"] > 0 else default
-
-
-def _plane_component(table: int, plane: int, dim: Column) -> Column:
-    """Deterministic pseudo-random direction component in [-1, 1):
-    integer hash of (table, plane, dim) scaled — portable arithmetic,
-    no RNG state. NOT used for SRP bucketing anymore (see
-    :func:`md5_plane_components` for why); kept for fixture
-    scaffolding that only needs *a* deterministic direction."""
-    h = ((F.lit(table * 524287 + plane * 8191) + dim + 1) * _KNUTH) % 2147483648
-    return (h / F.lit(1073741824.0)) - 1.0
 
 
 @lru_cache(maxsize=256)

@@ -66,7 +66,7 @@ def doc_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH scored AS (
       SELECT doc_id, lang, n_chars,
-             md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
+             {K.FINGERPRINT_SQL} AS fp,
              len({K.TOKENS_SQL}) AS n_tokens,
              CAST(length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g')) AS DOUBLE)
                / nullif(length(lower(text)), 0) AS pr
@@ -3712,7 +3712,7 @@ def corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, lang, source,
              CAST(length(text) AS BIGINT) AS n_chars,
              CAST(len({K.TOKENS_SQL}) AS BIGINT) AS n_tokens,
-             md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
+             {K.FINGERPRINT_SQL} AS fp
       FROM documents
     )
     SELECT 'size' AS section, 'n_docs' AS metric, 'all' AS slice,

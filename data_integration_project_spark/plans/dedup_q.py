@@ -19,6 +19,7 @@ from ..functions.text import tokens
 from ..operators import dedup as D
 from . import text_kit as K
 from .catalog import query, run_tmpdir, t
+from .stream_kit import replay, staged_replay
 
 # ---------------------------------------------------------------------------
 # Corpora with planted duplicates (text_kit.variant_corpus specs)
@@ -62,12 +63,12 @@ def _chain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_exact",
     oracle=_CORPUS_SQL
-    + """
+    + f"""
     , fp AS (
       SELECT doc_id,
-             md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint,
+             {K.FINGERPRINT_SQL} AS fingerprint,
              row_number() OVER (
-               PARTITION BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+               PARTITION BY {K.FINGERPRINT_SQL}
                ORDER BY doc_id) AS dup_rank
       FROM corpus
     )
@@ -429,15 +430,15 @@ def dedup_clusters_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_incremental_against_store",
-    oracle="""
+    oracle=f"""
     WITH store AS (
-      SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+      SELECT DISTINCT {K.FINGERPRINT_SQL}
                AS fingerprint
       FROM documents WHERE doc_id % 2 = 0
     ),
     batch AS (
       SELECT doc_id, source,
-             md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+             {K.FINGERPRINT_SQL}
                AS fingerprint
       FROM documents
     ),
@@ -566,21 +567,13 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join probes the store on (band, bucket) — AQE broadcasts a
     small store, shuffles a co-partitioned large one; no watermark, no
     state server (the store IS the state, append-only)."""
-    import tempfile
-
     from ..streaming.neardup import build_band_store, run_neardup_ingest
 
     d = t(spark, sf_dir, "documents")
     # the static store: materialized once (localCheckpoint) so the
     # per-batch probe re-reads |history|·bands tiny rows, not the plan
     store = build_band_store(d, "doc_id", "text").localCheckpoint()
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .select("doc_id", "text")
-    )
+    src = replay(spark, sf_dir, "documents").select("doc_id", "text")
     did = F.col("doc_id")
     # one scan with CASE-branched projections emits all three ingest
     # classes (they partition on doc_id % 10), not three scans of each
@@ -749,7 +742,6 @@ def streaming_neardup_store_growth(spark: SparkSession, sf_dir: str) -> DataFram
     (band, bucket) equi-join probe + one distinct-union append of
     O(accepted · bands) short rows; the store never holds text and the
     append's localCheckpoint keeps the growing plan's lineage flat."""
-    import os
     import shutil
 
     from ..streaming.neardup import build_band_store, run_neardup_ingest
@@ -803,23 +795,9 @@ def streaming_neardup_store_growth(spark: SparkSession, sf_dir: str) -> DataFram
             )
         )
     )
+    incoming = staged_replay(spark, [b1, b2])
     run = run_tmpdir("neardup_growth_")
     try:
-        src_dir = f"{run}/stream"
-        b1.coalesce(1).write.parquet(f"{src_dir}/b0")
-        b2.coalesce(1).write.parquet(f"{src_dir}/b1")
-        # FileStreamSource takes oldest-mtime first; pin the order
-        # explicitly instead of trusting write latency to separate them
-        for i, sub in enumerate(("b0", "b1")):
-            base = os.path.join(src_dir, sub)
-            for f in os.listdir(base):
-                os.utime(os.path.join(base, f), (1_000_000_000 + i * 10,) * 2)
-        incoming = (
-            spark.readStream.schema("doc_id long, text string, ingest_class string")
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
         run_neardup_ingest(
             spark,
             incoming,
@@ -1743,7 +1721,7 @@ def doc_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     , fp AS (
       SELECT doc_id, text,
              row_number() OVER (
-               PARTITION BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+               PARTITION BY {K.FINGERPRINT_SQL}
                ORDER BY doc_id) AS dup_rank
       FROM corpus
     ),

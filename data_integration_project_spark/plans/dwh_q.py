@@ -126,8 +126,6 @@ def dim_customer_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     buckets (partition-pruned scan), and only those bucket directories
     are dynamically overwritten. The oracle is identical — incremental
     merge must be indistinguishable from full merge-and-rewrite."""
-    import tempfile
-
     c = t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
     dim_path = run_tmpdir("scd2_dim_") + "/dim"
     W.write_dim_bucketed(
@@ -162,8 +160,6 @@ def dim_customer_scd2_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming.upsert.scd2_stream_upsert). Batch full-rewrite,
     incremental MERGE, and streaming MERGE must all be oracle-
     indistinguishable."""
-    import tempfile
-
     from ..streaming.upsert import scd2_stream_upsert
 
     c = t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")

@@ -7,7 +7,7 @@ on the same operators the streaming module uses).
 
 from __future__ import annotations
 
-import tempfile
+import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,6 +18,15 @@ from ..operators.quality import RuleSet, not_blank, positive
 from ..streaming.pipeline import ZonePaths, produce_to_inbox, run_inbox_pipeline, streaming_window_counts
 from .catalog import SQL_DSUM, SQL_MD5_INT, dsum, query, run_tmpdir, t
 from .customer_model import customer_features, features_sql, gd_step, gd_steps_sql
+from .stream_kit import (
+    FAR_FUTURE,
+    attribution_join,
+    drain,
+    heartbeats,
+    last_update,
+    replay,
+    staged_replay,
+)
 
 # ---------------------------------------------------------------------------
 # Tumbling windows (same code path batch/streaming)
@@ -568,17 +577,9 @@ def events_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: session merging is stateful per user_id — state
     shuffles once on the grouping key, and each micro-batch touches
     only keys with new events."""
-    import tempfile
-    import uuid
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")  # file source needs a dir
-        .parquet(sf_dir)
-    )
     agg = (
-        src.groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        replay(spark, sf_dir, "events")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)"))
@@ -593,17 +594,7 @@ def events_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "session_value",
         )
     )
-    name = "strsess_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", run_tmpdir("strsess_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -682,8 +673,6 @@ def events_rollup_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataF
     daily refresh touches one day of input + |groups| rollup rows,
     never the full history. (Decimal sums make partials mergeable;
     averages would be maintained as (sum, count) pairs the same way.)"""
-    import tempfile
-
     ev = t(spark, sf_dir, "events")
     cutoff = ev.agg(F.max(F.date_trunc("day", "ts")).alias("c")).collect()[0]["c"]
 
@@ -863,42 +852,7 @@ def events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Bounded replay (AvailableNow over the fixture) makes the result
     deterministic and equal to the batch join the oracle runs."""
-    import tempfile
-    import uuid
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    # watermarks require TIMESTAMP (with local-tz semantics); the parquet
-    # column is NTZ — the cast is value-identical under the pinned UTC tz
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").cast("timestamp").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").cast("timestamp").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES")),
-        "inner",
-    ).select(
+    joined = attribution_join(replay(spark, sf_dir, "events"), "inner").select(
         "purchase_id",
         "click_id",
         "user_id",
@@ -910,17 +864,7 @@ def events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("lag_seconds"),
     )
-    name = "strjoin_" + uuid.uuid4().hex[:8]
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", run_tmpdir("strjoin_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(joined, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -999,6 +943,19 @@ def events_user_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _events_then_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events fixture, then a purchase and a click heartbeat in the
+    next trigger: a bounded fixture closes its last windows and flushes
+    its last outer-join nulls only once the watermark passes them."""
+    return staged_replay(
+        spark,
+        [
+            f"{sf_dir}/events.parquet",
+            heartbeats(spark, (FAR_FUTURE, "purchase"), (FAR_FUTURE, "click")),
+        ],
+    )
+
+
 @query(
     "events_stream_stream_left_join",
     oracle="""
@@ -1036,60 +993,7 @@ def events_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFram
     watermark + range bound let both sides evict; the only addition is
     the per-row "matched" bit Spark keeps to know which evicted rows
     owe a null emission."""
-    import os
-    import tempfile
-    import uuid
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    max_ts = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .agg(F.max("ts").alias("m"))
-        .collect()[0]["m"]
-    )
-    import datetime
-
-    far = max_ts + datetime.timedelta(days=30)
-    stream_dir = run_tmpdir("strljoin_src_")
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stream_dir, "events.parquet"),
-    )
-    sentinel = spark.createDataFrame(
-        [
-            (-1, far, -1, "purchase", 0.0, "{}"),
-            (-2, far + datetime.timedelta(days=1), -2, "click", 0.0, "{}"),
-        ],
-        schema,
-    )
-    sentinel.coalesce(1).write.parquet(os.path.join(stream_dir, "sentinel.parquet"))
-    src = spark.readStream.schema(schema).option("recursiveFileLookup", "true").parquet(
-        stream_dir
-    )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").cast("timestamp").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").cast("timestamp").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select(
+    joined = attribution_join(_events_then_heartbeat(spark, sf_dir), "left_outer").select(
         "purchase_id",
         "click_id",
         "user_id",
@@ -1099,23 +1003,7 @@ def events_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFram
         .otherwise(F.lit("attributed"))
         .alias("attribution"),
     )
-    name = "strljoin_" + uuid.uuid4().hex[:8]
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", run_tmpdir("strljoin_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # The sentinel filter must sit on the SINK side: a `user_id >= 0`
-    # predicate inside the streaming plan gets pushed below the
-    # EventTimeWatermark operator, so the heartbeat rows are pruned at
-    # the scan and the watermark never advances past the real data
-    # (measured: the two tail nulls went missing again). Filtering the
-    # materialized result is pushdown-proof.
-    return spark.table(name).filter(F.col("user_id") >= 0)
+    return drain(joined, "append").filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------
@@ -1148,43 +1036,15 @@ def events_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (state expires once the watermark passes the id's event time);
     bounded replay here keeps full-fidelity state and makes the result
     exact."""
-    import os
-    import tempfile
-    import uuid
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = run_tmpdir("strdedup_src_")
-    # the same fixture file twice = an at-least-once replay
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stream_dir, "replay_a.parquet"),
-    )
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stream_dir, "replay_b.parquet"),
-    )
-    # one file per trigger: the replay is GUARANTEED to arrive in a
-    # later micro-batch than the original, so the dedup state is
-    # genuinely exercised ACROSS batches, not within one
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
+    # the same fixture file twice = an at-least-once replay; one file
+    # per trigger puts the replay in a later micro-batch than the
+    # original, so the dedup state is exercised ACROSS batches
+    events = f"{sf_dir}/events.parquet"
+    src = staged_replay(spark, [events, events])
     deduped = src.dropDuplicates(["event_id"]).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_unique_events")
     )
-    name = "strdedup_" + uuid.uuid4().hex[:8]
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", run_tmpdir("strdedup_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(deduped, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -1324,74 +1184,42 @@ def events_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     float64 op in pandas and the oracle, so the integers agree
     bit-for-bit. Update-mode emissions are resolved to each user's
     LAST update (max n_events — monotone) before returning."""
-    import tempfile
-    import uuid
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from collections.abc import Iterator
-    from typing import Any
+    # the state store keeps the session's one partition per core: the
+    # operator's cost is per-key Python calls, and sizing its partitions
+    # from input bytes (one at sf0.1) put them all on one core, 2.6 → 6.6 s
+    totals = (
+        replay(spark, sf_dir, "events")
+        .select("user_id", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _user_totals_state_fn,
+            "user_id long, n_events long, total_cents long",
+            "n long, cents long",
+            "update",
+            GroupStateTimeout.NoTimeout,
+        )
+    )
+    return last_update(drain(totals, "update"), "user_id", "n_events")
 
+
+def _user_totals_state_fn(key, pdfs, state):
+    """State-update function for [[events_stateful_user_totals]] (module
+    level so tests drive it through their own stream wiring): add each
+    batch's event count and integer cents to the user's state and emit
+    the running totals."""
+    import numpy as np
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("user_id", "value")
-    )
-
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        n, cents = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            cents += int(
-                np.floor(pdf["value"].to_numpy() * 100 + 0.5).astype("int64").sum()
-            )
-        state.update((n, cents))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_cents": [cents]}
+    n, cents = state.get if state.exists else (0, 0)
+    for pdf in pdfs:
+        n += len(pdf)
+        cents += int(
+            np.floor(pdf["value"].to_numpy() * 100 + 0.5).astype("int64").sum()
         )
-
-    totals = src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        "user_id long, n_events long, total_cents long",
-        "n long, cents long",
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-    name = "stateful_" + uuid.uuid4().hex[:8]
-    # Round-9 NOTE (measured, left alone): sizing the state-store
-    # partition count from input BYTES (64 MB/partition → 1 at sf0.1)
-    # regressed this query 2.6 → 6.6 s — the stateful operator's cost
-    # is per-KEY Python calls, which byte-based sizing serializes onto
-    # one core (the same blindness ROADMAP r9 documented for AQE's
-    # byte-based coalescing over grouped-pandas stages). The session
-    # default (one state partition per core) is the right shape for a
-    # per-key-Python operator; left as-is.
-    q = (
-        totals.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", run_tmpdir("stateful_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # update mode re-emits a user on every batch that touches them;
-    # keep the last (largest n_events — monotone) update per user
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        spark.table(name)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    state.update((n, cents))
+    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "total_cents": [cents]})
 
 
 # ---------------------------------------------------------------------------
@@ -1474,8 +1302,6 @@ def events_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Day is derived (min+3) rather than a literal so the fixture's date
     range can shift without breaking the query."""
-    import tempfile
-
     e = t(spark, sf_dir, "events")
     day = e.agg(
         F.date_add(F.min(F.col("ts").cast("date")), 3).alias("d")
@@ -1526,8 +1352,6 @@ def orders_grouped_agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-level percentile_disc plan (orders_price_percentile_disc);
     this is the extension point for aggregates Spark lacks."""
     import math
-
-    import pandas as pd
 
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
@@ -1586,16 +1410,7 @@ def events_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB/day the static side stays broadcast-sized (dims), so the
     stream never shuffles for enrichment — identical to the batch star
     join's dim strategy."""
-    import tempfile
-    import uuid
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("user_id", "event_type")
-    )
+    src = replay(spark, sf_dir, "events").select("user_id", "event_type")
     c = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     dim = F.broadcast(c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey))
@@ -1604,17 +1419,7 @@ def events_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("n_name").alias("nation_name"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = "strstatic_" + uuid.uuid4().hex[:8]
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", run_tmpdir("strstatic_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(joined, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -2064,31 +1869,15 @@ def events_streaming_kll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     lets this run indefinitely at 100 TB/day ingest. Emissions are
     update-mode; the final update per key (max cumulative n_seen)
     wins."""
-    import tempfile
-    import uuid
-
-    from collections.abc import Iterator
-    from typing import Any
-
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..operators.sketch import hll_hash
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select(
-            "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("v"),
-            F.col("event_id").alias("id"),
-            hll_hash(F.col("event_id")).alias("h"),
-        )
+    src = replay(spark, sf_dir, "events").select(
+        "event_type",
+        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
+        F.col("event_id").alias("id"),
+        hll_hash(F.col("event_id")).alias("h"),
     )
     totals = src.groupBy("event_type").applyInPandasWithState(
         _kll_state_fn,
@@ -2100,23 +1889,7 @@ def events_streaming_kll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    name = "strkll_" + uuid.uuid4().hex[:8]
-    q = (
-        totals.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", run_tmpdir("strkll_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    w = Window.partitionBy("event_type").orderBy(F.desc("n_seen"))
-    return (
-        spark.table(name)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return last_update(drain(totals, "update"), "event_type", "n_seen")
 
 
 def _kll_state_fn(key, pdfs, state):
@@ -2668,21 +2441,13 @@ def events_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     with the watermark; the aggregate reuses the standard two-level
     hash-agg. (The custom drain in streaming/pipeline.py solves the
     same problem with explicit state; this is the built-in form.)"""
-    import uuid
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        # watermarks require an instant (TIMESTAMP), not NTZ; the
-        # session is pinned UTC so the cast is deterministic
-        .select(
-            "event_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "event_type",
-            "value",
-        )
+    # watermarks require an instant (TIMESTAMP), not NTZ; the session is
+    # pinned UTC so the cast is deterministic
+    src = replay(spark, sf_dir, "events").select(
+        "event_id",
+        F.col("ts").cast("timestamp").alias("ts"),
+        "event_type",
+        "value",
     )
     duplicated = src.select(
         F.explode(F.array(F.lit(1), F.lit(2))).alias("_copy"),
@@ -2698,16 +2463,7 @@ def events_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count(F.lit(1)).alias("n_unique"),
         F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("total_cents"),
     )
-    name = "dedupwm_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -3105,7 +2861,6 @@ def streaming_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained aggregate must equal the generator twin exactly (any
     dropped or doubled batch shifts counts) and n_batches counts the
     committed manifests."""
-    import tempfile
     import uuid
 
     from ..sources.pygen import register
@@ -4942,8 +4697,6 @@ def orders_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFr
     The oracle is the statically-equivalent month-range query over the
     flat fixture — layout and pruning strategy must not change a
     value."""
-    import tempfile
-
     o = t(spark, sf_dir, "orders")
     path = run_tmpdir("orders_dpp_") + "/orders"
     o.withColumn("o_month", F.month("o_orderdate")).write.partitionBy(
@@ -5000,62 +4753,7 @@ def events_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFram
 
     Oracle: the batch FULL JOIN — bounded replay + heartbeat flush
     make the streaming result equal it exactly."""
-    import datetime
-    import os
-    import tempfile
-    import uuid
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    max_ts = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .agg(F.max("ts").alias("m"))
-        .collect()[0]["m"]
-    )
-    far = max_ts + datetime.timedelta(days=30)
-    stream_dir = run_tmpdir("strfjoin_src_")
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stream_dir, "events.parquet"),
-    )
-    sentinel = spark.createDataFrame(
-        [
-            (-1, far, -1, "purchase", 0.0, "{}"),
-            (-2, far + datetime.timedelta(days=1), -2, "click", 0.0, "{}"),
-        ],
-        schema,
-    )
-    sentinel.coalesce(1).write.parquet(os.path.join(stream_dir, "sentinel.parquet"))
-    src = spark.readStream.schema(schema).option(
-        "recursiveFileLookup", "true"
-    ).parquet(stream_dir)
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").cast("timestamp").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").cast("timestamp").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES")
-        ),
-        "full_outer",
-    ).select(
+    joined = attribution_join(_events_then_heartbeat(spark, sf_dir), "full_outer").select(
         "purchase_id",
         "click_id",
         F.coalesce(F.col("user_id"), F.col("c_user_id")).alias("user_id"),
@@ -5066,17 +4764,7 @@ def events_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFram
         .otherwise(F.lit("attributed"))
         .alias("attribution"),
     )
-    name = "strfjoin_" + uuid.uuid4().hex[:8]
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", run_tmpdir("strfjoin_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).filter(F.col("user_id") >= 0)
+    return drain(joined, "append").filter(F.col("user_id") >= 0)
 
 
 @query(
@@ -5116,7 +4804,6 @@ def events_json_corrupt_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — the permissive path costs nothing extra on clean
     data."""
     import os
-    import tempfile
 
     e = t(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
     d = run_tmpdir("json_corrupt_")
@@ -5642,37 +5329,11 @@ def events_streaming_dedup_sessions(spark: SparkSession, sf_dir: str) -> DataFra
 
     Scale shape: two stateful exchanges (event_id for dedup, user_id
     for sessions), both with watermark-expiring state."""
-    import datetime
-    import os
-    import tempfile
-    import uuid
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    max_ts = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .agg(F.max("ts").alias("m"))
-        .collect()[0]["m"]
-    )
-    far = max_ts + datetime.timedelta(days=30)
-    stream_dir = run_tmpdir("dedupsess_src_")
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stream_dir, "events.parquet"),
-    )
-    sentinel = spark.createDataFrame(
-        [(-1, far, -1, "view", 0.0, "{}")], schema
-    )
-    sentinel.coalesce(1).write.parquet(os.path.join(stream_dir, "sentinel.parquet"))
-    src = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(stream_dir)
-        .select(
-            "event_id",
-            "user_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
-        )
+    src = _events_then_heartbeat(spark, sf_dir).select(
+        "event_id",
+        "user_id",
+        F.col("ts").cast("timestamp").alias("ts"),
+        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
     )
     duplicated = src.select(
         F.explode(F.array(F.lit(1), F.lit(2))).alias("_c"),
@@ -5698,17 +5359,7 @@ def events_streaming_dedup_sessions(spark: SparkSession, sf_dir: str) -> DataFra
             "session_cents",
         )
     )
-    name = "dedupsess_" + uuid.uuid4().hex[:8]
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", run_tmpdir("dedupsess_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).filter(F.col("user_id") >= 0)
+    return drain(sessions, "append").filter(F.col("user_id") >= 0)
 
 
 @query(
@@ -5742,82 +5393,47 @@ def events_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: standard watermarked tumbling-window aggregate; the
     two-file drain is the fixture's way of forcing a watermark/arrival
     race that production streams hit continuously."""
-    import datetime
-    import os
-    import tempfile
-    import uuid
+    import calendar
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    mm = ev.agg(
-        F.min("ts").alias("lo"), F.max("ts").alias("hi")
-    ).collect()[0]
+    # the cutoff needs the data's range, so this collect stays
+    mm = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     # integer-exact midpoint: Python timedelta/2 and SQL interval/2
     # round differently at odd microseconds — the boundary must be the
     # same integer millisecond on both engines
-    import calendar
-
     to_ms = lambda dt_: calendar.timegm(dt_.timetuple()) * 1000 + dt_.microsecond // 1000
     cutoff_ms = (to_ms(mm["lo"]) + to_ms(mm["hi"])) // 2
-    far = mm["hi"] + datetime.timedelta(days=30)
-    d = run_tmpdir("latedrop_")
-    src_dir = os.path.join(d, "stream")
-    os.makedirs(src_dir)
-    recent = ev.filter(F.unix_millis(F.col("ts").cast("timestamp")) >= cutoff_ms)
-    sentinel = spark.createDataFrame([(-1, far, -1, "view", 0.0, "{}")], schema)
-    recent.unionByName(sentinel).coalesce(1).write.parquet(
-        os.path.join(src_dir, "b0_recent")
+    after_cutoff = F.unix_millis(F.col("ts").cast("timestamp")) >= cutoff_ms
+    # recent + heartbeat -> spacer -> old. The spacer batch absorbs the
+    # engine's one-batch watermark lag (see docstring) so the old file
+    # meets an already-advanced watermark.
+    src = staged_replay(
+        spark,
+        [
+            ev.filter(after_cutoff).unionByName(
+                heartbeats(spark, (FAR_FUTURE, "view"))
+            ),
+            heartbeats(spark, (FAR_FUTURE + datetime.timedelta(hours=1), "view")),
+            ev.filter(~after_cutoff),
+        ],
+    ).select(
+        "user_id",
+        "event_type",
+        F.col("ts").cast("timestamp").alias("ts"),
     )
-    spacer = spark.createDataFrame(
-        [(-2, far + datetime.timedelta(hours=1), -2, "view", 0.0, "{}")], schema
-    )
-    spacer.coalesce(1).write.parquet(os.path.join(src_dir, "b1_spacer"))
-    ev.filter(
-        F.unix_millis(F.col("ts").cast("timestamp")) < cutoff_ms
-    ).coalesce(1).write.parquet(os.path.join(src_dir, "b2_old"))
-    # the file source orders batches by (modification time, path); pin
-    # the order explicitly: recent -> spacer -> old. The spacer batch
-    # absorbs the engine's one-batch watermark lag (see docstring) so
-    # the old file meets an already-advanced watermark.
-    now = 1_700_000_000
-    for i, sub in enumerate(("b0_recent", "b1_spacer", "b2_old")):
-        for root, _, files in os.walk(os.path.join(src_dir, sub)):
-            for fn in files:
-                os.utime(os.path.join(root, fn), (now + 100 * i, now + 100 * i))
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-        .select(
-            "user_id",
-            "event_type",
-            F.col("ts").cast("timestamp").alias("ts"),
-        )
-    )
+    # the grouping keeps user_id available for the heartbeat filter
     agg = (
         src.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type", "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # second grouping keeps user_id available for the sentinel filter
-    name = "latedrop_" + uuid.uuid4().hex[:8]
     # NOT availableNow: an available-now drain plans its whole backlog
     # against one watermark snapshot, so late rows in later planned
     # batches are never filtered (measured; companion to the one-batch
     # lag above). A default-trigger drain advances the watermark
     # between micro-batches, which is the semantics this query pins.
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(d, "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
     return (
-        spark.table(name)
+        drain(agg, "append", available_now=False)
         .filter(F.col("user_id") >= 0)
         .groupBy(
             F.col("window.start").alias("window_start"), "event_type"
@@ -6449,17 +6065,12 @@ def events_streaming_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     length or key cardinality, the bound that lets this run forever at
     100 TB/day. Rank arithmetic reuses ``operators.sketch``'s
     constants; the estimate is the same single double division."""
-    import uuid
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..operators.sketch import hll_hash
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        replay(spark, sf_dir, "events")
         # NULL contract, pinned on BOTH sides (oracle filters the same
         # way): a NULL user_id contributes nothing — neither a register
         # nor a phantom seen-bucket. Without the filter the batch
@@ -6477,23 +6088,7 @@ def events_streaming_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    name = "strhll_" + uuid.uuid4().hex[:8]
-    q = (
-        totals.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", run_tmpdir("strhll_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    w = Window.partitionBy("event_type").orderBy(F.desc("n_seen"))
-    return (
-        spark.table(name)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return last_update(drain(totals, "update"), "event_type", "n_seen")
 
 
 def _hll_state_fn(key, pdfs, state):
@@ -6633,41 +6228,20 @@ def events_streaming_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     set — the difference between a stream that runs forever and one
     that OOMs on key churn. Timeout timestamps ride the same
     watermark the aggregate already maintains; no second clock."""
-    import datetime
-    import os
-    import uuid
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    far1 = max_ts + datetime.timedelta(days=_TTL_DAYS + 2)
-    far2 = far1 + datetime.timedelta(hours=1)
-    d = run_tmpdir("statettl_")
-    src_dir = os.path.join(d, "stream")
-    os.makedirs(src_dir)
-    ev.coalesce(1).write.parquet(os.path.join(src_dir, "b0_events"))
-    for i, (far, sub) in enumerate([(far1, "b1_spacer"), (far2, "b2_spacer")]):
-        spark.createDataFrame(
-            [(-1 - i, far, -1 - i, "view", 0.0, "{}")], schema
-        ).coalesce(1).write.parquet(os.path.join(src_dir, sub))
-    now = 1_700_000_000
-    for i, sub in enumerate(("b0_events", "b1_spacer", "b2_spacer")):
-        for root, _, files in os.walk(os.path.join(src_dir, sub)):
-            for fn in files:
-                os.utime(os.path.join(root, fn), (now + 100 * i, now + 100 * i))
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-        .select(
-            "user_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.unix_millis(F.col("ts").cast("timestamp")).alias("us"),
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
-        )
+    src = staged_replay(
+        spark,
+        [
+            f"{sf_dir}/events.parquet",
+            heartbeats(spark, (FAR_FUTURE, "view")),
+            heartbeats(spark, (FAR_FUTURE + datetime.timedelta(hours=1), "view")),
+        ],
+    ).select(
+        "user_id",
+        F.col("ts").cast("timestamp").alias("ts"),
+        F.unix_millis(F.col("ts").cast("timestamp")).alias("us"),
+        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
     )
     closed = (
         src.withWatermark("ts", "1 hour")
@@ -6681,17 +6255,7 @@ def events_streaming_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    name = "statettl_" + uuid.uuid4().hex[:8]
-    q = (
-        closed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(d, "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).filter(F.col("user_id") >= 0)
+    return drain(closed, "update", available_now=False).filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------

@@ -1351,7 +1351,6 @@ def orders_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema in a table catalog and read with an explicit schema
     instead (the read path below also works unchanged)."""
     import os
-    import tempfile
 
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     root = run_tmpdir("schema_evo_")
@@ -1382,7 +1381,8 @@ def orders_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Leakage-safe train/val/test split (duplicate-cluster-aware)
 # ---------------------------------------------------------------------------
 
-_SPLIT_FP = char_fold_sql("lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))")
+# [ \t\n\x0B\f\r] is Java's \s, the class the Spark side collapses
+_SPLIT_FP = char_fold_sql("lower(trim(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')))")
 _SPLIT_BUCKET = char_fold_sql("'split:' || CAST(r.rep AS VARCHAR)")
 
 

@@ -35,6 +35,7 @@ from .customer_model import (
     linear_score,
     persisted_features,
 )
+from .stream_kit import drain
 
 
 def _view(spark: SparkSession, sf_dir: str, name: str, alias: str) -> None:
@@ -1077,7 +1078,6 @@ def orders_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFram
     otherwise broadcast — also shuffle-free, but proving nothing about
     bucketing). The oracle is the plain relational join: bucketing is
     pure physical layout and must not change a single value."""
-    import tempfile
     import uuid
 
     li = t(spark, sf_dir, "lineitem").select(
@@ -3155,8 +3155,6 @@ def sensors_streaming_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: a simple stream reader reads on the driver — right for
     control-plane-sized streams; a partition-planned ``streamReader``
     is the fan-out variant when per-batch volume needs executors."""
-    import uuid
-
     from ..sources.pygen import register
 
     register(spark)
@@ -3166,13 +3164,7 @@ def sensors_streaming_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("rows_per_batch", "3072")
         .load()
     )
-    name = "sensorstream_" + uuid.uuid4().hex[:8]
-    q = src.writeStream.format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    drained = spark.table(name)
+    drained = drain(src, "append", available_now=False)
     return drained.groupBy(
         (F.col("sensor_id") % 10).alias("sensor_bucket"), "status"
     ).agg(
@@ -6376,7 +6368,6 @@ def orders_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     without a driver bottleneck: one writer task per partition, commit
     metadata (not data) going through the driver."""
     import os
-    import tempfile
 
     from ..sources import pysink
 
@@ -6626,7 +6617,6 @@ def sensors_streaming_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: data flows executor→file; only commit metadata crosses
     the driver — the same topology as the batch writer."""
     import os
-    import tempfile
 
     from ..sources import pysink
     from ..sources.pygen import register as register_source
@@ -7129,7 +7119,6 @@ def orders_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-decimal sum over the round-tripped column must equal the
     source-side oracle."""
     import os
-    import tempfile
 
     d = os.path.join(run_tmpdir("orc_rt_"), "orders")
     (
@@ -7167,7 +7156,6 @@ def customer_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the counts and fails the hash. The reference's entire ingest is
     CSV (S1-S3); this pins the write side of that contract too."""
     import os
-    import tempfile
 
     note = F.concat(
         F.col("c_name"), F.lit(', "x"\n'), F.col("c_mktsegment")
@@ -7220,8 +7208,6 @@ def orders_sqlite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     database's WHERE clause. The oracle computes the same aggregate
     from the source table, so a lost batch, duplicated shard, or
     mis-pushed predicate all fail the hash."""
-    import tempfile
-
     from ..sources import pydb
 
     pydb.register(spark)
@@ -7294,8 +7280,6 @@ def orders_sqlite_partial_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes both zones from the source predicate, so a
     dropped batch, a double-committed shard, or a quarantine leak all
     fail the hash."""
-    import tempfile
-
     from ..sources import pydb
 
     pydb.register(spark)
@@ -7382,8 +7366,6 @@ def sensors_sqlite_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned sqlite scan and aggregated; one doubled or dropped
     micro-batch changes every count. (test_pydb.py additionally
     replays a commit directly and asserts the no-op.)"""
-    import tempfile
-
     from ..sources import pydb
     from ..sources.pygen import register as register_source
 
@@ -7446,8 +7428,6 @@ def sqlite_catalog_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     zones, the ``_batch_log`` idempotence ledger) are excluded the way
     ``jdbc.list_tables`` excludes ``sysdiagrams`` — discovery lists
     USER tables."""
-    import tempfile
-
     from ..sources import pydb
 
     pydb.register(spark)
@@ -7513,8 +7493,6 @@ def orders_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: split planning is O(files) driver metadata; block decode
     is embarrassingly parallel; a block belongs to exactly one split so
     re-reads are exactly-once without coordination."""
-    import tempfile
-
     from ..sources import pyavro
 
     pyavro.register(spark)
@@ -7948,7 +7926,6 @@ def orders_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the writer's one-file-per-partition layout IS the read
     parallelism; schema is explicit to skip the inference scan."""
     import os
-    import tempfile
 
     d = run_tmpdir("xml_rt_")
     path = os.path.join(d, "orders_xml")
@@ -8858,7 +8835,6 @@ def orders_avro_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits at sync markers; resolution adds only a per-field
     dispatch table built once per task from the two schemas."""
     import json as _json
-    import tempfile
 
     from ..sources import pyavro
 
@@ -9634,7 +9610,6 @@ def orders_format_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: four independent write+read+aggregate pipelines over
     the same slice; each aggregate is map-side combined."""
     import os
-    import tempfile
 
     from ..sources import pyavro, pysink
 
@@ -9912,7 +9887,6 @@ def orders_sqlite_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     live in the Spark checkpoint, so restarts replay exactly."""
     import os
     import sqlite3
-    import tempfile
 
     from ..sources import pydb
 

@@ -48,6 +48,9 @@ from ..operators import dedup as D
 #: SQL twin of ``functions.text.tokens`` over the ``text`` column.
 TOKENS_SQL = "regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\x0B\\f\\r]+')"
 
+#: SQL twin of ``functions.text.fingerprint_md5`` over the ``text`` column.
+FINGERPRINT_SQL = "md5(regexp_replace(lower(trim(text)), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))"
+
 
 def char_fold_sql(s: str) -> str:
     """SQL twin of ``functions.text.char_fold_hash`` over string ``s``."""

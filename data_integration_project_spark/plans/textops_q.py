@@ -276,9 +276,9 @@ def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_fingerprints",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint,
+           {K.FINGERPRINT_SQL} AS fingerprint,
            CAST(length(text) AS BIGINT) AS n_chars
     FROM documents
     """,

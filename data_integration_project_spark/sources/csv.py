@@ -11,8 +11,8 @@ Reference mapping:
   ``_corrupt_record`` column instead of erroring mid-file.
 - S2 ``CSVDiscovery`` (etl/discovery/csv_discovery.py:16-90): glob +
   filename→entity normalization mapping.
-- S3 ``get_latest_extract_dir`` (etl/discovery/csv_discovery.py:92-117):
-  newest extract dir by name sort.
+- S3 ``get_latest_extract_dir`` (etl/discovery/csv_discovery.py:92-117)
+  has no counterpart: the ETL takes its batch directory as an argument.
 
 Ingestion order: the reference consumes rows in file order and its
 dedup is order-dependent (V2). Spark has no implicit row order, so
@@ -133,13 +133,3 @@ def discover_csvs(data_dir: str) -> list[dict]:
         )
     return out
 
-
-def latest_extract_dir(output_dir: str, prefix: str = "extract_") -> str | None:
-    """S3: newest extract partition by name sort (names embed sortable
-    timestamps, reference csv_discovery.py:92-117)."""
-    dirs = [
-        d
-        for d in glob.glob(os.path.join(output_dir, f"{prefix}*"))
-        if os.path.isdir(d)
-    ]
-    return max(dirs) if dirs else None

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.quality import split_validated
 from .envelope import decode_envelope, encode_envelope
 
 
@@ -78,16 +79,6 @@ def _rows(decoded: DataFrame) -> DataFrame:
     return decoded.filter(~F.col("_corrupt")).drop("value", "_corrupt")
 
 
-def _clean_and_error(validated: DataFrame) -> tuple[DataFrame, DataFrame]:
-    clean = validated.filter("_is_valid").drop("_errors", "_is_valid")
-    error = (
-        validated.filter(~F.col("_is_valid"))
-        .withColumn("_errors", F.concat_ws(" | ", "_errors"))
-        .drop("_is_valid")
-    )
-    return clean, error
-
-
 def consume_inbox(
     spark: SparkSession,
     zones: ZonePaths,
@@ -132,7 +123,7 @@ def consume_inbox(
             else:
                 validated = validate(rows).persist()
                 cached.append(validated)
-                sinks = dict(zip(("clean", "error"), _clean_and_error(validated)))
+                sinks = dict(zip(("clean", "error"), split_validated(validated)))
             for zone, df in sinks.items():
                 written = Observation()
                 df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
@@ -198,7 +189,7 @@ def clean_zone_schema(
     nullable, as file writes store it. Derived from the plan over an
     empty inbox; runs no job."""
     empty = spark.range(0).select(F.lit(None).cast("string").alias("value"))
-    clean, _ = _clean_and_error(validate(_rows(decode_envelope(empty, data_schema))))
+    clean, _ = split_validated(validate(_rows(decode_envelope(empty, data_schema))))
     return _nullable(clean.schema)
 
 

@@ -1,4 +1,4 @@
-"""CSV source leg tests (S1-S3): discovery classification, permissive
+"""CSV source leg tests (S1-S2): discovery classification, permissive
 reads with corrupt capture, and ingestion-order line numbers."""
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from data_integration_project_spark.sources.csv import (
     discover_csvs,
     entity_for_filename,
-    latest_extract_dir,
     read_entity_csv,
     with_line_numbers,
 )
@@ -27,7 +26,7 @@ def test_filename_classification():
     assert entity_for_filename("mystery.csv") is None
 
 
-def test_discover_and_latest_dir():
+def test_discover_csvs():
     d = tempfile.mkdtemp()
     for name in ("khachhang.csv", "dathang.csv", "unknown_thing.csv"):
         open(os.path.join(d, name), "w").write("x\n")
@@ -36,10 +35,6 @@ def test_discover_and_latest_dir():
     assert by_file["khachhang.csv"]["entity_type"] == "khach_hang"
     assert by_file["khachhang.csv"]["queue_name"] == "queue_khach_hang"
     assert by_file["unknown_thing.csv"]["entity_type"] is None
-
-    for sub in ("extract_20240101_000000", "extract_20240202_000000", "other"):
-        os.makedirs(os.path.join(d, sub))
-    assert latest_extract_dir(d).endswith("extract_20240202_000000")
 
 
 def test_permissive_read_with_line_numbers(spark):

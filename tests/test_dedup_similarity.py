@@ -390,16 +390,19 @@ def test_kmv_sketch_accuracy_and_exact_regime(spark):
 
 
 def test_hash_sample_stable_under_repartitioning(spark):
-    from data_integration_project_spark.operators.sampling import hash_sample
+    from data_integration_project_spark.operators.sampling import sample_bucket
 
     df = spark.range(10000).select(F.col("id").alias("k"))
-    s1 = {r["k"] for r in hash_sample(df, "k", 100).collect()}
-    s2 = {r["k"] for r in hash_sample(df.repartition(17), "k", 100).collect()}
+
+    def sample(d, rate_permille):
+        return {r["k"] for r in d.filter(sample_bucket(F.col("k")) < rate_permille).collect()}
+
+    s1 = sample(df, 100)
+    s2 = sample(df.repartition(17), 100)
     assert s1 == s2  # membership is a pure function of the key
     assert 0.07 < len(s1) / 10000 < 0.13  # ~10% rate
     # nested rates: a 5% sample is a subset of the 10% sample
-    s05 = {r["k"] for r in hash_sample(df, "k", 50).collect()}
-    assert s05 <= s1
+    assert sample(df, 50) <= s1
 
 
 def test_connected_components_transitive_chain(spark):

@@ -64,18 +64,6 @@ def test_dim_date_leap_year(spark):
     assert rows["2024-02-29"]["date_key"] == 20240229
 
 
-def test_build_fact_null_fk_preserved(spark):
-    base = spark.createDataFrame([(1, 100), (2, 999)], "id int, fk int")
-    dim = spark.createDataFrame([(100, 7)], "nat int, skey int")
-    fact = W.build_fact(
-        base,
-        [(dim, F.col("fk") == F.col("nat"), [F.col("skey")])],
-        [F.col("id"), (F.col("id") * 2).alias("measure")],
-    )
-    got = {r["id"]: r["skey"] for r in fact.collect()}
-    assert got == {1: 7, 2: None}  # missing dim → NULL key, row kept
-
-
 def test_scd2_incremental_prunes_and_matches_full(spark, tmp_path):
     import os
 

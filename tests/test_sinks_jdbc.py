@@ -1,83 +1,11 @@
-"""Sink + JDBC-plan tests: zone round-trip with partition pruning,
-failure-log projection, JDBC option construction (no live RDBMS here —
-execution is exercised only up to plan construction)."""
+"""JDBC-plan tests: option construction (no live RDBMS here — execution
+is exercised only up to plan construction)."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
-from pyspark.sql import functions as F
 
-from data_integration_project_spark.operators.sinks import (
-    IMPORTANT_FIELDS,
-    error_zone_write,
-    failed_data_view,
-    read_zone,
-    zone_write,
-)
 from data_integration_project_spark.sources.jdbc import JdbcSource, read_table
-
-
-@pytest.fixture()
-def zone_root():
-    d = tempfile.mkdtemp(prefix="zone_sink_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def test_zone_roundtrip_and_pruning(spark, zone_root, sf_small):
-    cust = spark.read.parquet(f"{sf_small}/customer.parquet").limit(50)
-    zone_write(cust, zone_root, "clean", entity="khach_hang", source="csv", run_id="r1")
-    zone_write(cust, zone_root, "clean", entity="khach_hang", source="sql", run_id="r1")
-    back = read_zone(spark, zone_root, "clean", entity="khach_hang", source="csv")
-    assert back.count() == 50
-    assert set(back.select("source").distinct().toPandas()["source"]) == {"csv"}
-    # partition pruning: the source filter prunes files, not just rows
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or back.rdd.getNumPartitions() >= 1
-    both = read_zone(spark, zone_root, "clean", entity="khach_hang")
-    assert both.count() == 100
-
-
-def test_failed_data_view(spark, zone_root):
-    err = spark.createDataFrame(
-        [("9", None, "x@", "ho_ten is blank | invalid email")],
-        "customer_id string, ho_ten string, email string, _errors string",
-    )
-    error_zone_write(err, zone_root, entity="khach_hang", source="csv", run_id="r1")
-    back = read_zone(spark, zone_root, "error", entity="khach_hang")
-    view = failed_data_view(back, "khach_hang")
-    row = view.collect()[0]
-    assert row["entity"] == "khach_hang"
-    assert "invalid email" in row["errors"]
-    assert set(IMPORTANT_FIELDS["khach_hang"]) <= set(view.columns) | {"log_time", "entity", "errors"}
-
-
-def test_compact_zone(spark, zone_root, sf_small):
-    from data_integration_project_spark.operators.sinks import compact_zone
-
-    cust = spark.read.parquet(f"{sf_small}/customer.parquet").limit(200)
-    # simulate many micro-batch appends → many small files
-    for _ in range(6):
-        zone_write(
-            cust.repartition(4), zone_root, "clean",
-            entity="khach_hang", source="csv", run_id="r1",
-        )
-    import glob, os
-    part = os.path.join(zone_root, "clean", "entity=khach_hang", "source=csv", "run_id=r1")
-    before = len(glob.glob(os.path.join(part, "*.parquet")))
-    assert before >= 20
-    n_before = spark.read.parquet(part).count()
-
-    rewritten = compact_zone(spark, zone_root, "clean")
-    assert rewritten == {part: before}
-    after = len(glob.glob(os.path.join(part, "*.parquet")))
-    assert after < before and after >= 1
-    assert spark.read.parquet(part).count() == n_before  # no rows lost
-    # second pass: already compact → no-op
-    assert compact_zone(spark, zone_root, "clean") == {}
 
 
 def test_jdbc_plan_construction(spark):
@@ -92,33 +20,3 @@ def test_jdbc_plan_construction(spark):
     # plan builds lazily; executing would need a live server + driver
     with pytest.raises(Exception):
         read_table(spark, src, "khach_hang").count()
-
-
-def test_expire_zone_runs(spark, tmp_path):
-    import os
-
-    from data_integration_project_spark.operators.sinks import (
-        expire_zone_runs,
-        read_zone,
-        zone_write,
-    )
-
-    df = spark.range(5).select(F.col("id").cast("int").alias("v"))
-    root = str(tmp_path)
-    for run in ("20240101_0900", "20240102_0900", "20240103_0900"):
-        zone_write(df, root, "clean", entity="e1", source="csv", run_id=run)
-
-    removed = expire_zone_runs(root, "clean", keep_last=2)
-    assert len(removed) == 1 and "run_id=20240101_0900" in removed[0]
-    left = {
-        r["run_id"]
-        for r in read_zone(spark, root, "clean").select("run_id").distinct().collect()
-    }
-    assert left == {"20240102_0900", "20240103_0900"}
-
-    removed2 = expire_zone_runs(root, "clean", drop_run_ids=["20240103_0900"])
-    assert len(removed2) == 1
-    import pytest
-
-    with pytest.raises(ValueError):
-        expire_zone_runs(root, "clean")

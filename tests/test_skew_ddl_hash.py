@@ -1,4 +1,4 @@
-"""Salted-skew operators, DDL bootstrap, and portable-hash fuzz parity
+"""Salted-skew operators and portable-hash fuzz parity
 (the dedup oracle rests on Spark and DuckDB computing identical
 hashes — fuzz the tricky string space once per suite)."""
 
@@ -12,10 +12,6 @@ from data_integration_project_spark.functions.text import (
     char_fold_hash,
     token_hash_array,
     tokens,
-)
-from data_integration_project_spark.operators.ddl import (
-    bootstrap_run_schema,
-    drop_run_schema,
 )
 from data_integration_project_spark.operators.skew import salted_join, salted_sum
 
@@ -50,19 +46,6 @@ def test_salted_join_matches_plain(spark, sf_small):
     assert salted_join(o, c, "o_custkey", n_salts=4).count() == plain
     # with an explicit intra-key salt column
     assert salted_join(o, c, "o_custkey", n_salts=4, salt_from="o_orderkey").count() == plain
-
-
-def test_ddl_bootstrap_idempotent(spark):
-    db = bootstrap_run_schema(spark, "testrun")
-    try:
-        # listTables also returns session temp views — exclude them
-        tables = {t.name for t in spark.catalog.listTables(db) if not t.isTemporary}
-        assert "khach_hang_csv" in tables and "dat_hang_sql" in tables
-        assert len(tables) == 10  # 5 entities × 2 sources
-        bootstrap_run_schema(spark, "testrun")  # second call: no-op
-        spark.sql(f"SELECT customer_id, _run_id FROM {db}.khach_hang_csv").collect()
-    finally:
-        drop_run_schema(spark, db)
 
 
 #: adversarial corpus: unicode, quotes, regex metachars, whitespace

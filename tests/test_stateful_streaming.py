@@ -1,7 +1,7 @@
 """applyInPandasWithState operators: per-key state must accumulate
 across micro-batches AND across query restarts (checkpointed state
-store), and cross-batch first-wins dedup must mark only true first
-occurrences as new."""
+store), and the streaming sketch states must equal their batch
+sketches under any batching."""
 
 from __future__ import annotations
 
@@ -11,10 +11,6 @@ import tempfile
 
 import pytest
 
-from data_integration_project_spark.streaming.stateful import (
-    running_user_totals,
-    stateful_first_wins,
-)
 
 
 @pytest.fixture()
@@ -48,46 +44,41 @@ def _drain(spark, paths, op):
     q.awaitTermination()
 
 
+def _user_totals(stream):
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from data_integration_project_spark.plans.events_q import _user_totals_state_fn
+
+    return stream.groupBy("user_id").applyInPandasWithState(
+        _user_totals_state_fn,
+        "user_id long, n_events long, total_cents long",
+        "n long, cents long",
+        "update",
+        GroupStateTimeout.NoTimeout,
+    )
+
+
 def test_state_survives_restart(spark, dirs):
+    """events_stateful_user_totals' state function keeps its totals
+    across a query restart on the same checkpoint."""
     with open(os.path.join(dirs["in"], "a.json"), "w") as f:
         f.write('{"user_id": 1, "value": 10.0}\n')
         f.write('{"user_id": 1, "value": 5.0}\n')
         f.write('{"user_id": 2, "value": 1.0}\n')
-    _drain(spark, dirs, running_user_totals)
+    _drain(spark, dirs, _user_totals)
 
     # second file, NEW query run, SAME checkpoint → state must carry over
     with open(os.path.join(dirs["in"], "b.json"), "w") as f:
         f.write('{"user_id": 1, "value": 2.5}\n')
-    _drain(spark, dirs, running_user_totals)
+    _drain(spark, dirs, _user_totals)
 
     out = spark.read.parquet(dirs["out"])
     latest = {
-        r["user_id"]: (r["n_events"], r["total_value"])
+        r["user_id"]: (r["n_events"], r["total_cents"])
         for r in out.orderBy("n_events").collect()  # last write wins per user
     }
-    assert latest[1] == (3, 17.5)  # 2 events from batch A + 1 from batch B
-    assert latest[2] == (1, 1.0)
-
-
-def test_stateful_first_wins_marks_only_first(spark, dirs):
-    with open(os.path.join(dirs["in"], "a.json"), "w") as f:
-        f.write('{"user_id": 1, "value": 1.0}\n')
-        f.write('{"user_id": 1, "value": 1.0}\n')
-
-    def op(stream):
-        keyed = stream.selectExpr("CAST(user_id AS STRING) AS k")
-        return stateful_first_wins(keyed)
-
-    _drain(spark, dirs, op)
-    with open(os.path.join(dirs["in"], "b.json"), "w") as f:
-        f.write('{"user_id": 1, "value": 1.0}\n')
-    _drain(spark, dirs, op)
-
-    rows = sorted(
-        spark.read.parquet(dirs["out"]).collect(), key=lambda r: r["n_occurrences"]
-    )
-    assert rows[0]["is_new"] is True and rows[0]["n_occurrences"] == 2
-    assert rows[-1]["is_new"] is False and rows[-1]["n_occurrences"] == 3
+    assert latest[1] == (3, 1750)  # 2 events from batch A + 1 from batch B
+    assert latest[2] == (1, 100)
 
 
 def test_streaming_kll_state_equals_batch_sketch(spark, dirs):

@@ -11,7 +11,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from data_integration_project_spark.functions.text import tokens
+from data_integration_project_spark.functions.text import fingerprint_md5, tokens
 from data_integration_project_spark.operators import dedup as D
 from data_integration_project_spark.plans import dedup_q
 from data_integration_project_spark.plans import text_kit as K
@@ -190,6 +190,17 @@ def test_tokenizer_twins(spark_tokens, text):
     assert got == spark_tokens[text]
 
 
+@pytest.mark.parametrize(
+    "text", ["a\x0bb  c", "\x0b\x0bvertical\x0btab\x0b", " Two\tWords\n", None]
+)
+def test_fingerprint_twins(spark, text):
+    got = duckdb.execute(
+        f"SELECT {K.FINGERPRINT_SQL} FROM (SELECT ?::VARCHAR AS text)", [text]
+    ).fetchone()[0]
+    df = spark.createDataFrame([(text,)], "text string")
+    assert got == df.select(fingerprint_md5(F.col("text"))).first()[0]
+
+
 _PLANS = pathlib.Path(K.__file__).parent
 
 
@@ -199,6 +210,7 @@ _PLANS = pathlib.Path(K.__file__).parent
         "min((a * shash + b) % 2147483647)",
         "acc * 16 + d",
         "regexp_split_to_array(lower(trim(",
+        "md5(regexp_replace(lower(trim(",
         "HAVING COUNT(*) BETWEEN 2 AND 8",
         "counts_tl AS (",
     ],
