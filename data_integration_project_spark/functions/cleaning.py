@@ -106,7 +106,10 @@ def _meta(df: DataFrame) -> list[Column]:
 
 def transform_khach_hang(df: DataFrame, extract_time: Column | None = None) -> DataFrame:
     """P1 (data_transformer.py:13-45): id-coalesce, name collapse, phone
-    digit-strip, city trim, email lowercase."""
+    digit-strip, city trim, email lowercase. ``extract_time`` defaults
+    to ``current_timestamp()``, the reference's ``now()``; the ETL drain
+    passes the envelope's extract time instead, at most one batch's
+    queue latency earlier."""
     et = extract_time if extract_time is not None else F.current_timestamp()
     return df.select(
         F.coalesce(_opt(df, "id"), _opt(df, "customer_id")).cast("string").alias("customer_id"),
@@ -120,7 +123,7 @@ def transform_khach_hang(df: DataFrame, extract_time: Column | None = None) -> D
 
 
 def transform_loai_mon(df: DataFrame, extract_time: Column | None = None) -> DataFrame:
-    """P3 (data_transformer.py:86-103)."""
+    """P3 (data_transformer.py:86-103). ``extract_time`` as in P2."""
     et = extract_time if extract_time is not None else F.current_timestamp()
     return df.select(
         F.coalesce(_opt(df, "id"), _opt(df, "ma_loai")).cast("string").alias("ma_loai"),
@@ -156,7 +159,9 @@ def transform_mon(df: DataFrame, extract_time: Column | None = None) -> DataFram
 
 
 def transform_nguyen_lieu(df: DataFrame, extract_time: Column | None = None) -> DataFrame:
-    """P2 (data_transformer.py:48-83): numeric casts default 0."""
+    """P2 (data_transformer.py:48-83): numeric casts default 0.
+    ``extract_time`` is the message's (the ETL drain passes the
+    envelope's); ``current_timestamp()`` when none is given."""
     et = extract_time if extract_time is not None else F.current_timestamp()
     return df.select(
         F.coalesce(_opt(df, "id"), _opt(df, "ma_nguyen_lieu")).cast("string").alias("ma_nguyen_lieu"),
@@ -173,7 +178,8 @@ def transform_nguyen_lieu(df: DataFrame, extract_time: Column | None = None) -> 
 
 def transform_dat_hang(df: DataFrame, extract_time: Column | None = None) -> DataFrame:
     """P5 (data_transformer.py:154-185): FK ids as strings, qty int
-    default 0, status trimmed."""
+    default 0, status trimmed. ``extract_time`` as in P1: ``now()`` by
+    default, the envelope's extract time in the ETL drain."""
     et = extract_time if extract_time is not None else F.current_timestamp()
     return df.select(
         F.coalesce(_opt(df, "id"), _opt(df, "ma_don_hang"))

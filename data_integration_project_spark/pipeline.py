@@ -185,12 +185,20 @@ def _transform_validate_dedup(entity: str, df: DataFrame) -> DataFrame:
     the RAW layout (price string parseability, the category NAME) BEFORE
     the transform; their _-prefixed verdict columns survive the
     transform's metadata passthrough. Every other entity validates the
-    canonical post-transform layout."""
+    canonical post-transform layout.
+
+    Every entity's ``extract_time`` is the envelope's: the time the
+    producer extracted the row. The reference takes P2/P3's from the
+    message too, but stamps P1/P5 with ``now()`` at transform time, which
+    is later by at most one batch's queue latency. A per-batch clock
+    value would also be inlined into each batch's generated code and
+    recompiled every batch."""
     rules = _entity_rules(df.sparkSession, entity)
+    et = F.col("_extract_time")
     if rules.entity == "mon_csv":
-        validated = transform_entity(entity, rules.validate(df))
+        validated = transform_entity(entity, rules.validate(df), extract_time=et)
     else:
-        validated = rules.validate(transform_entity(entity, df))
+        validated = rules.validate(transform_entity(entity, df, extract_time=et))
     keys = DEDUP_KEYS.get(entity)
     if keys:
         validated = reject_duplicates(
@@ -297,6 +305,7 @@ _HISTORY_SCHEMA = T.StructType(
         T.StructField("ingested", T.LongType()),
         T.StructField("clean", T.LongType()),
         T.StructField("error", T.LongType()),
+        T.StructField("recorded_at", T.TimestampType()),
     ]
 )
 
@@ -317,18 +326,19 @@ def record_run_history(spark: SparkSession, out_root: str, run: PipelineRun) -> 
                     counts.get("clean", 0),
                     counts.get("error", 0),
                 ),
-            )
+            ),
+            F.current_timestamp(),
         )
         for entity, counts in sorted(run.zone_counts.items())
     ]
     if not rows:
         return
     # literal rows, not createDataFrame: a local Python list becomes a
-    # Python RDD, and writing it starts Python workers
-    df = (
-        spark.range(1, numPartitions=1)
-        .select(F.inline(F.array(*rows).cast(T.ArrayType(_HISTORY_SCHEMA))))
-        .withColumn("recorded_at", F.current_timestamp())
+    # Python RDD, and writing it starts Python workers. recorded_at is in
+    # the rows: the array folds to one literal that generated code holds
+    # by reference, where a timestamp column would be inlined per run
+    df = spark.range(1, numPartitions=1).select(
+        F.inline(F.array(*rows).cast(T.ArrayType(_HISTORY_SCHEMA)))
     )
     df.write.mode("append").partitionBy("run_id").parquet(
         os.path.join(out_root, "run_history")

@@ -123,11 +123,11 @@ def _blank_or(col: str, pred: str) -> str:
 # precomputed SQL fragments (python 3.11 f-string expressions cannot
 # contain backslashes — regex-bearing predicates are built out-of-line)
 _SQL_NAME_FIXED = (
-    "trim(regexp_replace(nullif(trim(regexp_replace(ho_ten, '\\s+', ' ', 'g')), ''),"
+    "trim(regexp_replace(nullif(trim(regexp_replace(ho_ten, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ''),"
     " '[*#!?.~_-]+$', ''))"
 )
 _SQL_CITY_FIXED = (
-    "nullif(trim(regexp_replace(nullif(trim(thanh_pho), ''), '\\s+', ' ', 'g')), '')"
+    "nullif(trim(regexp_replace(nullif(trim(thanh_pho), ''), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), '')"
 )
 _OK_IDN = "regexp_matches(customer_id, '^[0-9]+$')"
 _OK_IDCAN = (
@@ -335,8 +335,8 @@ _MON_ORACLE = f"""
               AND coalesce(TRY_CAST(m.gia AS DOUBLE), 0.0) <= 10000000) AS price_ok
       FROM mon_csv m
       LEFT JOIN loai_mon d
-        ON regexp_replace(lower(trim(regexp_replace(m.loai, '[_-]', ' ', 'g'))), '\\s+', ' ', 'g')
-         = regexp_replace(lower(trim(regexp_replace(d.ten_loai, '[_-]', ' ', 'g'))), '\\s+', ' ', 'g')),
+        ON regexp_replace(lower(trim(regexp_replace(m.loai, '[_-]', ' ', 'g'))), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')
+         = regexp_replace(lower(trim(regexp_replace(d.ten_loai, '[_-]', ' ', 'g'))), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')),
     sql_tr AS (
       SELECT trim(ten_mon) AS ten_mon, CAST(loai_id AS INT) AS loai_id,
              coalesce(TRY_CAST(gia AS DOUBLE), 0.0) AS gia,
@@ -414,11 +414,11 @@ _MON_CSV_QUALITY_ORACLE = f"""
     fixed AS (
       SELECT line_no,
              trim(id) AS id,
-             nullif(trim(regexp_replace(ten_san_pham, '\\s+', ' ', 'g')), '')
+             nullif(trim(regexp_replace(ten_san_pham, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), '')
                AS ten_san_pham,
              gia,
              nullif(trim(regexp_replace(
-               regexp_replace(lower(loai), '[_-]', ' ', 'g'), '\\s+', ' ', 'g')), '')
+               regexp_replace(lower(loai), '[_-]', ' ', 'g'), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), '')
                AS loai
       FROM raw),
     checked AS (
@@ -700,7 +700,7 @@ _NL_CORRUPT_LINE_NO = len(_NL_DIRTY) + 1
 
 _SQL_NL_NAME = (
     "nullif(trim(regexp_replace(nullif(trim(ten_nguyen_lieu), ''),"
-    " '\\s+', ' ', 'g')), '')"
+    " '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), '')"
 )
 _OK_NL_NCH = "regexp_matches(ten_nguyen_lieu, '^[\\p{L}0-9 ]+$')"
 _SQL_UNITS = ", ".join(f"'{u}'" for u in UNITS)

@@ -22,7 +22,10 @@ from .text_kit import char_fold_sql
 # Deterministic dirt injection (both engines must express this identically)
 # ---------------------------------------------------------------------------
 
-_DIRTY_SQL_CTE = """
+#: DuckDB twin of ``customer_ruleset``'s ``c_name`` fix
+_SQL_C_NAME_FIXED = "trim(regexp_replace(c_name, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))"
+
+_DIRTY_SQL_CTE = f"""
     WITH dirty AS (
       SELECT
         c_custkey,
@@ -39,7 +42,7 @@ _DIRTY_SQL_CTE = """
     fixed AS (
       SELECT
         c_custkey,
-        trim(regexp_replace(c_name, '\\s+', ' ', 'g')) AS c_name,
+        {_SQL_C_NAME_FIXED} AS c_name,
         c_acctbal,
         c_mktsegment,
         lower(trim(email)) AS email,
@@ -50,8 +53,8 @@ _DIRTY_SQL_CTE = """
       SELECT *,
         (c_acctbal BETWEEN -1000 AND 10000) AS ok_acctbal,
         (c_mktsegment IN ('AUTOMOBILE','FURNITURE','MACHINERY','BUILDING','HOUSEHOLD')) AS ok_segment,
-        regexp_matches(email, '^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}$') AS ok_email,
-        regexp_matches(sdt, '^[0-9]{9,11}$') AS ok_phone,
+        regexp_matches(email, '^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}$') AS ok_email,
+        regexp_matches(sdt, '^[0-9]{{9,11}}$') AS ok_phone,
         (c_name IS NOT NULL AND trim(c_name) <> '') AS ok_name
       FROM fixed
     )

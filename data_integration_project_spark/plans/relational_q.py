@@ -13,6 +13,8 @@ standard at some (n, p).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -7460,6 +7462,13 @@ def sqlite_catalog_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     return names.groupBy("table_name").agg(F.count(F.lit(1)).alias("n_found"))
 
 
+def fs_size(path: str) -> int:
+    """Bytes in the file at ``path``. The catalog's sf dirs and its run
+    temp dirs are local paths; a path on another Hadoop filesystem would
+    need that filesystem's status call instead."""
+    return os.path.getsize(path)
+
+
 @query(
     "orders_avro_roundtrip",
     oracle=f"""
@@ -7497,19 +7506,10 @@ def orders_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pyavro.register(spark)
     d = run_tmpdir("pyavro_")
-    # Round-9 (guide §2.6): was repartition(2) — two tasks did ALL the
-    # per-record Python Avro encoding while the rest of the session sat
-    # idle (write leg 4.7 s cold / 1.2 s warm at sf0.1). Round-10: a
-    # flat defaultParallelism width overshot the other way at small
-    # inputs (32 Python writer tasks for a 21k-row slice — task/worker
-    # startup dominated). Derive the width from the SOURCE size —
-    # ~1 MB of orders parquet per writer task, clamped to
-    # [2, defaultParallelism] — so the encode stage still fans out with
-    # the data (at sf1.0+ it saturates every core) without paying 32
-    # startups for kilobytes.
-    import os as _os
-
-    src_bytes = _os.path.getsize(_os.path.join(sf_dir, "orders.parquet"))
+    # one writer task per ~1 MB of orders parquet, clamped to [2,
+    # defaultParallelism]: the per-record Python encode fans out with the
+    # data without starting a Python writer per core for kilobytes
+    src_bytes = fs_size(os.path.join(sf_dir, "orders.parquet"))
     n_writers = min(
         spark.sparkContext.defaultParallelism,
         max(2, src_bytes // (1024 * 1024)),
@@ -7536,11 +7536,7 @@ def orders_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs at every scale, while the split count tracks the data rather
     # than a fixed size (a fixed 4 KB gave ~160 Python tasks for a
     # 21k-row read).
-    sizes = [
-        _os.path.getsize(_os.path.join(d, n))
-        for n in _os.listdir(d)
-        if n.endswith(".avro")
-    ]
+    sizes = [fs_size(os.path.join(d, n)) for n in os.listdir(d) if n.endswith(".avro")]
     split_size = max(1024, min(sizes, default=4096) // 2)
     back = (
         spark.read.format("pyavro")

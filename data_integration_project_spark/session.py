@@ -15,7 +15,10 @@ import logging
 import os
 
 from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
+
+from . import cds
 
 _log = logging.getLogger(__name__)
 
@@ -49,9 +52,9 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-#: Generated-class cache size (static, see :func:`get_spark`). 200 already
-#: held warm ETL batches at their 22 never-repeating compilations over 20
-#: batches; 500 leaves room for other queries' classes between batches.
+#: Generated-class cache size (static, see :func:`get_spark`). An ETL
+#: batch needs ~146 classes; 500 leaves room for other queries' classes
+#: between batches.
 CODEGEN_CACHE_ENTRIES = 500
 
 
@@ -60,23 +63,42 @@ def default_parallelism() -> int:
 
 
 def get_spark(app_name: str = "data_integration_project_spark") -> SparkSession:
-    """Build (or fetch) the session with engine defaults applied."""
+    """Build (or fetch) the session with engine defaults applied.
+
+    A driver JVM started here maps the class-data archive for its heap,
+    or writes one when it exits (:mod:`.cds`); ``cds.STATUS`` records
+    which, and why no archive was mapped."""
     cpus = default_parallelism()
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # static. An ETL batch compiles ~146 classes and the next batch asks
         # for them in the same order: the default 100-entry LRU evicted each
         # before its reuse, and every warm batch recompiled ~130 of them
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # FileContext renames of local checkpoint files spawn a readlink
+        # each when Hadoop has no native library; FileSystem renames do not
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        java_opts = cds.java_options(heap)
+        if java_opts:
+            # not extraJavaOptions: spark-submit's --driver-java-options
+            # (perfbench passes it) replaces that conf
+            builder = builder.config("spark.driver.defaultJavaOptions", java_opts)
     spark = builder.getOrCreate()
+    cds.settle(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

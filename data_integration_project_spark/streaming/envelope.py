@@ -14,6 +14,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+#: The text ``to_json`` writes for a timestamp (the JSON writer's
+#: default ``timestampFormat``), as a ``date_format`` pattern.
+JSON_TIMESTAMP_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSXXX"
+
 #: Lineage metadata carried by every message (reference
 #: STEP2_RAW_CONSUMER.py:154,171-174 flattens exactly these).
 METADATA_SCHEMA = T.StructType(
@@ -63,7 +67,10 @@ def encode_envelope(
         F.struct(*[F.col(c) for c in data_cols]).alias("data"),
         F.struct(
             F.lit(None).cast("string").alias("origin"),
-            F.current_timestamp().alias("extract_time"),
+            # the string to_json writes for a timestamp: it folds to a
+            # string literal, which generated code holds by reference, so
+            # the batch's classes do not change with the clock
+            F.date_format(F.current_timestamp(), JSON_TIMESTAMP_FORMAT).alias("extract_time"),
             F.lit(run_id).alias("run_id"),
             line_no.cast("long").alias("line_no"),
         ).alias("metadata"),

@@ -348,3 +348,57 @@ def test_every_rule_name_has_a_test(spark):
             assert (entity, fx.column) in tested_fix_cols, (entity, fx.name)
         for rel in rs.relationals:
             assert (entity, rel.name) in rel_tested, (entity, rel.name)
+
+
+# ---------------------------------------------------------------------------
+# Whitespace twins: the DuckDB oracles collapse what Java's \s matches
+# ---------------------------------------------------------------------------
+
+_VT = "\x0b"  # in Java's \s, not in RE2's
+
+
+def _duck_column(expr: str, col: str, values: list[str]) -> list:
+    import duckdb
+
+    rows = ", ".join(f"({i}, '{v}')" for i, v in enumerate(values))
+    sql = f"SELECT {expr} FROM (VALUES {rows}) t(i, {col}) ORDER BY i"
+    return [r[0] for r in duckdb.connect().execute(sql).fetchall()]
+
+
+def _spark_column(spark, fixed, col: str, values: list[str]) -> list:
+    df = spark.createDataFrame(list(enumerate(values)), f"i int, {col} string")
+    return [r[col] for r in fixed(df).orderBy("i").collect()]
+
+
+def _fixed(transform, rules):
+    """The column after the entity transform and its RuleSet's fixes
+    (``i`` rides through as lineage)."""
+    return lambda df: rules().apply_fixes(transform(df.withColumnRenamed("i", "_i"))).withColumnRenamed("_i", "i")
+
+
+def _whitespace_twins():
+    from data_integration_project_spark.functions.cleaning import (
+        transform_khach_hang,
+        transform_nguyen_lieu,
+    )
+    from data_integration_project_spark.operators.canonical import sql_city_canonical_case
+    from data_integration_project_spark.plans import entities_q as E
+    from data_integration_project_spark.plans import quality_q as Q
+
+    kh = _fixed(transform_khach_hang, ER.khach_hang_rules)
+    return {
+        "ho_ten": (E._SQL_TITLE.format(x=E._SQL_NAME_FIXED), kh,
+                   [f"An{_VT}Nguyen", f" Binh {_VT} Tran", f"{_VT}Chi Le*{_VT}"]),
+        "thanh_pho": (sql_city_canonical_case(E._SQL_CITY_FIXED), kh,
+                      [f"Ha{_VT}Noi", f"Ho Chi{_VT}Minh", f"Hue{_VT}"]),
+        "ten_nguyen_lieu": (E._SQL_NL_NAME, _fixed(transform_nguyen_lieu, ER.nguyen_lieu_rules),
+                            [f"Bot{_VT}mi", f"{_VT}Sua  tuoi{_VT}{_VT}"]),
+        "c_name": (Q._SQL_C_NAME_FIXED, lambda df: Q.customer_ruleset().apply_fixes(df.withColumns({"email": F.lit(""), "sdt": F.lit("")})),
+                   [f"Customer{_VT}#000000001", f"  Customer {_VT}#2 "]),
+    }
+
+
+@pytest.mark.parametrize("col", ["ho_ten", "thanh_pho", "ten_nguyen_lieu", "c_name"])
+def test_oracle_whitespace_matches_java(spark, col):
+    sql, fixed, values = _whitespace_twins()[col]
+    assert _duck_column(sql, col, values) == _spark_column(spark, fixed, col, values)

@@ -23,6 +23,7 @@ from data_integration_project_spark.pipeline import (
     run_full_pipeline,
 )
 from data_integration_project_spark.session import CODEGEN_CACHE_ENTRIES
+from data_integration_project_spark.streaming.envelope import JSON_TIMESTAMP_FORMAT
 
 _CSVS = {
     "khachhang.csv": [
@@ -95,7 +96,11 @@ def _assert_zones_match_disk(spark, run):
 # first in this file: the first pipeline run of the file compiles cold
 def test_second_run_reuses_generated_classes(spark, pipeline_dirs):
     """A second batch in one session finds the first batch's generated
-    classes in Spark's codegen cache instead of compiling them again."""
+    classes in Spark's codegen cache instead of compiling them again.
+    No clock value is inlined into a batch's generated code (the
+    envelope's extract time, the transforms' extract_time and the
+    history's recorded_at are held by reference), so none is left to
+    compile."""
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
     root, data = pipeline_dirs
     compiled = []
@@ -104,6 +109,26 @@ def test_second_run_reuses_generated_classes(spark, pipeline_dirs):
         run_full_pipeline(spark, data, os.path.join(root, "out"), run_id=run_id)
         compiled.append(_compilations(spark) - before)
     assert compiled[1] * 3 <= compiled[0], compiled
+    assert compiled[1] <= 2, compiled
+
+
+def test_clean_rows_keep_the_envelope_extract_time(spark, pipeline_dirs):
+    """Every entity's clean-zone extract_time is the one its envelope
+    carried in the inbox, matched by line number."""
+    root, data = pipeline_dirs
+    run = run_full_pipeline(spark, data, os.path.join(root, "out"), run_id="et")
+    for entity in run.zone_counts:
+        inbox = spark.read.text(os.path.join(run.zones.inbox, entity)).select(
+            F.get_json_object("value", "$.metadata.line_no").cast("long").alias("_line_no"),
+            F.get_json_object("value", "$.metadata.extract_time").alias("sent"),
+        )
+        clean = spark.read.parquet(os.path.join(run.zones.clean, entity)).select(
+            "_line_no",
+            F.date_format("extract_time", JSON_TIMESTAMP_FORMAT).alias("landed"),
+        )
+        rows = clean.join(inbox, "_line_no", "left").collect()
+        assert rows, entity
+        assert all(r["sent"] is not None and r["landed"] == r["sent"] for r in rows), (entity, rows)
 
 
 def test_run_full_pipeline(spark, pipeline_dirs):
