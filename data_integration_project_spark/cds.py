@@ -52,7 +52,10 @@ _UNSAFE_PATH = re.compile(r"[\s,:=\"']")
 
 # JVM stdout keeps every warning except the archive's; the archive's go
 # to the file named after "file="
-_XLOG = "-Xlog:all=warning,cds*=off:stdout:uptime,level,tags -Xlog:cds=info,cds+dynamic=info:file={}::filecount=0"
+_XLOG = (
+    "-Xlog:all=warning,cds*=off:stdout:uptime,level,tags"
+    " -Xlog:cds=info,cds+dynamic=info:file={}::filecount=0"
+)
 
 #: Set by :func:`java_options` for :func:`settle`: (mode, token, dir).
 _pending: tuple[str, str, str] | None = None
@@ -267,7 +270,9 @@ def settle(spark) -> None:
         pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
         with open(os.path.join(d, f"dump-{token}.pid"), "w") as f:
             f.write(str(pid))
-        _log.info("class-data archive not mapped (%s); writing %s", STATUS["reason"], STATUS["archive"])
+        _log.info(
+            "class-data archive not mapped (%s); writing %s", STATUS["reason"], STATUS["archive"]
+        )
         return
     log_path = os.path.join(d, f"map-{token}.log")
     try:

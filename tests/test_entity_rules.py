@@ -371,9 +371,13 @@ def _spark_column(spark, fixed, col: str, values: list[str]) -> list:
 
 
 def _fixed(transform, rules):
-    """The column after the entity transform and its RuleSet's fixes
+    """The frame after the entity transform and its RuleSet's fixes
     (``i`` rides through as lineage)."""
-    return lambda df: rules().apply_fixes(transform(df.withColumnRenamed("i", "_i"))).withColumnRenamed("_i", "i")
+    def fixed(df):
+        out = rules().apply_fixes(transform(df.withColumnRenamed("i", "_i")))
+        return out.withColumnRenamed("_i", "i")
+
+    return fixed
 
 
 def _whitespace_twins():
@@ -393,7 +397,10 @@ def _whitespace_twins():
                       [f"Ha{_VT}Noi", f"Ho Chi{_VT}Minh", f"Hue{_VT}"]),
         "ten_nguyen_lieu": (E._SQL_NL_NAME, _fixed(transform_nguyen_lieu, ER.nguyen_lieu_rules),
                             [f"Bot{_VT}mi", f"{_VT}Sua  tuoi{_VT}{_VT}"]),
-        "c_name": (Q._SQL_C_NAME_FIXED, lambda df: Q.customer_ruleset().apply_fixes(df.withColumns({"email": F.lit(""), "sdt": F.lit("")})),
+        # the customer fixes also touch email and sdt
+        "c_name": (Q._SQL_C_NAME_FIXED,
+                   lambda df: Q.customer_ruleset().apply_fixes(
+                       df.withColumns({"email": F.lit(""), "sdt": F.lit("")})),
                    [f"Customer{_VT}#000000001", f"  Customer {_VT}#2 "]),
     }
 
